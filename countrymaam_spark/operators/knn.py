@@ -14,10 +14,10 @@ Two paths, mirroring the reference's index zoo:
   (/root/reference/index/bsp_tree_index.go:35-92). Ring radius escalates
   per query until the k-th candidate distance is provably smaller than any
   point outside the ring (branch-and-bound: the ring boundary is the
-  frontier priority, /root/reference/index/bsp_tree_index.go:75-85), so the
-  result is EXACT while touching only candidate cells. A candidate budget
-  (``search_k``) can relax the guarantee into the reference's
-  recall-vs-effort knob (/root/reference/countrymaam.go:40-45).
+  frontier priority, reference index/bsp_tree_index.go:75-85), so the
+  result is EXACT while touching only candidate cells. It has no candidate
+  budget: the reference's recall-vs-effort knob (countrymaam.go:40-45) is
+  ``index_build.knn_tree(search_k=)``.
 
 Scale notes (100 TB corpus):
 - EVERY corpus probe is a hash equi-join — never a per-pair predicate scan:
@@ -45,30 +45,10 @@ from countrymaam_spark.functions import geo
 from countrymaam_spark.operators.adaptive import gate_broadcast
 from countrymaam_spark.operators.topk import topk_per_group
 
-# fan-in skew gate (cell_knn pruned serving): minimum expected pairs in the
-# hottest fine cell before the round-robin spread of the pruned subset pays
-# for its shuffle (~seconds of single-task haversine kernel time), and the
-# concentration criterion (spread when the hot cell's share of the pairs
-# exceeds FACTOR/parallelism — i.e. one task would do FACTOR x its fair
-# share). Module constants so tests can pin the regime switch, like
-# BROADCAST_STRUCT_LIMIT. Note the relative test is unsatisfiable at
-# parallelism <= FACTOR — correct: with 4 cores a straggler costs at most
-# the 4x it already has.
-FANIN_SPREAD_MIN_PAIRS = 2_000_000
-FANIN_SPREAD_FACTOR = 4
-# Un-pruned serving paths (stats state but no partition_parent_res — the
-# knn_join / knn_cell_index shape) probe the corpus under the same
-# clustered-file layout, so the same hot-cell straggler exists (measured at
-# sf1/mod=500: ONE task held the 417k-row metro cell and the probe ran 81 s
-# of a 95 s call; spread: ~50 s probe). There the estimate is a STANDALONE
-# driver job (no prune collect to merge with), so it only runs when the
-# cheap per-call upper bound (per-s-group query counts x that level's max
-# cell count, summed) clears this multiple of the spread floor — skipping
-# can only miss hot tasks bounded by that many pairs (a few seconds of
-# single-task kernel work, where the spread shuffle does not pay anyway —
-# measured at sf0.1/mod=500: spread 5.6 s vs unspread 4.4-5.2 s), while
-# sf0.1-scale batches never pay the estimate job at all.
-FANIN_PROBE_UB_FACTOR = 16
+# cell_knn escalation: the smallest starting ring radius (fine cells) and
+# the number of ring rounds before the exact flat fallback takes the rest
+INIT_RADIUS = 1
+MAX_ROUNDS = 4
 
 
 def _widen(narrow: DataFrame) -> DataFrame:
@@ -176,13 +156,13 @@ def build_cell_stats(pages_geo: DataFrame, res: int, cell_col: str | None = None
     STATISTICS STATE (cell, cnt).
 
     The Spark analog of the reference's subtree sizes
-    (/root/reference/bsp_tree/bsp_tree.go:22-60): node ranges ARE counts, and
-    they are built once at index-build time, not per query. Build this with
-    the index, persist it next to the encoded corpus, and pass it to
-    ``cell_knn(stats=...)`` — serving then never re-aggregates the corpus.
-    At 10^12 rows the per-batch corpus ``groupBy(cell)`` this replaces is a
-    full-table shuffle per query batch; the stats table is ~|cells| rows and
-    updates incrementally with appends (add per-cell deltas).
+    (reference bsp_tree/bsp_tree.go:22-60): node ranges ARE counts, and
+    they are built once at index-build time, not per query. The index
+    persists only their multi-level rollup (:func:`build_cell_lut`, whose
+    ``lv == res`` slice is this table); the plain table still serves
+    ``cell_knn(stats=...)`` and :func:`cell_density` directly. At 10^12 rows
+    the per-batch corpus ``groupBy(cell)`` either replaces is a full-table
+    shuffle per query batch.
     """
     cell = F.col(cell_col) if cell_col else geo.encode_cell(
         F.col("lat"), F.col("lon"), res
@@ -318,9 +298,9 @@ def _plan_radius(
         counts = None
         lut = stats
     elif stats is not None:
-        # prebuilt statistics state (build_cell_stats): already a persisted
-        # ~|cells|-row table — the rollup branches below re-scan it cheaply,
-        # and serving never touches the corpus for planning
+        # plain per-cell counts (build_cell_stats): a ~|cells|-row table —
+        # the rollup below re-scans it cheaply, and serving never touches
+        # the corpus for planning
         counts = stats
     else:
         # materialize the base per-cell counts ONCE: every rollup below
@@ -396,117 +376,11 @@ def _plan_radius(
     )
 
 
-def _fanin_level_counts(cell_stats, res: int, s: int, cnt_cache: dict):
-    """Per-cell counts at planning level ``res - s``, shared across rounds.
-
-    With the multi-level lut state the level's counts ALREADY EXIST as the
-    ``lv == res - s`` slice (``build_cell_lut`` rolls them up from the same
-    fine counts — identical sums), so no per-round ``groupBy`` re-rollup runs
-    at all for the levels the planner uses. Only a coarser-than-lut level (or
-    a plain stats table) still rolls up from fine counts, and that plan is
-    built once per serve call (``cnt_cache``), not once per round (the r5
-    regression: the rollup is static per (stats, lv) but was re-planned and
-    re-run inside the round loop)."""
-    if s in cnt_cache:
-        return cnt_cache[s]
-    has_lv = "lv" in cell_stats.columns
-    lv = res - s
-    if s == 0:
-        tbl = (
-            cell_stats.filter(F.col("lv") == res) if has_lv else cell_stats
-        ).select("cell", "cnt")
-    elif has_lv and lv in _plan_levels(res):
-        tbl = cell_stats.filter(F.col("lv") == lv).select("cell", "cnt")
-    else:
-        fine = (
-            cell_stats.filter(F.col("lv") == res) if has_lv else cell_stats
-        ).select("cell", "cnt")
-        tbl = fine.groupBy(
-            geo.cell_parent(F.col("cell"), lv, res).alias("cell")
-        ).agg(F.sum("cnt").alias("cnt"))
-    cnt_cache[s] = tbl
-    return tbl
-
-
-def _fanin_pairs_df(
-    qcells, is_band, s_expr, s_groups, cell_stats, res, cnt_cache=None
-):
-    """Estimated (max-per-cell, total) candidate pairs for one cell_knn round.
-
-    The ring probe streams the corpus under a broadcast query side, so each
-    scan task's work is (its corpus rows) x (queries whose rings cover them)
-    — and the directory layout CLUSTERS a dense cell's rows into one file. A
-    metro-concentrated batch then serializes nearly the whole join on the
-    task holding the hot cell (measured at sf0.1: 500 metro queries, one
-    fine cell with 42k rows -> 20M of the pairs in ONE task, 71 s of a 75 s
-    call; round-robin spreading: 6-7 s). This estimates per-cell pairs from
-    the round's ring plan x the per-cell counts already in the caller's
-    stats state — tiny query-side jobs over an O(|cells|)-row table, never
-    a corpus scan. Coarse (s>0) groups are estimated against counts rolled
-    up to their planning level, which can only OVERstate single-task
-    concentration (a coarse cell spans several fine files) — conservative
-    in the safe direction, and the absolute min-pairs floor keeps a tiny
-    batch from paying the spread shuffle.
-
-    The per-cell query-count side is bounded by the round's estimated ring
-    cells (``est_cells``, already in hand from the round-plan collect), so it
-    rides the shared broadcast gate — the stats table is probed in place
-    instead of shuffling into a join (one exchange + one AQE stage sync
-    fewer per estimate).
-
-    Returns a Row(mx, tot) or None when no ring group is estimable.
-    """
-    if cnt_cache is None:
-        cnt_cache = {}
-    ests = []
-    for s, est in s_groups:
-        lv = res - s
-        cnt_tbl = _fanin_level_counts(cell_stats, res, s, cnt_cache)
-        shift = 1 << s
-        qc = geo.encode_cell(F.col("qlat"), F.col("qlon"), lv)
-        rcx = F.ceil(F.col("rx") / F.lit(shift)).cast("long")
-        rcy = F.ceil(F.col("ry") / F.lit(shift)).cast("long")
-        nq = (
-            qcells.filter(~is_band)
-            .withColumn("s", s_expr)
-            .filter(F.col("s") == s)
-            .select(F.explode(geo.ring_cells_xy(qc, lv, rcx, rcy)).alias("cell"))
-            .groupBy("cell")
-            .agg(F.count("*").alias("nq"))
-        )
-        ests.append(
-            gate_broadcast(nq, est)
-            .join(cnt_tbl, "cell")
-            .select((F.col("nq") * F.col("cnt")).alias("pairs"))
-        )
-    if not ests:
-        return None
-    u = ests[0]
-    for e in ests[1:]:
-        u = u.unionByName(e)
-    return u.agg(F.max("pairs").alias("mx"), F.sum("pairs").alias("tot"))
-
-
-def _fanin_pairs(
-    qcells, is_band, s_expr, s_groups, cell_stats, res, cnt_cache=None
-):
-    """``_fanin_pairs_df`` materialized: Row(mx, tot) or None (kept as the
-    standalone entry point; cell_knn folds the DF into the round's single
-    planning collect instead)."""
-    df = _fanin_pairs_df(
-        qcells, is_band, s_expr, s_groups, cell_stats, res, cnt_cache
-    )
-    return None if df is None else df.first()
-
-
 def cell_knn(
     pages_geo: DataFrame,
     queries: DataFrame,
     k: int = 10,
     res: int = 7,
-    init_radius: int = 1,
-    max_rounds: int = 4,
-    search_k: int | None = None,
     timings: dict | None = None,
     cell_col: str | None = None,
     stats: DataFrame | None = None,
@@ -515,21 +389,20 @@ def cell_knn(
     """Exact kNN via cell-ring candidate generation + re-rank.
 
     Driver-side escalation: each round triples the ring radius for queries
-    whose top-k is not yet provably complete; after ``max_rounds`` the
+    whose top-k is not yet provably complete; after ``MAX_ROUNDS`` the
     stragglers (pole-adjacent or ultra-sparse regions) fall back to
-    ``flat_knn`` — correctness never depends on the index.
-
-    If ``search_k`` is given, a query is also accepted once it has seen
-    >= search_k candidates (the reference's budget semantics: approximate,
-    recall monotone in search_k).
+    ``flat_knn`` — correctness never depends on the index. There is no
+    candidate budget; ``index_build.knn_tree`` is the budgeted path.
 
     Index-state serving (the production shape): pass ``cell_col`` naming a
     column of ``pages_geo`` already encoded at ``res`` (the persisted,
-    cell-bucketed corpus table) and ``stats`` from :func:`build_cell_stats`
-    — serving then performs NO per-batch corpus encode and NO per-batch
-    corpus aggregation; only the probe equi-joins touch the corpus. Both are
-    opt-in and explicit because a stray ``cell`` column encoded at a
-    different resolution would silently corrupt candidate generation.
+    cell-bucketed corpus table) and ``stats``, the planning lut from
+    :func:`build_cell_lut` that ``load_cell_state`` returns (a plain
+    :func:`build_cell_stats` table also works) — serving then performs NO
+    per-batch corpus encode and NO per-batch corpus aggregation; only the
+    probe equi-joins touch the corpus. Both are opt-in and explicit because
+    a stray ``cell`` column encoded at a different resolution would silently
+    corrupt candidate generation.
     Results are bit-identical to the stateless path (pytest-pinned).
 
     ``partition_parent_res``: when the persisted corpus is
@@ -566,23 +439,18 @@ def cell_knn(
             .select("url", "lat", "lon")
             .withColumn("cell", geo.encode_cell(F.col("lat"), F.col("lon"), res))
         )
-    target = spark.sparkContext.defaultParallelism
-    if narrow.rdd.getNumPartitions() < max(2, target // 2):
-        # under-partitioned snapshot (small/compacted input): widen so the
-        # probe joins, sorts, and windows parallelize, and pin — each round
-        # then reads materialized blocks. localCheckpoint, not .cache(): the
-        # pin is per-CALL state, and caches stay in executor storage until
-        # an explicit unpersist (which a lazily returned plan can never
-        # safely issue) — repeated serving calls in a long-lived session
-        # would accumulate dead corpus copies; checkpoint blocks are
-        # released by the ContextCleaner on GC.
-        pages_cells = narrow.repartition(target).localCheckpoint(eager=True)
-    else:
-        # production-scale scan: serve straight from the (cell-bucketed)
-        # persisted table. Pinning 10^12 rows to executor storage is the
-        # real at-scale failure this gate prevents; per-round re-scans hit
-        # the table with pruned columns instead.
-        pages_cells = narrow
+    pages_cells = _widen(narrow)
+    if pages_cells is not narrow:
+        # widened (small/compacted input): pin, so each round reads
+        # materialized blocks. localCheckpoint, not .cache(): the pin is
+        # per-CALL state, and caches stay in executor storage until an
+        # explicit unpersist (which a lazily returned plan can never safely
+        # issue) — repeated serving calls in a long-lived session would
+        # accumulate dead corpus copies; checkpoint blocks are released by
+        # the ContextCleaner on GC. A production-scale scan is never pinned:
+        # per-round re-scans hit the (cell-bucketed) persisted table with
+        # pruned columns instead of pinning 10^12 rows to executor storage.
+        pages_cells = pages_cells.localCheckpoint(eager=True)
 
     prune_src = None
     if partition_parent_res is not None:
@@ -605,7 +473,7 @@ def cell_knn(
     _t = _time.time()
     remaining = (
         _plan_radius(remaining, pages_cells, res, k, stats=stats)
-        .withColumn("ry", F.greatest(F.col("ry"), F.lit(init_radius).cast("long")))
+        .withColumn("ry", F.greatest(F.col("ry"), F.lit(INIT_RADIUS).cast("long")))
         # tiny table (one row per query); pin it so each round starts from
         # materialized rows instead of re-running the stats joins
         .localCheckpoint(eager=True)
@@ -613,48 +481,7 @@ def cell_knn(
     n_total = n_remaining = remaining.count()
     _mark("plan_radius", _t)
     settled_parts: list[DataFrame] = []
-    # per-CALL fan-in state: level-count plans shared across rounds, and the
-    # lazily-computed (max fine cnt, total cnt) short-circuit bound — one
-    # tiny job at most per serve call, only on rounds past the first
-    fanin_cnt_cache: dict[int, DataFrame] = {}
-    fanin_bound: list = [None]
-
-    def _fanin_pairs_ub(s_groups, s_nq) -> int:
-        """Sound upper bound on the round's hottest-cell pair count:
-        sum over ring groups of (that group's query count x the max cell
-        count at its estimation level). Level maxima come from ONE tiny agg
-        over the stats state, run at most once per serve call (lut: per-lv
-        maxima + the corpus total; plain stats: the fine max, coarser
-        levels widened by 4^s and capped by the total). mx <= max_g(nq_g x
-        level_max_g) <= this sum, so skipping on it is sound."""
-        if fanin_bound[0] is None:
-            if "lv" in stats.columns:
-                rows_b = (
-                    stats.groupBy("lv")
-                    .agg(F.max("cnt").alias("m"), F.sum("cnt").alias("t"))
-                    .collect()
-                )
-                lv_max = {int(r["lv"]): int(r["m"] or 0) for r in rows_b}
-                total = max(
-                    (int(r["t"] or 0) for r in rows_b), default=0
-                )
-            else:
-                _b = stats.agg(
-                    F.max("cnt").alias("m"), F.sum("cnt").alias("t")
-                ).first()
-                lv_max = {res: int(_b["m"] or 0)}
-                total = int(_b["t"] or 0)
-            fanin_bound[0] = (lv_max, total)
-        lv_max, total = fanin_bound[0]
-        fine_max = lv_max.get(res, total)
-        ub = 0
-        for s, _ in s_groups:
-            lv = res - s
-            level_max = lv_max.get(lv, min(total, fine_max * (4 ** s)))
-            ub += s_nq.get(s, 0) * level_max
-        return ub
-
-    for rnd in range(max_rounds):
+    for rnd in range(MAX_ROUNDS):
         if n_remaining == 0:
             break
         # straggler cutoff: once <=1% of queries (or <=32) remain, the exact
@@ -700,7 +527,6 @@ def cell_knn(
             .withColumn("s", shift_col)
             .groupBy("_band", "s")
             .agg(
-                F.count("*").alias("nq"),
                 F.sum(
                     F.when(
                         F.col("_band"),
@@ -720,7 +546,6 @@ def cell_knn(
         s_groups = [
             (int(r["s"]), int(r["est_cells"] or 0)) for r in plan_rows if not r["_band"]
         ]
-        s_nq = {int(r["s"]): int(r["nq"]) for r in plan_rows if not r["_band"]}
         parts = []
         if s_groups:
             # rings enumerate cells and equi-join the corpus (hash probe —
@@ -764,54 +589,9 @@ def cell_knn(
                     )
                     .distinct()
                 )
-                # fan-in skew gate (see _fanin_pairs_df for the measured
-                # straggler regime it exists for). Hoisted OUT of the
-                # prune-engaged branch: a hot-cell batch whose cover
-                # exceeds half the parent grid (prune skipped) still
-                # serializes the join on the task holding the hot fine
-                # cell, and the estimate never scans the corpus either
-                # way. `stats` is the CALLER's persisted cell-count state
-                # (the parameter, not the per-round result stats — those
-                # are `round_stats` below).
-                fan_df = None
-                if stats is not None:
-                    skip_est = False
-                    if rnd > 0:
-                        # short-circuit (rounds past the first): when the
-                        # round's query count x the hottest cell count cannot
-                        # clear the absolute floor, the gate provably cannot
-                        # fire — skip the estimate.
-                        skip_est = (
-                            _fanin_pairs_ub(s_groups, s_nq)
-                            <= FANIN_SPREAD_MIN_PAIRS
-                        )
-                    if not skip_est:
-                        fan_df = _fanin_pairs_df(
-                            qcells, is_band, s_expr, s_groups, stats, res,
-                            fanin_cnt_cache,
-                        )
-                # ONE bounded collect plans both the directory prune and the
-                # fan-in gate: the cover rows (<= the parent GRID, the
-                # directory count, O(10^2..10^4) by layout contract) union
-                # the 1-row fan-in aggregate — each extra collect here is a
-                # driver-synchronized job (the orchestration constant the
-                # round loop's docstring bounds).
-                merged = cover.select(
-                    F.lit(0).alias("_kind"), F.col("p"),
-                    F.lit(None).cast("long").alias("mx"),
-                    F.lit(None).cast("long").alias("tot"),
-                )
-                if fan_df is not None:
-                    merged = merged.unionByName(
-                        fan_df.select(
-                            F.lit(1).alias("_kind"),
-                            F.lit(None).cast("long").alias("p"),
-                            "mx", "tot",
-                        )
-                    )
-                rows = merged.collect()
-                probed = [r["p"] for r in rows if r["_kind"] == 0]
-                fan = next((r for r in rows if r["_kind"] == 1), None)
+                # bounded collect: the cover rows are <= the parent GRID,
+                # the directory count, O(10^2..10^4) by layout contract
+                probed = [r["p"] for r in cover.collect()]
                 _mark("round_prune_plan", _t)
                 if timings is not None:
                     timings[f"prune_parents_round{rnd}"] = len(probed)
@@ -821,42 +601,6 @@ def cell_knn(
                     ).select(
                         "url", "lat", "lon", F.col(cell_col).alias("cell")
                     )
-            elif stats is not None:
-                # UN-pruned stats serving (knn_join / knn_cell_index shape):
-                # the same clustered-file hot-cell straggler exists (sf1,
-                # mod=500: 81 s of a 95 s call in ONE task holding the
-                # 417k-row metro cell) but there is no prune collect to
-                # merge the estimate into — it is a standalone driver job,
-                # so it only runs when the cheap per-call upper bound clears
-                # FANIN_PROBE_UB_FACTOR x the spread floor. Skipping can
-                # only miss hot tasks bounded by that many pairs (~seconds
-                # of single-task work); small batches never pay the job.
-                _t = _time.time()
-                fan = None
-                if (
-                    _fanin_pairs_ub(s_groups, s_nq)
-                    > FANIN_PROBE_UB_FACTOR * FANIN_SPREAD_MIN_PAIRS
-                ):
-                    fan = _fanin_pairs(
-                        qcells, is_band, s_expr, s_groups, stats, res,
-                        fanin_cnt_cache,
-                    )
-                _mark("round_fanin_plan", _t)
-            else:
-                fan = None
-            # relative test: one cell's pairs defeat the parallelism;
-            # absolute floor: a tiny batch always looks "concentrated",
-            # so require the hot task's work to be material (~seconds of
-            # single-task kernel time) before paying the spread shuffle
-            if (
-                fan is not None
-                and fan["mx"] is not None
-                and fan["mx"] * target > FANIN_SPREAD_FACTOR * fan["tot"]
-                and fan["mx"] > FANIN_SPREAD_MIN_PAIRS
-            ):
-                if timings is not None:
-                    timings[f"fanin_spread_round{rnd}"] = int(fan["mx"])
-                corpus_ring = corpus_ring.repartition(target)
             ring_q = qcells.filter(~is_band).withColumn("s", s_expr)
             for s, est_cells in s_groups:
                 lv = res - s
@@ -958,14 +702,12 @@ def cell_knn(
             F.col("kth")
             < _ring_guarantee_km(F.col("rx"), F.col("ry"), res, F.col("qlat"), nx)
         )
-        # NOTE: distinct name from the `stats` parameter (the caller's
-        # persisted cell-count state) — the fan-in gate above reads the
-        # parameter inside the round loop, so shadowing it here would make
-        # rounds >= 1 select the wrong columns (AnalysisException mid-serve).
         # The settle-check columns (qlat, rx, ry) join back from the
         # checkpointed per-query `remaining` table (n_remaining rows, gated
         # broadcast) instead of being F.first-carried through the 10^7-row
-        # window above.
+        # window above. round_stats is a tiny groupBy over the checkpointed
+        # `ranked`: recomputing it inside its two consumers below is cheaper
+        # than an extra eager checkpoint job.
         round_stats = ranked.groupBy("query_id").agg(
             F.count("*").alias("cnt"),
             F.max("dist_km").alias("kth"),
@@ -975,24 +717,8 @@ def cell_knn(
             ),
             "query_id",
         )
-        if search_k is not None:
-            # budget semantics: accept once >= search_k candidates have been
-            # SEEN (pre-top-k count — `cnt` above is capped at k). Each round's
-            # ring is a superset of the previous one (ry/rx only grow; the band
-            # switch keeps ry and covers all longitudes), so this round's
-            # candidate count IS the cumulative distinct candidates seen.
-            seen = cands.groupBy("query_id").agg(F.count("*").alias("cnt_seen"))
-            round_stats = round_stats.join(seen, "query_id", "left")
-            ok_pred = ok_pred | (F.coalesce(F.col("cnt_seen"), F.lit(0)) >= search_k)
         _t = _time.time()
         round_stats = round_stats.withColumn("ok", ok_pred)
-        if search_k is not None:
-            # with a budget, round_stats depends on `seen` (derived from the
-            # full candidate join) — pin it so the two ok_q consumers below
-            # don't re-run that join. In the exact path it is a tiny groupBy
-            # over the already-checkpointed `ranked`; recomputing it inside
-            # the consumers is cheaper than an extra eager checkpoint job.
-            round_stats = round_stats.localCheckpoint(eager=True)
         n_ok = round_stats.filter("ok").count()
         _mark("round_settle_check", _t)
         if n_ok:

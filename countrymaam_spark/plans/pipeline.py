@@ -479,15 +479,18 @@ def build_cell_pipeline(
     partition_parent_res: int | None = None,
 ) -> dict:
     """Save/Load for the cell (quad-grid) kNN index: the encoded corpus and
-    its per-cell count statistics persist as Manifest stages, so serving
+    its multi-level planning lut (``build_cell_lut`` over the per-cell
+    counts) persist as Manifest stages, so serving
     (``cell_knn(cell_col=..., stats=...)`` via ``load_cell_state``) performs
-    NO per-batch corpus encode and NO per-batch corpus aggregation. The
-    stats table is the Spark analog of the reference's subtree sizes
-    (/root/reference/bsp_tree/bsp_tree.go:22-60) — build-time state, not
-    query-time work; at 10^12 rows the corpus ``groupBy(cell)`` this removes
-    from serving is a full-table shuffle per query batch. Appends update the
-    stats incrementally (per-cell count deltas), the same contract as the
-    tree pipeline's per-(parent,salt) rebuilds.
+    NO per-batch corpus encode and NO per-batch corpus aggregation. The lut
+    is the Spark analog of the reference's subtree sizes (reference
+    bsp_tree/bsp_tree.go:22-60) — build-time state, not query-time work; at
+    10^12 rows the corpus ``groupBy(cell)`` it removes from serving is a
+    full-table shuffle per query batch. Its ``lv == res`` slice is the
+    per-cell count table, so that table is not persisted separately. Appends
+    update the lut incrementally (``update_cell_lut``: per-(lv, cell) count
+    deltas), the same contract as the tree pipeline's per-(parent,salt)
+    rebuilds.
 
     ``partition_parent_res`` directory-partitions the corpus snapshot on the
     PARENT cell at that (coarser) resolution — the Iceberg partition-spec
@@ -508,7 +511,7 @@ def build_cell_pipeline(
         if partition_parent_res > res:
             raise ValueError("partition_parent_res must be <= res")
         # part of the shared invalidation key: changing the layout rebuilds
-        # corpus, stats, and lut together (never a mixed snapshot)
+        # corpus and lut together (never a mixed snapshot)
         params["partition_parent_res"] = partition_parent_res
     from countrymaam_spark.functions import geo
 
@@ -536,13 +539,6 @@ def build_cell_pipeline(
         params=params,
         partition_by=["parent"] if partition_parent_res is not None else None,
     )
-    stats_df, skipped_s = run_stage(
-        spark,
-        manifest,
-        "cell_stats",
-        lambda: knn.build_cell_stats(cells_df, res, cell_col="cell"),
-        params=params,
-    )
     # the fully-prebuilt multi-level planning lut (<= 5x|cells| rows): with
     # it, radius planning is one equi-join against state — no per-batch
     # rollup stages at all (measured ~1-2 s of fixed cost per warm batch)
@@ -550,27 +546,25 @@ def build_cell_pipeline(
         spark,
         manifest,
         "cell_lut",
-        lambda: knn.build_cell_lut(stats_df, res),
+        lambda: knn.build_cell_lut(
+            knn.build_cell_stats(cells_df, res, cell_col="cell"), res
+        ),
         params=params,
     )
     return {
         "cell_corpus": {"rows": cells_df.count(), "skipped": skipped_c},
         "cell_lut": {"rows": lut_df.count(), "skipped": skipped_l},
-        "cell_stats": {"rows": stats_df.count(), "skipped": skipped_s},
     }
 
 
 def load_cell_state(spark: SparkSession, out_dir: str):
-    """-> (encoded corpus DataFrame, planning-state DataFrame) for
-    ``cell_knn(cell_col="cell", stats=...)``. Prefers the multi-level lut
-    snapshot (planning = one equi-join, no rollup) and falls back to the
-    per-cell stats table for dirs written before the lut stage existed."""
-    cells = spark.read.parquet(os.path.join(out_dir, "cell_corpus"))
-    lut_path = os.path.join(out_dir, "cell_lut")
-    if os.path.exists(lut_path):
-        return cells, spark.read.parquet(lut_path)
-    stats = spark.read.parquet(os.path.join(out_dir, "cell_stats"))
-    return cells, stats
+    """-> (encoded corpus DataFrame, planning lut DataFrame) for
+    ``cell_knn(cell_col="cell", stats=...)``: planning is one equi-join
+    against the lut, no rollup."""
+    return (
+        spark.read.parquet(os.path.join(out_dir, "cell_corpus")),
+        spark.read.parquet(os.path.join(out_dir, "cell_lut")),
+    )
 
 
 def _cents_array(cents_df: DataFrame):

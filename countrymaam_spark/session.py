@@ -8,9 +8,10 @@ caller (tests use a small count; bench uses the core count).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import SparkSession
+
+MASTER = "local[*]"
+DRIVER_MEMORY = "8g"
 
 
 def get_spark(
@@ -19,12 +20,9 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    master = master or os.environ.get("SPARK_GRAFT_MASTER", "local[*]")
-    mem = (extra_conf or {}).get(
-        "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g")
-    )
+    mem = (extra_conf or {}).get("spark.driver.memory", DRIVER_MEMORY)
     builder = (
-        SparkSession.builder.master(master)
+        SparkSession.builder.master(master or MASTER)
         .appName(app_name)
         # commit + pre-fault the whole heap at JVM start (untimed session
         # setup) instead of lazily inside the first large sort/aggregation:
@@ -33,14 +31,8 @@ def get_spark(
         # and G1 growing the heap mid-query showed up as multi-second
         # first-run inflation of the big window stages (knn_cell_metro
         # 13-15 s -> 6-7 s with this on). -Xms pins the committed size;
-        # AlwaysPreTouch faults the pages eagerly. SPARK_GRAFT_PRETOUCH=0
-        # opts out (A/B knob; a multi-tenant cluster may prefer lazy commit).
-        .config(
-            "spark.driver.defaultJavaOptions",
-            f"-Xms{mem}" + (" -XX:+AlwaysPreTouch" if os.environ.get("SPARK_GRAFT_PRETOUCH", "1") == "1" else "")
-            if os.environ.get("SPARK_GRAFT_XMS", "1") == "1"
-            else "",
-        )
+        # AlwaysPreTouch faults the pages eagerly.
+        .config("spark.driver.defaultJavaOptions", f"-Xms{mem} -XX:+AlwaysPreTouch")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
@@ -50,7 +42,7 @@ def get_spark(
         # blobs) write 3-4x slower and churn native RSS (jstack-verified)
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", mem)
         .config("spark.ui.enabled", "false")
     )
     if shuffle_partitions is not None:

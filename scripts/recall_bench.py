@@ -25,7 +25,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from countrymaam_spark.operators import ann, index_build  # noqa: E402
 from countrymaam_spark.operators import graph as G  # noqa: E402
 from countrymaam_spark.operators.geotag import extract_geo  # noqa: E402
-from countrymaam_spark.operators.knn import cell_knn, flat_knn, reverse_knn  # noqa: E402
+from countrymaam_spark.operators.knn import flat_knn, reverse_knn  # noqa: E402
 from countrymaam_spark.session import get_spark  # noqa: E402
 from countrymaam_spark.sources import pages as PG  # noqa: E402
 
@@ -107,15 +107,10 @@ def main() -> None:
     md += t
     assert last == 1.0, "full-budget tree row must be exact"
 
-    cell_rows = [
-        (f"search_k={sk}", lambda sk=sk: (
-            cell_knn(geo, q_geo, k=10, res=7, search_k=sk), "url"))
-        for sk in (10, 50, 200)
-    ] + [("exact (no budget)", lambda: (cell_knn(geo, q_geo, k=10, res=7), "url"))]
-    t, last = sweep("cell_knn (budget: search_k candidates/query)",
-                    exact_geo, n_q, cell_rows)
-    md += t
-    assert last == 1.0, "unbudgeted cell_knn must be exact"
+    md += [
+        "`cell_knn` is exact and has no budget; `knn_tree` is the budgeted geo path.",
+        "",
+    ]
 
     # ---- embedding families: IVF / LSH / graph vs brute oracle ------------
     emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet")).localCheckpoint(

@@ -43,9 +43,9 @@ def _sum_neighbor_dist(arr, rows):
     )
 
 
-def _load_vec_csv():
+def _load_vec_csv(path):
     vals = []
-    with open("/root/reference/graph/vec.csv") as f:
+    with open(path) as f:
         for line in f:
             vals.extend(float(t) for t in line.strip().split(",") if t)
     return np.array(vals, dtype=np.float64).reshape(-1, 128)
@@ -68,12 +68,13 @@ def test_nndescent_golden_32(spark):
     assert abs(ss - GOLDEN_32) <= 0.01 * GOLDEN_32
 
 
-def test_nndescent_golden_200x128(spark):
-    """Reference golden corpus (graph/vec.csv, k=10 rho=0.8). We hold the
-    build to a STRICTER bar than the reference: within 1% of the exact kNN
-    graph sum (the reference's converged golden 9159.141 is ~10% above exact
-    because of its sampled convergence; ours lands at ~1.0005x exact)."""
-    arr = _load_vec_csv()
+def test_nndescent_golden_200x128(spark, vec_csv_200):
+    """The reference golden's setting (a 200x128 corpus shaped like its
+    graph/vec.csv, k=10 rho=0.8). We hold the build to a STRICTER bar than
+    the reference: within 1% of the exact kNN graph sum (the reference's
+    converged golden 9159.141 is ~10% above exact because of its sampled
+    convergence)."""
+    arr = _load_vec_csv(vec_csv_200)
     assert arr.shape == (200, 128)
     vecs = _vec_df(spark, arr)
     rows = G.nn_descent(vecs, k=10, rho=0.8, max_iter=12, seed=42).collect()
@@ -114,8 +115,8 @@ def test_to_undirected_symmetric(spark):
 
 
 @pytest.fixture(scope="module")
-def graph_200(spark):
-    arr = _load_vec_csv()
+def graph_200(spark, vec_csv_200):
+    arr = _load_vec_csv(vec_csv_200)
     vecs = _vec_df(spark, arr).cache()
     edges = spark.createDataFrame(
         G.nn_descent(vecs, k=10, rho=0.8, max_iter=12, seed=42).collect()
@@ -310,15 +311,15 @@ def test_hash_positions_buckets_scale_and_stay_permutation(spark):
     assert widths <= 6 * (100_000 // 4096 + 1)
 
 
-def test_nn_descent_append_converges_like_rebuild(spark):
+def test_nn_descent_append_converges_like_rebuild(spark, vec_csv_200):
     """Incremental vertex insertion (warm-start NN-Descent): build on the
-    first 160 reference vectors, append the last 40, and the UPDATED graph
+    first 160 vectors of the 200x128 corpus, append the last 40, and the UPDATED graph
     must meet the same quality bar as a from-scratch build over all 200 —
     within 2% of the exact kNN-graph sum (the from-scratch bar is 1%;
     reference golden tolerance is ±1% around a value ~10% above exact), with
     exactly k unique neighbors per node for ALL 200 nodes and the new nodes
     reachable as neighbors of old nodes (reverse-list linking)."""
-    arr = _load_vec_csv()
+    arr = _load_vec_csv(vec_csv_200)
     vecs = _vec_df(spark, arr).cache()
     old_vecs = vecs.filter(F.col("vec_id") < 160)
     new_ids = vecs.filter(F.col("vec_id") >= 160).select("vec_id")
@@ -353,14 +354,14 @@ def test_nn_descent_append_converges_like_rebuild(spark):
     assert got == exact_q
 
 
-def test_graph_append_pipeline_refreshes_snapshot(spark, tmp_path):
+def test_graph_append_pipeline_refreshes_snapshot(spark, vec_csv_200, tmp_path):
     """append_graph_pipeline: warm-start from the persisted snapshot, the
     snapshot is replaced in place, the manifest entry is refreshed (rows +
     content hash), and a subsequent build re-run RESUMES the appended graph
     instead of rebuilding (the Iceberg append-snapshot analog)."""
     from countrymaam_spark.plans import pipeline as PL
 
-    arr = _load_vec_csv()
+    arr = _load_vec_csv(vec_csv_200)
     vecs = _vec_df(spark, arr).cache()
     old_vecs = vecs.filter(F.col("vec_id") < 160)
     out = str(tmp_path / "gappend")

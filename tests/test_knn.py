@@ -57,7 +57,7 @@ def test_cell_knn_equals_flat(spark, geo_small, queries_small):
 
 def test_cell_knn_other_res_and_k(spark, geo_small, queries_small):
     flat = _key(flat_knn(geo_small, queries_small, k=3).collect())
-    cell = _key(cell_knn(geo_small, queries_small, k=3, res=8, init_radius=1).collect())
+    cell = _key(cell_knn(geo_small, queries_small, k=3, res=8).collect())
     assert cell == flat
 
 
@@ -86,19 +86,6 @@ def test_cell_knn_zero_candidate_round_not_dropped(spark):
     assert {r[0] for r in cell} == {0, 1}
 
 
-def test_cell_knn_search_k_budget_counts_candidates_seen(spark):
-    """search_k semantics: with search_k > k the budget must NOT degenerate to
-    `cnt >= k` — a query is accepted only once >= search_k candidates were
-    SEEN. With search_k >= corpus size the result must therefore be exact
-    (reference invariant 3: budget >= corpus implies exact)."""
-    pts = [(f"u{i}", 10.0 + (i % 25) * 0.4, 10.0 + (i // 25) * 0.4) for i in range(100)]
-    corpus = spark.createDataFrame(pts, "url string, lat double, lon double")
-    q = spark.createDataFrame([(0, 12.0, 12.0)], "query_id long, lat double, lon double")
-    flat = _key(flat_knn(corpus, q, k=5).collect())
-    budget = _key(cell_knn(corpus, q, k=5, res=7, search_k=100).collect())
-    assert budget == flat
-
-
 def test_flat_knn_plan_shape(spark, geo_small, queries_small):
     """Physical-plan regression: the corpus pass must be a broadcast of the
     QUERY side (never an exchange of the pages scan) and the top-k must use
@@ -114,27 +101,29 @@ def test_flat_knn_plan_shape(spark, geo_small, queries_small):
 
 
 def test_cell_knn_prebuilt_state_bit_equal(spark, geo_small, queries_small, tmp_path):
-    """Index-state serving (pre-encoded corpus + persisted stats) must return
+    """Index-state serving (pre-encoded corpus + persisted lut) must return
     bit-identical results to the stateless path, and the pipeline must skip
     both stages on resume (same params -> intact snapshots)."""
+    from countrymaam_spark.operators.knn import build_cell_stats
     from countrymaam_spark.plans import pipeline as P
 
     stateless = _key(cell_knn(geo_small, queries_small, k=10, res=6).collect())
 
     out = str(tmp_path / "cellidx")
     rep = P.build_cell_pipeline(spark, geo_small, out, res=6)
-    assert not rep["cell_corpus"]["skipped"] and not rep["cell_stats"]["skipped"]
+    assert not rep["cell_corpus"]["skipped"] and not rep["cell_lut"]["skipped"]
+    # the lut is the only planning state the pipeline persists
+    assert sorted(d for d in os.listdir(out) if d.startswith("cell_")) == [
+        "cell_corpus", "cell_lut"
+    ]
     cells, state = P.load_cell_state(spark, out)
-    # the pipeline now persists the multi-level lut; the loader returns it
     assert "lv" in state.columns
     stateful = _key(
         cell_knn(cells, queries_small, k=10, res=6, cell_col="cell", stats=state).collect()
     )
     assert stateful == stateless
     # serving from the flat per-cell stats table must also be bit-identical
-    import os as _os
-
-    flat_stats = spark.read.parquet(_os.path.join(out, "cell_stats"))
+    flat_stats = build_cell_stats(cells, 6, cell_col="cell")
     assert _key(
         cell_knn(
             cells, queries_small, k=10, res=6, cell_col="cell", stats=flat_stats
@@ -143,17 +132,17 @@ def test_cell_knn_prebuilt_state_bit_equal(spark, geo_small, queries_small, tmp_
 
     # resume: intact snapshots + unchanged params -> both stages skip
     rep2 = P.build_cell_pipeline(spark, geo_small, out, res=6)
-    assert rep2["cell_corpus"]["skipped"] and rep2["cell_stats"]["skipped"]
+    assert rep2["cell_corpus"]["skipped"] and rep2["cell_lut"]["skipped"]
     # param change invalidates BOTH stages together (shared key)
     rep3 = P.build_cell_pipeline(spark, geo_small, out, res=7)
-    assert not rep3["cell_corpus"]["skipped"] and not rep3["cell_stats"]["skipped"]
+    assert not rep3["cell_corpus"]["skipped"] and not rep3["cell_lut"]["skipped"]
 
 
 def test_cell_pipeline_partitioned_layout(spark, geo_small, queries_small, tmp_path):
     """The parent-partitioned corpus snapshot (Iceberg partition-spec analog)
     must (a) serve bit-identically to the unpartitioned layout, (b) prune
     directories at plan time for a parent filter (PartitionFilters in the
-    scan), and (c) share the invalidation key with stats/lut so a layout
+    scan), and (c) share the invalidation key with the lut so a layout
     change can never resume a mixed snapshot."""
     import os as _os
 
@@ -208,16 +197,15 @@ def test_cell_pipeline_partitioned_layout(spark, geo_small, queries_small, tmp_p
     assert n_pruned == n_plain > 0
 
     # layout is part of the shared params key: changing it rebuilds ALL
-    # stages together (corpus, stats, lut can never resume out of sync)
+    # stages together (corpus and lut can never resume out of sync)
     rep2 = P.build_cell_pipeline(
         spark, geo_small, part, res=6, partition_parent_res=3
     )
-    assert rep2["cell_corpus"]["skipped"] and rep2["cell_stats"]["skipped"]
+    assert rep2["cell_corpus"]["skipped"] and rep2["cell_lut"]["skipped"]
     rep3 = P.build_cell_pipeline(
         spark, geo_small, part, res=6, partition_parent_res=4
     )
     assert not rep3["cell_corpus"]["skipped"]
-    assert not rep3["cell_stats"]["skipped"]
     assert not rep3["cell_lut"]["skipped"]
 
 
@@ -282,153 +270,106 @@ def test_cell_knn_parent_prune_bit_equal(spark, geo_small, queries_small, tmp_pa
         cell_knn(geo_small, queries_small, k=5, res=6, partition_parent_res=3)
 
 
-def test_cell_knn_fanin_spread_bit_equal(spark, tmp_path):
-    """A metro-concentrated batch over the parent-partitioned layout must
-    trip the fan-in skew gate (the directory layout clusters a dense cell's
-    rows into one file; the ring join would otherwise serialize ~all pairs
-    on the task holding it — measured 71 s of a 75 s call at sf0.1) and stay
-    bit-identical to the flat oracle. A lone scattered query must NOT trip
-    it (max cell share ~ uniform)."""
-    from countrymaam_spark.functions import geo as G
-    from countrymaam_spark.operators.knn import flat_knn
+def test_cell_knn_clustered_corpus_bit_equal(spark, tmp_path):
+    """Hot-cell serving: the directory layout clusters a dense cell's rows
+    into one file. A metro-concentrated batch over that cell and a lone
+    scattered query must match the flat oracle bit-for-bit, on lut serving
+    both with and without the parent-directory prune."""
     from countrymaam_spark.plans import pipeline as P
 
-    # deterministic clustered corpus: 1500 points inside ~one res-6 cell
-    # (cell width at res 6 is ~2.8 deg) + 300 scattered world-wide
-    n_dense, n_sparse = 1500, 300
+    # 1500 points inside ~one res-6 cell near (40, -74) (cell width at res 6
+    # is ~2.8 deg) + 300 scattered world-wide
     rows = [
         (
             f"https://dense.example/{i}",
             40.0 + (i * 37 % 1000) / 1000.0,
             -74.0 + (i * 61 % 1000) / 1000.0,
         )
-        for i in range(n_dense)
+        for i in range(1500)
     ] + [
         (
             f"https://sparse.example/{i}",
             -80.0 + (i * 997 % 16000) / 100.0,
             -179.0 + (i * 773 % 35800) / 100.0,
         )
-        for i in range(n_sparse)
+        for i in range(300)
     ]
     corpus = spark.createDataFrame(rows, "url string, lat double, lon double")
-    out = str(tmp_path / "fanin_part")
+    out = str(tmp_path / "clustered")
     P.build_cell_pipeline(spark, corpus, out, res=6, partition_parent_res=3)
-    cells, state = P.load_cell_state(spark, out)
-
+    cells, lut = P.load_cell_state(spark, out)
     metro_q = spark.createDataFrame(
         [(i, 40.4 + i / 100.0, -73.6 - i / 100.0) for i in range(20)],
         "query_id long, lat double, lon double",
     )
-    want = _key(flat_knn(corpus, metro_q, k=10).collect())
-    from countrymaam_spark.operators import knn as knn_mod
-
-    # pin the regime switch (like the gate_broadcast tests): the fixture's
-    # ~30k hot-cell pairs are below the production floor by design, and the
-    # relative share test is unsatisfiable at the test session's small
-    # parallelism (by design — see the constants' docstring)
-    old_floor = knn_mod.FANIN_SPREAD_MIN_PAIRS
-    old_factor = knn_mod.FANIN_SPREAD_FACTOR
-    knn_mod.FANIN_SPREAD_MIN_PAIRS = 0
-    knn_mod.FANIN_SPREAD_FACTOR = 0
-    try:
-        t: dict = {}
-        got = _key(
-            cell_knn(
-                cells, metro_q, k=10, res=6, cell_col="cell", stats=state,
-                partition_parent_res=3, timings=t,
-            ).collect()
-        )
-    finally:
-        knn_mod.FANIN_SPREAD_MIN_PAIRS = old_floor
-        knn_mod.FANIN_SPREAD_FACTOR = old_factor
-    assert got == want
-    spreads = [k_ for k_ in t if k_.startswith("fanin_spread_round")]
-    assert spreads, f"fan-in gate never engaged: {sorted(t)}"
-    # the estimate is exact for the dominant cell: ~20 queries x ~n_dense
-    assert t[spreads[0]] >= 10 * n_dense
-
-    # a single scattered query: prune may engage, the spread must not
     lone_q = spark.createDataFrame(
         [(0, -20.0, 100.0)], "query_id long, lat double, lon double"
     )
-    want_l = _key(flat_knn(corpus, lone_q, k=10).collect())
-    tl: dict = {}
-    got_l = _key(
-        cell_knn(
-            cells, lone_q, k=10, res=6, cell_col="cell", stats=state,
-            partition_parent_res=3, timings=tl,
-        ).collect()
-    )
-    assert got_l == want_l
-    assert not any(k_.startswith("fanin_spread") for k_ in tl)
+    for q in (metro_q, lone_q):
+        want = _key(flat_knn(corpus, q, k=10).collect())
+        for prune in (3, None):
+            got = _key(
+                cell_knn(
+                    cells, q, k=10, res=6, cell_col="cell", stats=lut,
+                    partition_parent_res=prune,
+                ).collect()
+            )
+            assert got == want, f"partition_parent_res={prune}"
 
 
-def test_fanin_pairs_round1_shape_and_coarse_groups(spark):
-    """Regression for the caller-stats shadowing bug: the fan-in gate runs
-    inside the round loop reading the CALLER's cell-count state, which a
-    round-local `stats` rebind used to shadow — rounds >= 1 would have
-    selected missing `cell`/`lv` columns and crashed mid-serve. The gate
-    body now lives in `_fanin_pairs`; feed it the round-1 input shape
-    directly (rx != ry, multiple s-groups — the shape current round-0
-    planning never emits, so no end-to-end call can cover it) against both
-    stats layouts (fine-only and the multi-level lut with `lv`)."""
-    from countrymaam_spark.functions import geo as G
-    from countrymaam_spark.operators.knn import (
-        _fanin_pairs,
-        build_cell_lut,
-        build_cell_stats,
-    )
+def test_cell_knn_escalation_under_prune_bit_equal(spark, tmp_path, monkeypatch):
+    """Escalation past round 0 on pruned lut serving. 40 high-latitude
+    queries over a sparse corpus plan coarse rings whose longitude bound
+    collapses, so more than 32 stay unsettled after round 0 and the
+    straggler cutoff lets round 1 run (on the latitude bands those rings
+    escalate to, which read the unpruned corpus). Results must match the
+    flat oracle bit-for-bit, and round 1 must actually settle queries: with
+    one round the exact fallback receives every round-0 straggler, with the
+    default rounds it receives fewer."""
+    from countrymaam_spark.operators import knn as knn_mod
+    from countrymaam_spark.plans import pipeline as P
 
-    res = 6
-    # corpus: 200 points inside ONE res-6 cell (cell width ~2.8 deg; the
-    # cluster spans 0.1 x 0.2 deg well inside the cell at (40, -74)) + 50
-    # scattered
     rows = [
-        (f"https://d.example/{i}", 40.0 + (i % 10) / 100.0, -74.0 + (i // 10) / 100.0)
-        for i in range(200)
-    ] + [
-        (f"https://s.example/{i}", -60.0 + i, -170.0 + 6.0 * i) for i in range(50)
+        (
+            f"https://north.example/{i}",
+            60.0 + (i * 37 % 1000) / 100.0,
+            (i * 61 % 4000) / 100.0,
+        )
+        for i in range(400)
     ]
     corpus = spark.createDataFrame(rows, "url string, lat double, lon double")
-    fine = build_cell_stats(corpus, res)
-    lut = build_cell_lut(fine, res)
+    out = str(tmp_path / "north")
+    P.build_cell_pipeline(spark, corpus, out, res=6, partition_parent_res=3)
+    cells, lut = P.load_cell_state(spark, out)
+    q = spark.createDataFrame(
+        [(i, 62.0 + (i * 7 % 60) / 10.0, 2.0 + (i * 13 % 300) * 0.12) for i in range(40)],
+        "query_id long, lat double, lon double",
+    )
+    want = _key(flat_knn(corpus, q, k=10).collect())
 
-    # round-1-shaped query table: the dense-cell query has rx != ry (the
-    # post-escalation / init_radius shape) and a coarse group (s=1); the
-    # second query is a fine (s=0) group elsewhere
-    qrows = [(1, 40.05, -73.9, 4, 8), (2, -60.0, -170.0, 0, 0)]
-    qcells = spark.createDataFrame(
-        qrows, "query_id long, qlat double, qlon double, rx long, ry long"
-    ).withColumn("qcell", G.encode_cell(F.col("qlat"), F.col("qlon"), res))
-    is_band = F.lit(False)
-    # groups exactly as the round planner would bucket them: s from
-    # max(rx, ry) -> 8 lands in s=2, 0 in s=0
-    s_expr = F.when(F.greatest(F.col("rx"), F.col("ry")) >= 4, 2).otherwise(0)
-    s_groups = [(0, 1), (2, 15)]
+    fallback_sizes = []
 
-    fan_lut = _fanin_pairs(qcells, is_band, s_expr, s_groups, lut, res)
-    assert fan_lut is not None and fan_lut["mx"] is not None
-    # the dense cell holds 200 points and its coarse ring covers it
-    assert fan_lut["mx"] >= 200
-    assert fan_lut["tot"] >= fan_lut["mx"]
+    def spy_flat_knn(pages_geo, queries, k):
+        fallback_sizes.append(queries.count())
+        return flat_knn(pages_geo, queries, k)
 
-    # fine-only stats (no `lv` column): same answer — coarse counts are
-    # rolled up from the finest level either way
-    fan_fine = _fanin_pairs(qcells, is_band, s_expr, s_groups, fine, res)
-    assert fan_fine is not None
-    assert (fan_fine["mx"], fan_fine["tot"]) == (fan_lut["mx"], fan_lut["tot"])
+    monkeypatch.setattr(knn_mod, "flat_knn", spy_flat_knn)
 
-    # a radius-0 fine ring over the lone dense-cell query: the estimate is
-    # EXACT — one cell, all 200 pairs
-    q0 = qcells.filter(F.col("query_id") == 1).withColumn(
-        "rx", F.lit(0).cast("long")
-    ).withColumn("ry", F.lit(0).cast("long"))
-    fan0 = _fanin_pairs(q0, is_band, F.lit(0), [(0, 1)], lut, res)
-    assert (fan0["mx"], fan0["tot"]) == (200, 200)
+    def serve():
+        return _key(
+            cell_knn(
+                cells, q, k=10, res=6, cell_col="cell", stats=lut,
+                partition_parent_res=3,
+            ).collect()
+        )
 
-    # no estimable groups -> None (band-only round)
-    assert _fanin_pairs(qcells, F.lit(True), s_expr, [], lut, res) is None
+    with monkeypatch.context() as m:
+        m.setattr(knn_mod, "MAX_ROUNDS", 1)
+        assert serve() == want
+    assert len(fallback_sizes) == 1 and fallback_sizes[0] > 32
+    n_round0 = fallback_sizes.pop()
+    assert serve() == want
+    assert sum(fallback_sizes) < n_round0
 
 
 def test_update_cell_stats_equals_rebuild(spark, geo_small):
@@ -845,62 +786,3 @@ def test_reverse_knn_planted_semantics(spark):
         for r in reverse_knn(corpus, qs, k=5, res=6).collect()
     }
     assert got_unbounded == {(q, u) for q in (1, 2, 3) for u in ("A", "B")}
-
-
-def test_cell_knn_fanin_spread_unpruned_path(spark):
-    """r6: the fan-in gate also covers stats-serving WITHOUT the
-    partition-pruned corpus (the knn_join / knn_cell_index shape — measured
-    sf1 straggler: 81 s of a 95 s call in one task). With the floors pinned
-    to zero a hot-cell batch must engage the spread on the un-pruned path
-    and stay bit-identical to the flat oracle; the probe-ub factor gate is
-    bypassed by the zero floor (threshold = FACTOR * 0)."""
-    from countrymaam_spark.functions import geo as G
-    from countrymaam_spark.operators import knn as knn_mod
-    from countrymaam_spark.operators.knn import (
-        build_cell_lut,
-        build_cell_stats,
-        cell_knn,
-        flat_knn,
-    )
-
-    rows = [
-        (
-            f"https://dense.example/{i}",
-            40.0 + (i * 37 % 1000) / 1000.0,
-            -74.0 + (i * 61 % 1000) / 1000.0,
-        )
-        for i in range(1200)
-    ] + [
-        (
-            f"https://sparse.example/{i}",
-            -80.0 + (i * 997 % 16000) / 100.0,
-            -179.0 + (i * 773 % 35800) / 100.0,
-        )
-        for i in range(200)
-    ]
-    corpus = spark.createDataFrame(
-        rows, "url string, lat double, lon double"
-    ).withColumn("cell", G.encode_cell(F.col("lat"), F.col("lon"), 6))
-    lut = build_cell_lut(build_cell_stats(corpus, 6, cell_col="cell"), 6)
-    metro_q = spark.createDataFrame(
-        [(i, 40.4 + i / 100.0, -73.6 - i / 100.0) for i in range(20)],
-        "query_id long, lat double, lon double",
-    )
-    want = _key(flat_knn(corpus, metro_q, k=10).collect())
-    old_floor = knn_mod.FANIN_SPREAD_MIN_PAIRS
-    old_factor = knn_mod.FANIN_SPREAD_FACTOR
-    knn_mod.FANIN_SPREAD_MIN_PAIRS = 0
-    knn_mod.FANIN_SPREAD_FACTOR = 0
-    try:
-        t: dict = {}
-        got = _key(
-            cell_knn(
-                corpus, metro_q, k=10, res=6, cell_col="cell", stats=lut,
-                timings=t,
-            ).collect()
-        )
-    finally:
-        knn_mod.FANIN_SPREAD_MIN_PAIRS = old_floor
-        knn_mod.FANIN_SPREAD_FACTOR = old_factor
-    assert got == want
-    assert any(k_.startswith("fanin_spread_round") for k_ in t), sorted(t)

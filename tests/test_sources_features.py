@@ -55,14 +55,14 @@ def test_binary_rejects_torn_file(spark, tmp_path):
         FS.load_binary_features(spark, str(p), dim=16, dtype="float32")
 
 
-def test_csv_vectors_reference_corpus(spark):
-    """The reference's own 200x128 vec.csv loads into the embeddings shape
-    and matches the file's values exactly."""
-    df = FS.load_csv_vectors(spark, "/root/reference/graph/vec.csv", dim=128)
+def test_csv_vectors_reference_corpus(spark, vec_csv_200):
+    """A 200x128 corpus in the reference's vec.csv format loads into the
+    embeddings shape and matches the file's values exactly."""
+    df = FS.load_csv_vectors(spark, vec_csv_200, dim=128)
     rows = {r["vec_id"]: np.array(r["embedding"]) for r in df.collect()}
     assert len(rows) == 200 and all(len(v) == 128 for v in rows.values())
     vals = []
-    with open("/root/reference/graph/vec.csv") as f:
+    with open(vec_csv_200) as f:
         for line in f:
             vals.extend(float(t) for t in line.strip().split(",") if t)
     arr = np.array(vals).reshape(-1, 128)
