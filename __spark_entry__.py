@@ -434,10 +434,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     def _knn_cell_pruned(s, d):
         # partition-pruned serving: the corpus snapshot directory-partitioned
-        # on the res-3 parent cell (Iceberg partition-spec analog), each
-        # round's ring probe reading only the parent directories its queries
-        # can touch (literal IN => PartitionFilters at plan time). Exactness
-        # never depends on the prune (superset cover; band/fallback unpruned)
+        # on the res-3 parent cell (Iceberg partition-spec analog), the probe
+        # reading only the parent directories its rings and bands touch
+        # (literal IN => PartitionFilters at plan time). The cover is exact,
         # so the oracle is the same exact-kNN SQL
         import tempfile
 

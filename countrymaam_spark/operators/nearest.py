@@ -26,7 +26,7 @@ k > 1 the prune keeps every polygon with lb <= ub where ub is the top-1
 bound — a superset of the true top-k ONLY when their distances are <= ub;
 polygons with dist > ub but rank <= k are re-admitted by the fallback:
 queries whose surviving-pair count is < k re-run unpruned (driver-free —
-an anti-join + union, same pattern as cell_knn's straggler fallback).
+an anti-join + union).
 """
 
 from __future__ import annotations

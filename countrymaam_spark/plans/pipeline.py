@@ -539,9 +539,8 @@ def build_cell_pipeline(
         params=params,
         partition_by=["parent"] if partition_parent_res is not None else None,
     )
-    # the fully-prebuilt multi-level planning lut (<= 5x|cells| rows): with
-    # it, radius planning is one equi-join against state — no per-batch
-    # rollup stages at all (measured ~1-2 s of fixed cost per warm batch)
+    # the multi-level count lut (<= 5x|cells| rows): cell_knn plans each
+    # batch on the driver from its lv == res slice
     lut_df, skipped_l = run_stage(
         spark,
         manifest,
@@ -559,8 +558,8 @@ def build_cell_pipeline(
 
 def load_cell_state(spark: SparkSession, out_dir: str):
     """-> (encoded corpus DataFrame, planning lut DataFrame) for
-    ``cell_knn(cell_col="cell", stats=...)``: planning is one equi-join
-    against the lut, no rollup."""
+    ``cell_knn(cell_col="cell", stats=...)``: the batch is planned on the
+    driver from the lut's ``lv == res`` slice."""
     return (
         spark.read.parquet(os.path.join(out_dir, "cell_corpus")),
         spark.read.parquet(os.path.join(out_dir, "cell_lut")),

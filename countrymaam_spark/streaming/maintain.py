@@ -17,12 +17,14 @@ semantics chosen per sink:
   across restarts/replays — and ``foreachBatch`` upserts the *changed*
   rows into the lut snapshot by SET (idempotent), never by add.
 
-Consistency: the two sinks commit independently, so the lut may briefly
-trail the corpus. That is SAFE by construction — the lut only sizes the
-planner's candidate rings; ``cell_knn``'s completeness comes from the
-pruning bound plus the straggler fallback, so a stale lut costs probe
-efficiency, never correctness (the same reason a batch-built lut may be
-maintained asynchronously at 10^12 rows). At scale the snapshot rewrite in
+Consistency: the two sinks commit independently. ``cell_knn`` sizes each
+probe so that the ring the lut says holds k points is inside it, so a lut
+that TRAILS the corpus (counts at or below the corpus's) is safe — it only
+widens rings — while a lut that LEADS the corpus (a micro-batch the lut
+sink has committed and the corpus sink has not) can over-count a ring and
+return a wrong top-k until the corpus catches up. Serve from a state where
+the corpus sink has processed at least what the lut sink has (as after
+``processAllAvailable`` on both). At scale the snapshot rewrite in
 ``_upsert_lut`` becomes an Iceberg/Delta ``MERGE INTO`` on (lv, cell); the
 lut is <= 5x|cells| rows, not corpus-sized, so either form is cheap.
 """

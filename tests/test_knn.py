@@ -1,6 +1,6 @@
 """kNN correctness: flat vs DuckDB oracle; cell-index kNN must equal flat
-exactly (the escalation guarantee) — the reference's 'budget >= corpus implies
-exact' invariant generalized (countrymaam_test.go:212)."""
+exactly (the count-bounded probe guarantee) — the reference's 'budget >=
+corpus implies exact' invariant generalized (countrymaam_test.go:212)."""
 
 import os
 
@@ -70,20 +70,74 @@ def test_knn_fewer_than_k_results_legal(spark, geo_small):
 
 
 def test_cell_knn_zero_candidate_round_not_dropped(spark):
-    """Regression: a query whose first-round ring holds ZERO pages must stay
-    in `remaining` (it has no stats row; the settled-set anti-join keeps it)
-    and eventually settle — cell_knn == flat_knn for every query_id."""
-    # corpus clustered near (10, 10); query B sits in an empty band near the
-    # south pole so its initial rings are empty for several rounds
+    """A query whose neighbourhood is empty for many rings (near the south
+    pole, far from a clustered corpus) must still get its exact top-k, and
+    so must the edge cases: queries at +-89.9 latitude and +-179.99
+    longitude, a corpus with fewer than k points, a 1-query batch and an
+    empty batch — at res 6 and 8, planned from the corpus and from the lut.
+    cell_knn == flat_knn for every query_id."""
+    from countrymaam_spark.operators.knn import build_cell_lut, build_cell_stats
+
+    schema = "url string, lat double, lon double"
     pts = [(f"u{i}", 10.0 + i * 0.01, 10.0 + i * 0.01) for i in range(50)]
-    corpus = spark.createDataFrame(pts, "url string, lat double, lon double")
+    pts += [
+        ("pn", 89.95, 120.0), ("ps", -89.95, -60.0), ("pe", 1.0, 179.995), ("pw", -1.0, -179.995)
+    ]
+    corpora = {
+        "clustered": spark.createDataFrame(pts, schema),
+        "fewer than k": spark.createDataFrame(pts[-3:], schema),
+    }
     q = spark.createDataFrame(
-        [(0, 10.2, 10.2), (1, -85.0, -170.0)], "query_id long, lat double, lon double"
+        [(0, 10.2, 10.2), (1, -85.0, -170.0), (2, 89.9, 0.0), (3, -89.9, 90.0),
+         (4, 0.5, 179.99), (5, -0.5, -179.99)],
+        "query_id long, lat double, lon double",
     )
-    flat = _key(flat_knn(corpus, q, k=5).collect())
-    cell = _key(cell_knn(corpus, q, k=5, res=7).collect())
-    assert cell == flat
-    assert {r[0] for r in cell} == {0, 1}
+    batches = {"edge": q, "one": q.filter("query_id = 4"), "empty": q.filter("query_id < 0")}
+    for cname, corpus in corpora.items():
+        want = {b: _key(flat_knn(corpus, qb, k=5).collect()) for b, qb in batches.items()}
+        assert {r[0] for r in want["edge"]} == set(range(6))
+        assert len(want["one"]) == min(5, corpus.count()) and want["empty"] == []
+        for res in (6, 8):
+            lut = build_cell_lut(build_cell_stats(corpus, res), res)
+            for b, qb in batches.items():
+                for stats in (None, lut):
+                    got = _key(cell_knn(corpus, qb, k=5, res=res, stats=stats).collect())
+                    assert got == want[b], (cname, res, b, stats is not None)
+
+
+def test_knn_null_coordinate_queries_get_no_rows(spark, tmp_path):
+    """A query with a NULL (or NaN) lat or lon has no distance to anything:
+    flat_knn, cell_knn and the DuckDB oracle return no rows for it, and the
+    valid queries of the same batch are unaffected."""
+    import pandas as pd
+
+    corpus = spark.createDataFrame(
+        [(f"u{i}", -60.0 + i * 1.3, -170.0 + i * 3.1) for i in range(100)],
+        "url string, lat double, lon double",
+    )
+    qrows = [(0, 10.0, 20.0), (1, None, 20.0), (2, 10.0, None), (3, None, None), (4, -45.0, 100.0)]
+    q = spark.createDataFrame(qrows, "query_id long, lat double, lon double")
+    want = _key(flat_knn(corpus, q.filter("query_id IN (0, 4)"), k=5).collect())
+    assert {r[0] for r in want} == {0, 4}
+    assert _key(flat_knn(corpus, q, k=5).collect()) == want
+    assert _key(cell_knn(corpus, q, k=5, res=6).collect()) == want
+    # NaN is not NULL in Spark; it must not reach the ring planner either
+    q_nan = spark.createDataFrame(
+        [(0, 10.0, 20.0), (6, float("nan"), 20.0), (7, 10.0, float("nan"))],
+        "query_id long, lat double, lon double",
+    )
+    want0 = [r for r in want if r[0] == 0]
+    assert _key(flat_knn(corpus, q_nan, k=5).collect()) == want0
+    assert _key(cell_knn(corpus, q_nan, k=5, res=6).collect()) == want0
+
+    pages_p = str(tmp_path / "pages.parquet")
+    queries_p = str(tmp_path / "queries.parquet")
+    corpus.toPandas().to_parquet(pages_p)
+    pd.DataFrame(qrows, columns=["query_id", "lat", "lon"]).to_parquet(queries_p)
+    oracle = duckdb.sql(
+        flat_knn_sql(f"'{pages_p}'", f"'{queries_p}'", k=5)
+    ).fetchall()
+    assert sorted((qid, rk, u) for qid, rk, u, _ in oracle) == want
 
 
 def test_flat_knn_plan_shape(spark, geo_small, queries_small):
@@ -211,9 +265,9 @@ def test_cell_pipeline_partitioned_layout(spark, geo_small, queries_small, tmp_p
 
 def test_cell_knn_parent_prune_bit_equal(spark, geo_small, queries_small, tmp_path):
     """Serving with the parent-directory prune (partition_parent_res=) must
-    be bit-identical to the stateless path — including escalation rounds and
-    sparse/band queries, which bypass the prune — and must actually engage
-    (bounded parent cover recorded per round)."""
+    be bit-identical to the stateless path — including sparse/band queries,
+    which bypass the prune — and must actually engage (the parent cover
+    size is recorded)."""
     from countrymaam_spark.plans import pipeline as P
 
     want = _key(cell_knn(geo_small, queries_small, k=5, res=6).collect())
@@ -317,16 +371,12 @@ def test_cell_knn_clustered_corpus_bit_equal(spark, tmp_path):
             assert got == want, f"partition_parent_res={prune}"
 
 
-def test_cell_knn_escalation_under_prune_bit_equal(spark, tmp_path, monkeypatch):
-    """Escalation past round 0 on pruned lut serving. 40 high-latitude
-    queries over a sparse corpus plan coarse rings whose longitude bound
-    collapses, so more than 32 stay unsettled after round 0 and the
-    straggler cutoff lets round 1 run (on the latitude bands those rings
-    escalate to, which read the unpruned corpus). Results must match the
-    flat oracle bit-for-bit, and round 1 must actually settle queries: with
-    one round the exact fallback receives every round-0 straggler, with the
-    default rounds it receives fewer."""
-    from countrymaam_spark.operators import knn as knn_mod
+def test_cell_knn_escalation_under_prune_bit_equal(spark, tmp_path):
+    """High-latitude queries on pruned lut serving. 40 queries over a sparse
+    northern corpus plan rings that are wide in longitude (the longitude
+    bound shrinks with cos(lat)) and together span a dozen res-3 parents,
+    all of which the pruned read must keep. Results must match the flat
+    oracle bit-for-bit."""
     from countrymaam_spark.plans import pipeline as P
 
     rows = [
@@ -346,30 +396,104 @@ def test_cell_knn_escalation_under_prune_bit_equal(spark, tmp_path, monkeypatch)
         "query_id long, lat double, lon double",
     )
     want = _key(flat_knn(corpus, q, k=10).collect())
+    got = _key(
+        cell_knn(
+            cells, q, k=10, res=6, cell_col="cell", stats=lut,
+            partition_parent_res=3,
+        ).collect()
+    )
+    assert got == want
 
-    fallback_sizes = []
 
-    def spy_flat_knn(pages_geo, queries, k):
-        fallback_sizes.append(queries.count())
-        return flat_knn(pages_geo, queries, k)
+def test_cell_knn_prune_cover_holds_every_probed_parent(spark, tmp_path):
+    """The driver enumerates exactly the coarse cells geo.ring_cells_xy
+    gives for each ring, and its parent cover contains the partition parent
+    of every coarse cell a ring probes and of every row a band probes — here
+    for rings across the antimeridian and near the poles, at a partition res
+    both finer and coarser than the probe's coarse level. A metro batch
+    whose rings straddle parent boundaries (the res-3 corner at (0, 0) and
+    the antimeridian) must stay bit-equal to flat_knn under the prune: a
+    cover that drops part of a ring returns wrong neighbours."""
+    import numpy as np
+    import pandas as pd
 
-    monkeypatch.setattr(knn_mod, "flat_knn", spy_flat_knn)
+    from countrymaam_spark.functions import geo as G
+    from countrymaam_spark.operators import knn as knn_mod
+    from countrymaam_spark.plans import pipeline as P
 
-    def serve():
-        return _key(
-            cell_knn(
-                cells, q, k=10, res=6, cell_col="cell", stats=lut,
-                partition_parent_res=3,
-            ).collect()
-        )
+    res, k = 6, 10
+    nx, ny = 2 << res, 1 << res
+    rng = np.random.default_rng(3)
+    plat = np.concatenate([rng.uniform(-88, 88, 600), rng.uniform(70, 89.9, 200),
+                           rng.uniform(-89.9, -70, 200)])
+    plon = np.concatenate([rng.uniform(-180, 180, 600), rng.uniform(170, 180, 200),
+                           rng.uniform(-180, -170, 200)])
+    px = np.clip(np.floor((plon + 180.0) / G.cell_deg(res)), 0, nx - 1).astype(np.int64)
+    py = np.clip(np.floor((plat + 90.0) / G.cell_deg(res)), 0, ny - 1).astype(np.int64)
+    cells = res * G._R_SHIFT + px * G._X_SHIFT + py
+    cells, cnts = np.unique(cells, return_counts=True)
+    qlat = np.array([0.5, -0.5, 30.0, -30.0, 75.0, -75.0, 84.0, -84.0, 60.0, 10.0])
+    qlon = np.array([179.99, -179.99, 179.5, -179.5, 179.0, -179.0, 178.0, -178.0, -179.9, 0.0])
+    plan = pd.DataFrame({"query_id": np.arange(len(qlat)), "qlat": qlat, "qlon": qlon,
+                         **knn_mod._plan_rings(qlat, qlon, cells, cnts, res, k)})
+    probe = knn_mod._probe_table(plan, res)
+    ring, band = plan[~plan["band"]], plan[plan["band"]]
+    assert len(ring) >= 6 and ring["s"].nunique() >= 2 and len(band) >= 1
 
-    with monkeypatch.context() as m:
-        m.setattr(knn_mod, "MAX_ROUNDS", 1)
-        assert serve() == want
-    assert len(fallback_sizes) == 1 and fallback_sizes[0] > 32
-    n_round0 = fallback_sizes.pop()
-    assert serve() == want
-    assert sum(fallback_sizes) < n_round0
+    ring_cells = set()
+    for s in sorted(ring["s"].unique()):
+        lv = res - int(s)
+        sq = spark.createDataFrame(ring[ring["s"] == s][["query_id", "qlat", "qlon", "rx", "ry"]])
+        enum = sq.select("query_id", F.explode(G.ring_cells_xy(
+            G.encode_cell(F.col("qlat"), F.col("qlon"), lv), lv,
+            F.ceil(F.col("rx") / F.lit(1 << int(s))).cast("long"),
+            F.ceil(F.col("ry") / F.lit(1 << int(s))).cast("long"),
+        )).alias("c"))
+        ring_cells |= {(r["query_id"], r["c"]) for r in enum.collect()}
+    assert {(q, key) for q, key in zip(probe["query_id"], probe["key"]) if key >= 0} == ring_cells
+    for ppr in (1, 3, 5):
+        probed = set()
+        for _, c in ring_cells:
+            lv, x, y = c // G._R_SHIFT, (c % G._R_SHIFT) // G._X_SHIFT, c % G._X_SHIFT
+            if lv >= ppr:  # the coarse cell lies in one parent
+                probed.add((x >> (lv - ppr), y >> (lv - ppr)))
+            else:  # the coarse cell spans a block of parents
+                sh = ppr - lv
+                probed |= {((x << sh) + i, (y << sh) + j)
+                           for i in range(1 << sh) for j in range(1 << sh)}
+        for qy, ry in zip(band["qy"], band["ry"]):  # a band reads whole rows
+            rows = range(max(qy - ry, 0) >> (res - ppr), (min(qy + ry, ny - 1) >> (res - ppr)) + 1)
+            probed |= {(x, y) for x in range(2 << ppr) for y in rows}
+        cover = {((c % G._R_SHIFT) // G._X_SHIFT, c % G._X_SHIFT)
+                 for c in knn_mod._parent_cover(probe, res, ppr)}
+        assert probed <= cover, (ppr, sorted(probed - cover))
+        if ppr == 3:  # rings at x = +-179.99 wrap: both edge columns probed
+            assert {x for x, _ in probed} >= {0, 15}
+
+    dense = [
+        (f"https://metro.example/{i}", -1.5 + (i * 37 % 300) / 100.0, -1.5 + (i * 61 % 300) / 100.0)
+        for i in range(900)
+    ] + [
+        (f"https://date.example/{i}", 8.5 + (i * 53 % 300) / 100.0,
+         ((178.5 + (i * 29 % 300) / 100.0 + 180.0) % 360.0) - 180.0)
+        for i in range(900)
+    ]
+    corpus = spark.createDataFrame(dense, "url string, lat double, lon double")
+    out = str(tmp_path / "straddle")
+    P.build_cell_pipeline(spark, corpus, out, res=res, partition_parent_res=3)
+    cells_df, lut = P.load_cell_state(spark, out)
+    q = spark.createDataFrame(
+        [(i, -0.3 + (i % 6) * 0.1, -0.3 + (i // 6) * 0.1) for i in range(24)]
+        + [(100 + i, 9.7 + (i % 4) * 0.2, 179.7 + (i // 4) * 0.1 - (360.0 if i >= 12 else 0.0))
+           for i in range(24)],
+        "query_id long, lat double, lon double",
+    )
+    want = _key(flat_knn(corpus, q, k=k).collect())
+    t: dict = {}
+    got = _key(cell_knn(cells_df, q, k=k, res=res, cell_col="cell", stats=lut,
+                        partition_parent_res=3, timings=t).collect())
+    assert got == want
+    assert 4 <= t["prune_parents_round0"] <= 64
 
 
 def test_update_cell_stats_equals_rebuild(spark, geo_small):
@@ -388,31 +512,35 @@ def test_update_cell_stats_equals_rebuild(spark, geo_small):
 
 
 def test_plan_radius_with_stats_never_scans_corpus(spark, geo_small, queries_small, tmp_path):
-    """With prebuilt stats the radius-planning plan must read ONLY the stats
-    table — a corpus scan here would mean serving re-aggregates the corpus
-    per query batch, the at-scale regression the state path exists to
-    prevent."""
-    from countrymaam_spark.operators.knn import _plan_radius, build_cell_stats
+    """With prebuilt stats the driver plan (the eager part of cell_knn) must
+    read ONLY the stats table: with the corpus files gone the call still
+    plans, with the stats files gone it fails. A corpus scan here would mean
+    serving re-aggregates the corpus per query batch, the at-scale
+    regression the state path exists to prevent."""
+    import shutil
+
+    from countrymaam_spark.functions import geo as G
+    from countrymaam_spark.operators.knn import build_cell_lut, build_cell_stats
 
     corpus_dir = str(tmp_path / "corpus")
     stats_dir = str(tmp_path / "stats")
-    g6 = geo_small.withColumn(
-        "cell", __import__("countrymaam_spark.functions.geo", fromlist=["geo"]).encode_cell(
-            F.col("lat"), F.col("lon"), 6
-        )
-    )
+    g6 = geo_small.withColumn("cell", G.encode_cell(F.col("lat"), F.col("lon"), 6))
     g6.write.mode("overwrite").parquet(corpus_dir)
-    build_cell_stats(g6, 6, cell_col="cell").write.mode("overwrite").parquet(stats_dir)
+    build_cell_lut(build_cell_stats(g6, 6, cell_col="cell"), 6).write.mode(
+        "overwrite"
+    ).parquet(stats_dir)
     cells = spark.read.parquet(corpus_dir)
     stats = spark.read.parquet(stats_dir)
-    remaining = queries_small.select(
-        "query_id", F.col("lat").alias("qlat"), F.col("lon").alias("qlon")
-    )
-    plan = _plan_radius(
-        remaining, cells, 6, 10, stats=stats
-    )._jdf.queryExecution().executedPlan().toString()
-    assert "stats" in plan
-    assert "corpus" not in plan
+    shutil.rmtree(corpus_dir)
+    t: dict = {}
+    cell_knn(cells, queries_small, k=10, res=6, cell_col="cell", stats=stats, timings=t)
+    assert t["plan_radius"] > 0
+    # the same deletion is caught when the plan does need the corpus
+    with pytest.raises(Exception):
+        cell_knn(cells, queries_small, k=10, res=6, cell_col="cell")
+    shutil.rmtree(stats_dir)
+    with pytest.raises(Exception):
+        cell_knn(cells, queries_small, k=10, res=6, cell_col="cell", stats=stats)
 
 
 def _brute_radius(geo_df, q_df, radius_km):
