@@ -6,19 +6,19 @@ while the query side is small (thousands of structs), and exactly the wrong
 plan at production query volume (millions of queries per batch: the driver
 serializes and ships the full struct table to every executor, the failure
 mode the reference never hits because its serving loop is single-process,
-/root/reference/cmd/countrymaam/main.go:228-311). cell_knn and knn_tree grew
-this gate independently in rounds 2-3 (operators/knn.py, operators/
-index_build.py); the round-3 verdict flagged the four ANN serving paths that
-still broadcast their query side unconditionally (graph walk, RP-LSH, IVF
-f32/u8). This module is the single shared implementation all six sites use.
+/root/reference/cmd/countrymaam/main.go:228-311). Every serving path that
+ships a query-derived table takes this one gate: the driver-planned geo
+paths (cell_knn's probe table, knn_tree's route table) and the ANN paths
+(graph walk, RP-LSH, IVF f32/u8).
 
-The estimate is computed from counts the caller already has, or one tiny
-count job on the QUERY table — never a job over the corpus. Estimates should
-be upper bounds: overestimating only forfeits a viable broadcast (the
-shuffle equi-join fallback is always correct; at cluster scale the corpus
-side is bucketed on the join key, so only the small side moves), while
-underestimating re-creates the oversized broadcast the gate exists to
-prevent.
+The estimate is computed from counts the caller already has — the
+driver-planned paths pass the exact size of the table they built (probe
+rows, (query, parent) route entries) — or one tiny count job on the QUERY
+table, never a job over the corpus. Estimates should be upper bounds:
+overestimating only forfeits a viable broadcast (the shuffle equi-join
+fallback is always correct; at cluster scale the corpus side is bucketed on
+the join key, so only the small side moves), while underestimating
+re-creates the oversized broadcast the gate exists to prevent.
 """
 
 from __future__ import annotations

@@ -10,13 +10,15 @@ Skew: Zipf-hot city cells would give one task a huge group (AQE cannot split
 ``applyInPandas`` groups), so groups above ``target_group_rows`` are salted by
 url hash — queries later fan out over every salt of a parent.
 
-The tree-serving path (``knn_tree``) routes queries to the ring of parent
-cells around them, runs best-first budgeted search inside each blob
-(mapInPandas; blobs never leave their partition), and exact-haversine
-re-ranks the union — the reference's candidate-stream -> re-rank -> top-k
-lifecycle (/root/reference/countrymaam.go:38-69) with ``search_k`` as the
-recall knob. cell_knn (operators/knn.py) remains the exactness-guaranteed
-path; knn_tree is the budget-bounded approximate path.
+The tree-serving path (``knn_tree``) plans on the driver, like cell_knn: it
+collects the batch, enumerates each query's ring of parent cells in numpy
+and ships one route row per parent; the routes join the blob table on
+``parent``, each blob runs best-first budgeted search over its routed
+queries (mapInPandas; blobs never leave their partition), and the union is
+exact-haversine re-ranked — the reference's candidate-stream -> re-rank ->
+top-k lifecycle (/root/reference/countrymaam.go:38-69) with ``search_k`` as
+the recall knob. cell_knn (operators/knn.py) remains the
+exactness-guaranteed path; knn_tree is the budget-bounded approximate path.
 """
 
 from __future__ import annotations
@@ -30,17 +32,17 @@ from pyspark.sql import functions as F
 
 from countrymaam_spark.functions import geo
 from countrymaam_spark.operators import kdtree
-from countrymaam_spark.operators.adaptive import BROADCAST_STRUCT_LIMIT, gate_broadcast
+from countrymaam_spark.operators.adaptive import gate_broadcast
+from countrymaam_spark.operators.knn import _cell_xy, _query_batch
 from countrymaam_spark.operators.topk import topk_per_group
 
 TREE_SCHEMA = (
     "parent long, salt int, n_rows long, seed long, checksum string, blob binary"
 )
-CAND_SCHEMA = "query_id long, url string, lat double, lon double"
-
-# route structs above this estimate skip the broadcast (driver-serialized,
-# single-threaded) and shuffle-join the blob table instead
-BROADCAST_ROUTE_LIMIT = BROADCAST_STRUCT_LIMIT
+ROUTE_SCHEMA = "parent long, qid array<long>, qlat array<double>, qlon array<double>"
+CAND_SCHEMA = (
+    "query_id long, url string, lat double, lon double, qlat double, qlon double"
+)
 
 
 def encode_pages(pages_geo: DataFrame, res: int = 7, parent_res: int = 4) -> DataFrame:
@@ -85,8 +87,6 @@ def build_tree_blobs(
 
     ``groupBy`` already hash-partitions on the group key — adding a range
     partition here would double-shuffle the corpus (plus a sampling pass).
-    Range+sort write clustering belongs to the cells-table snapshot
-    (write_cells_clustered), where it buys file-stat pruning.
     """
     prepared = salted
 
@@ -176,44 +176,39 @@ def incremental_add(
     return cells_new, trees_new
 
 
-def write_cells_clustered(salted: DataFrame, path: str) -> None:
-    """Persist the cell table range-partitioned on (parent, salt) and sorted
-    by cell within files — the Iceberg write-ordering analog: min/max file
-    stats then prune cell-range scans."""
-    (
-        salted.repartitionByRange("parent", "salt")
-        .sortWithinPartitions("parent", "salt", "cell")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
 def lineage(trees: DataFrame) -> DataFrame:
     """Per-partition lineage rows (no blob): the auditable build record."""
     return trees.select("parent", "salt", "n_rows", "seed", "checksum")
 
 
-def _route_estimate(trees: DataFrame, n_queries: int, ring: int | None) -> int:
-    """Upper-bound the (query x ring-parent x salt) route-struct count.
+def _plan_routes(batch: pd.DataFrame, parent_res: int, ring: int | None) -> pd.DataFrame:
+    """The batch's routes: one row per parent cell, holding the queries
+    whose ring of parents contains it -> (parent, qid[], qlat[], qlon[]).
 
-    ``ring=None`` is exact (every query meets every group — one count of the
-    small blob table). The ring path multiplies the ring fanout by the REAL
-    max salt factor, a tiny aggregate over the blob table (one row per
-    (parent, salt) group) — replacing round 3's hardcoded allowance of 4,
-    which under-estimated precisely on the hot-parent corpora salting exists
-    for and could re-admit the oversized driver broadcast the gate prevents
-    (round-3 verdict #2; tests/test_adaptive_broadcast.py pins a factor-8
-    fixture)."""
-    if ring is None:
-        return n_queries * trees.count()
-    fanout = (2 * ring + 1) ** 2
-    max_salt = (
-        trees.groupBy("parent")
-        .agg((F.max("salt") + 1).alias("_f"))
-        .agg(F.max("_f").alias("m"))
-        .first()["m"]
-    ) or 1
-    return n_queries * fanout * max_salt
+    A query's ring is ``geo.ring_cells`` of its parent cell: x wraps, y
+    clips at the poles, one entry per (query, parent). ``ring=None`` is a
+    ring wide enough to hold every parent of the grid."""
+    nx, ny = 2 << parent_res, 1 << parent_res
+    r = nx if ring is None else ring
+    qlat, qlon = batch["lat"].to_numpy(np.float64), batch["lon"].to_numpy(np.float64)
+    qx, qy = _cell_xy(qlat, qlon, parent_res)
+    # offsets past a full wrap would repeat columns: take each column once
+    dx = np.arange(-r, r + 1) if 2 * r + 1 < nx else np.arange(nx)
+    y = qy[:, None] + np.arange(-min(r, ny), min(r, ny) + 1)
+    qi, yj = np.nonzero((y >= 0) & (y < ny))
+    x = (qx[qi, None] + dx) % nx
+    parent = (parent_res * geo._R_SHIFT + x * geo._X_SHIFT + y[qi, yj][:, None]).ravel()
+    q = np.repeat(qi, len(dx))
+    order = np.lexsort((q, parent))
+    parents, starts = np.unique(parent[order], return_index=True)
+    groups = np.split(q[order], starts[1:]) if len(order) else []
+    qid = batch["query_id"].to_numpy(np.int64)
+    return pd.DataFrame({
+        "parent": parents,
+        "qid": [qid[g] for g in groups],
+        "qlat": [qlat[g] for g in groups],
+        "qlon": [qlon[g] for g in groups],
+    })
 
 
 def knn_tree(
@@ -223,100 +218,40 @@ def knn_tree(
     search_k: int = 64,
     parent_res: int = 4,
     ring: int | None = 1,
-    broadcast_limit: int | None = None,
 ) -> DataFrame:
     """Approximate kNN served from tree blobs -> (query_id, rk, url, dist_km).
 
-    Routing is a pure DataFrame plan — no driver-side collect:
-    queries explode to the (2*ring+1)^2 parent cells around them
-    (``ring=None`` -> every parent: full coverage, and with
-    ``search_k`` >= blob leaves the result is EXACT — reference invariant 3,
-    /root/reference/countrymaam_test.go:212), fan out over the blob salt keys,
-    and are aggregated to ONE array per (parent, salt). That route table is
-    ADAPTIVELY broadcast (estimate-gated, the cell_knn pattern): while it
-    fits, blob bytes never shuffle and un-probed blobs are pruned before
-    deserialization; at production query volume it becomes a shuffle
-    equi-join on (parent, salt). Inside ``mapInPandas`` each blob searches
-    its whole query batch vectorized: a numpy brute top-k when the budget
-    covers the blob's leaves, else the BATCHED box-bound kd descent
+    The driver plans the routes: it collects the batch (a query with a NULL
+    or NaN coordinate gets no rows) and enumerates each query's
+    (2*ring+1)^2 parent cells in numpy (:func:`_plan_routes`; ``ring=None``
+    -> every parent: full coverage, and with ``search_k`` >= blob leaves
+    the result is EXACT — reference invariant 3,
+    /root/reference/countrymaam_test.go:212). ``parent_res`` must be the
+    blob table's. The route table, one row of query arrays per parent, is
+    broadcast while its (query, parent) count fits the shared gate
+    (operators/adaptive.py) and is otherwise a shuffle join; it joins the
+    blob table on ``parent`` alone, so every salt of a parent meets the
+    parent's queries. Inside ``mapInPandas`` each blob searches its whole
+    query batch vectorized: a numpy brute top-k when the budget covers the
+    blob's leaves, else the BATCHED box-bound kd descent
     (kdtree.search_batch) with the ``search_k`` leaf budget — no per-query
-    Python walk either way. The candidate union is exact-haversine
-    re-ranked. Recall is monotone in ``search_k`` and ``ring`` (reference
-    budget semantics)."""
-    q = queries.select(
-        "query_id", F.col("lat").alias("qlat"), F.col("lon").alias("qlon")
+    Python walk either way. Each candidate carries its query's coordinates,
+    so the union is exact-haversine re-ranked without a re-join. Recall is
+    monotone in ``search_k`` and ``ring`` (reference budget semantics)."""
+    spark = trees.sparkSession
+    routes = _plan_routes(_query_batch(queries), parent_res, ring)
+    n_routes = int(routes["qid"].map(len).sum())
+    probed = trees.join(
+        gate_broadcast(spark.createDataFrame(routes, ROUTE_SCHEMA), n_routes), "parent"
     )
-    # adaptive broadcast (the cell_knn pattern, shared gate in
-    # operators/adaptive.py): the aggregated route table holds one struct per
-    # (query x ring-parent x salt) — broadcast is a driver-serialized
-    # single-threaded path, fine at thousands of structs and a hard stop at
-    # production query volume (millions/batch exceed
-    # spark.sql.autoBroadcastJoinThreshold-scale sizes). Estimate the route
-    # size from the query count (one cheap count on the tiny query table) x
-    # the REAL salt fanout — a tiny aggregate over the blob table (one row
-    # per (parent, salt) group), replacing the round-3 hardcoded allowance
-    # of 4 that under-estimated exactly on the hot-parent corpora salting
-    # exists for — and fall back to a shuffle equi-join on (parent, salt)
-    # past the limit. There the blob side shuffles once, the right trade at
-    # that volume (and at cluster scale the blob table is bucketed by
-    # (parent, salt), so only the route side would move).
-    n_queries = q.count()
-    route_est = _route_estimate(trees, n_queries, ring)
-    if ring is None:
-        qx = trees.select("parent", "salt").crossJoin(
-            gate_broadcast(q, n_queries, broadcast_limit)
-        )
-    else:
-        fanout = (2 * ring + 1) ** 2
-        q_ring = (
-            q.withColumn(
-                "qcell", geo.encode_cell(F.col("qlat"), F.col("qlon"), parent_res)
-            )
-            .withColumn(
-                "parent", F.explode(geo.ring_cells(F.col("qcell"), parent_res, ring))
-            )
-            .drop("qcell")
-        )
-        qx = trees.select("parent", "salt").join(
-            gate_broadcast(q_ring, n_queries * fanout, broadcast_limit), "parent"
-        )
-        route_limit = (
-            broadcast_limit if broadcast_limit is not None else BROADCAST_ROUTE_LIMIT
-        )
-        if route_est > route_limit:
-            # two-stage gate: the max-salt product is a cheap UPPER bound,
-            # but on salted corpora it overestimates by the max/mean salt
-            # ratio (every query charged the hottest parent's fanout) and
-            # declining here costs a full blob-table shuffle — the one
-            # non-scaling membw pass left in serving (measured at sf10/20k:
-            # the declined route was ~14x below its bound). Before paying
-            # that, compute the EXACT route-struct count: the query-side
-            # ring explode joined to the per-parent salt factors — one tiny
-            # query-side job (the blob-side aggregate is |parents| rows,
-            # broadcast), never a corpus/blob scan. At production volume
-            # the exact count declines just as the bound did.
-            factors = trees.groupBy("parent").agg((F.max("salt") + 1).alias("_f"))
-            exact = (
-                q_ring.join(F.broadcast(factors), "parent")
-                .agg(F.sum("_f").alias("n"))
-                .first()["n"]
-            )
-            route_est = int(exact or 0)
-    qagg = qx.groupBy("parent", "salt").agg(
-        F.collect_list(F.struct("query_id", "qlat", "qlon")).alias("qs")
-    )
-    qagg = gate_broadcast(
-        qagg, route_est, broadcast_limit if broadcast_limit is not None
-        else BROADCAST_ROUTE_LIMIT
-    )
-    probed = trees.join(qagg, ["parent", "salt"])
 
     def gen(batches):
         for pdf in batches:
             outs = []
-            for blob, qs in zip(pdf["blob"], pdf["qs"]):
-                if qs is None or len(qs) == 0:
-                    continue
+            for blob, qid, qla, qlo in zip(pdf["blob"], pdf["qid"], pdf["qlat"], pdf["qlon"]):
+                qid = np.asarray(qid, dtype=np.int64)
+                qla = np.asarray(qla, dtype=np.float64)
+                qlo = np.asarray(qlo, dtype=np.float64)
                 payload = kdtree.unpack_payload(blob)
                 trees_l = payload["trees"]
                 url_buf, url_off = payload["url_buf"], payload["url_off"]
@@ -326,18 +261,7 @@ def knn_tree(
                     continue
                 sc = max(cos0, 0.05)
                 pts = np.stack([lat, lon * sc], axis=1)
-                qarr = [
-                    (s["query_id"], s["qlat"], s["qlon"]) if isinstance(s, dict) else tuple(s)
-                    for s in qs
-                ]
-                qid = np.array([a[0] for a in qarr], dtype=np.int64)
-                qpts = np.stack(
-                    [
-                        np.array([a[1] for a in qarr], dtype=np.float64),
-                        np.array([a[2] for a in qarr], dtype=np.float64) * sc,
-                    ],
-                    axis=1,
-                )
+                qpts = np.stack([qla, qlo * sc], axis=1)
                 n_leaves = max(
                     int(((t["left"] == 0) & (t["right"] == 0)).sum()) for t in trees_l
                 )
@@ -355,8 +279,7 @@ def knn_tree(
                     # (>= kth_dot - eps) so the Spark-side exact-haversine
                     # re-rank sees a strict superset of the global top-k.
                     kk = min(k, n)
-                    qla = np.radians(np.array([a[1] for a in qarr], dtype=np.float64))
-                    qlo = np.radians(np.array([a[2] for a in qarr], dtype=np.float64))
+                    qra, qro = np.radians(qla), np.radians(qlo)
                     pla = np.radians(np.asarray(lat, dtype=np.float64))
                     plo = np.radians(np.asarray(lon, dtype=np.float64))
                     X = np.stack(
@@ -364,16 +287,16 @@ def knn_tree(
                         axis=1,
                     )  # (n, 3) unit vectors — transcendentals O(n), once per blob
                     Qm = np.stack(
-                        [np.cos(qla) * np.cos(qlo), np.cos(qla) * np.sin(qlo), np.sin(qla)],
+                        [np.cos(qra) * np.cos(qro), np.cos(qra) * np.sin(qro), np.sin(qra)],
                         axis=1,
                     )
                     Xt = X.T.copy()
-                    nd_buf = np.empty((min(256, len(qla)), n))
-                    for s in range(0, len(qla), 256):
+                    nd_buf = np.empty((min(256, len(qra)), n))
+                    for s in range(0, len(qra), 256):
                         # reused out= buffer: fresh mmap-sized temporaries
                         # first-touch-fault at seconds-per-40MB on this box
                         # (see kdtree.search_batch) — allocate once per blob
-                        nd = nd_buf[: min(256, len(qla) - s)]
+                        nd = nd_buf[: min(256, len(qra) - s)]
                         np.matmul(Qm[s : s + 256], Xt, out=nd)
                         np.negative(nd, out=nd)  # ascending == nearer first
                         # per-row partition loop, NOT np.partition(axis=1):
@@ -417,6 +340,8 @@ def knn_tree(
                             "url": kdtree.decode_urls(url_buf, url_off, isel),
                             "lat": np.asarray(lat, dtype=np.float64)[isel],
                             "lon": np.asarray(lon, dtype=np.float64)[isel],
+                            "qlat": qla[qsel],
+                            "qlon": qlo[qsel],
                         }
                     )
                 )
@@ -425,19 +350,13 @@ def knn_tree(
                 if outs
                 else pd.DataFrame(
                     {"query_id": pd.Series(dtype="int64"), "url": pd.Series(dtype=object),
-                     "lat": pd.Series(dtype="float64"), "lon": pd.Series(dtype="float64")}
+                     "lat": pd.Series(dtype="float64"), "lon": pd.Series(dtype="float64"),
+                     "qlat": pd.Series(dtype="float64"), "qlon": pd.Series(dtype="float64")}
                 )
             )
 
-    cands = probed.select("blob", "qs").mapInPandas(gen, CAND_SCHEMA)
-    qq = gate_broadcast(
-        queries.select(
-            "query_id", F.col("lat").alias("qlat"), F.col("lon").alias("qlon")
-        ),
-        n_queries,
-        broadcast_limit,
-    )
-    scored = cands.join(qq, "query_id").withColumn(
+    cands = probed.select("blob", "qid", "qlat", "qlon").mapInPandas(gen, CAND_SCHEMA)
+    scored = cands.withColumn(
         "dist_km",
         geo.haversine_km(F.col("lat"), F.col("lon"), F.col("qlat"), F.col("qlon")),
     )

@@ -89,6 +89,24 @@ def _valid_queries(queries: DataFrame) -> DataFrame:
     )
 
 
+def _query_batch(queries: DataFrame) -> pd.DataFrame:
+    """The valid queries collected to the driver as pandas (query_id, lat,
+    lon as doubles): the one job a driver-planned serving call spends on
+    its batch."""
+    return _valid_queries(queries).select(
+        "query_id", F.col("lat").cast("double"), F.col("lon").cast("double")
+    ).toPandas()
+
+
+def _cell_xy(lat: np.ndarray, lon: np.ndarray, res: int) -> tuple[np.ndarray, np.ndarray]:
+    """(x, y) of the cell at ``res`` holding each point, by
+    ``geo.encode_cell``'s exact float arithmetic (numpy, for driver plans)."""
+    cd = geo.cell_deg(res)
+    x = np.clip(np.floor((lon + 180.0) / cd), 0, (2 << res) - 1).astype(np.int64)
+    y = np.clip(np.floor((lat + 90.0) / cd), 0, (1 << res) - 1).astype(np.int64)
+    return x, y
+
+
 def flat_knn(pages_geo: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame:
     """Exact kNN: (query_id, rk, url, dist_km). pages_geo needs url/lat/lon;
     queries needs query_id/lat/lon."""
@@ -296,9 +314,7 @@ def _plan_rings(
     np.add.at(grid, (cells % geo._X_SHIFT, (cells % geo._R_SHIFT) // geo._X_SHIFT), cnts)
     sat = np.zeros((ny + 1, nx + 1), np.int64)
     sat[1:, 1:] = grid.cumsum(0).cumsum(1)
-    # the query cell, by encode_cell's exact float arithmetic
-    qx = np.clip(np.floor((qlon + 180.0) / cd), 0, nx - 1).astype(np.int64)
-    qy = np.clip(np.floor((qlat + 90.0) / cd), 0, ny - 1).astype(np.int64)
+    qx, qy = _cell_xy(qlat, qlon, res)
 
     def ring_count(r: np.ndarray) -> np.ndarray:
         y0 = np.maximum(qy - r, 0)
@@ -495,9 +511,7 @@ def cell_knn(
             raise ValueError("partition_parent_res must be <= res")
 
     qid = queries.schema["query_id"]
-    batch = _valid_queries(queries).select(
-        "query_id", F.col("lat").cast("double"), F.col("lon").cast("double")
-    ).toPandas()
+    batch = _query_batch(queries)
     if batch.empty:
         return spark.createDataFrame([], StructType([
             StructField("query_id", qid.dataType), StructField("rk", IntegerType()),

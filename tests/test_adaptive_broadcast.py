@@ -2,7 +2,7 @@
 serving path must produce IDENTICAL results in both join regimes, and the
 shuffle regime must actually engage when the estimate exceeds the limit —
 round-3 verdict #1 (graph walk, RP-LSH, IVF f32/u8 broadcast their query
-side unconditionally) and #2 (knn_tree's hardcoded salt allowance)."""
+side unconditionally); knn_tree's route table takes the same gate."""
 
 import os
 from contextlib import contextmanager
@@ -11,7 +11,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from countrymaam_spark.operators import ann, index_build
+from countrymaam_spark.operators import adaptive, ann, index_build
 from countrymaam_spark.operators import graph as G
 from countrymaam_spark.operators.adaptive import gate_broadcast
 from countrymaam_spark.operators.geotag import extract_geo
@@ -113,23 +113,10 @@ def test_graph_knn_gate(spark, corpus, queries):
         assert _key(a.collect()) == _key(b.collect())
 
 
-def test_route_estimate_uses_real_salt_factor(spark):
-    """A parent salted 8 ways must drive the route estimate with factor 8,
-    not round 3's hardcoded allowance of 4 — the under-estimate re-admitted
-    the oversized broadcast exactly on hot-parent corpora."""
-    rows = [(1, s) for s in range(8)] + [(2, 0)]
-    trees = spark.createDataFrame(rows, "parent long, salt int")
-    n_queries = 10
-    est = index_build._route_estimate(trees, n_queries, ring=1)
-    assert est == n_queries * 9 * 8
-    assert est > n_queries * 9 * 4  # the old allowance under-estimated
-    # ring=None is exact: every query x every (parent, salt) group
-    assert index_build._route_estimate(trees, n_queries, ring=None) == n_queries * 9
-
-
-def test_knn_tree_regimes_identical(spark):
-    """knn_tree with a hot parent salted past the old allowance: forced
-    shuffle regime (limit=0) serves the same rows as the broadcast regime."""
+def test_knn_tree_regimes_identical(spark, monkeypatch):
+    """knn_tree over hot parents salted more than 4 ways: the route table
+    is broadcast by default, and with the gate's limit forced to 0 the
+    shuffle join serves the same rows with no broadcast in the plan."""
     out = pg.ensure_fixtures("sf0.001")
     geo = extract_geo(spark.read.parquet(os.path.join(out, "pages.parquet"))).cache()
     cells = index_build.salt_hot_cells(
@@ -149,9 +136,9 @@ def test_knn_tree_regimes_identical(spark):
     )
     with no_auto_broadcast(spark):
         a = index_build.knn_tree(trees, queries, k=5, search_k=4096, ring=1)
-        b = index_build.knn_tree(
-            trees, queries, k=5, search_k=4096, ring=1, broadcast_limit=0
-        )
+        assert "BroadcastHashJoin" in _plan(a)
+        monkeypatch.setattr(adaptive, "BROADCAST_STRUCT_LIMIT", 0)
+        b = index_build.knn_tree(trees, queries, k=5, search_k=4096, ring=1)
         assert "BroadcastHashJoin" not in _plan(b)
         ka = sorted((r["query_id"], r["rk"], r["url"]) for r in a.collect())
         kb = sorted((r["query_id"], r["rk"], r["url"]) for r in b.collect())

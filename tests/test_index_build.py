@@ -217,25 +217,50 @@ def test_factory_zoo(spark, geo_small):
         assert got == u8_exact, kind
 
 
-def test_knn_tree_shuffle_route_matches_broadcast_route(spark, geo_small, monkeypatch):
-    """Adaptive broadcast (round-2 verdict #2): forcing the route estimate
-    over the limit switches to the shuffle equi-join; results are identical
-    and the plan really drops the route broadcast."""
-    cells = index_build.salt_hot_cells(
-        index_build.encode_pages(geo_small, res=7, parent_res=4), target_group_rows=2000
-    )
-    trees = index_build.build_tree_blobs(cells, seed=42).cache()
-    out = pg.fixture_dir("sf0.001")
-    queries = spark.read.parquet(os.path.join(out, "knn_queries.parquet")).filter(
-        F.col("query_id") < 16
-    )
-    a = index_build.knn_tree(trees, queries, k=5, search_k=1 << 30, ring=None)
-    rows_a = {tuple(r) for r in a.collect()}
-    monkeypatch.setattr(index_build, "BROADCAST_ROUTE_LIMIT", 0)
-    b = index_build.knn_tree(trees, queries, k=5, search_k=1 << 30, ring=None)
-    plan = b._jdf.queryExecution().executedPlan().toString()
-    rows_b = {tuple(r) for r in b.collect()}
-    assert rows_a == rows_b
+def test_knn_tree_routes_match_ring_cells(spark):
+    """The driver's routes are ``geo.ring_cells`` of each query's parent
+    cell (x wraps, y clips at the poles), one entry per (query, parent),
+    each carrying its query's coordinates; ``ring=None`` routes every query
+    to every parent of the grid."""
+    import pandas as pd
+
+    from countrymaam_spark.functions import geo
+
+    pts = [(10.0, 20.0), (-33.9, 151.2), (51.5, -0.1), (64.1, -21.9),
+           (89.99, 0.0), (-89.99, 45.0), (0.0, 179.99), (0.0, -179.99),
+           (89.99, 179.99), (-89.99, -179.99), (20.0, 180.0)]
+    batch = pd.DataFrame({
+        "query_id": range(100, 100 + len(pts)),
+        "lat": [p[0] for p in pts], "lon": [p[1] for p in pts],
+    })
+    q = spark.createDataFrame(batch)
+    coords = dict(zip(batch["query_id"], zip(batch["lat"], batch["lon"])))
+
+    def driver_pairs(parent_res, ring):
+        routes = index_build._plan_routes(batch, parent_res, ring)
+        pairs = []
+        for p, qid, qlat, qlon in zip(*(routes[c] for c in ("parent", "qid", "qlat", "qlon"))):
+            for i, la, lo in zip(qid, qlat, qlon):
+                assert coords[i] == (la, lo)
+                pairs.append((int(i), int(p)))
+        assert len(pairs) == len(set(pairs))
+        return sorted(pairs)
+
+    for parent_res in (1, 4):
+        for ring in (0, 1, 2):
+            cell = geo.encode_cell(F.col("lat"), F.col("lon"), parent_res)
+            want = sorted(
+                tuple(r) for r in q.select(
+                    "query_id", F.explode(geo.ring_cells(cell, parent_res, ring))
+                ).collect()
+            )
+            assert driver_pairs(parent_res, ring) == want, (parent_res, ring)
+        nx, ny = 2 << parent_res, 1 << parent_res
+        grid = [parent_res * geo._R_SHIFT + x * geo._X_SHIFT + y
+                for x in range(nx) for y in range(ny)]
+        assert driver_pairs(parent_res, None) == sorted(
+            (i, p) for i in coords for p in grid
+        )
 
 
 def test_snapshot_diff_verifies_append_only(spark, tmp_path):

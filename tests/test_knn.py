@@ -8,6 +8,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
+from countrymaam_spark.operators import index_build
 from countrymaam_spark.operators.geotag import extract_geo
 from countrymaam_spark.operators.knn import cell_knn, flat_knn, flat_knn_sql
 from countrymaam_spark.sources import pages as pg
@@ -107,8 +108,8 @@ def test_cell_knn_zero_candidate_round_not_dropped(spark):
 
 def test_knn_null_coordinate_queries_get_no_rows(spark, tmp_path):
     """A query with a NULL (or NaN) lat or lon has no distance to anything:
-    flat_knn, cell_knn and the DuckDB oracle return no rows for it, and the
-    valid queries of the same batch are unaffected."""
+    flat_knn, cell_knn, knn_tree and the DuckDB oracle return no rows for
+    it, and the valid queries of the same batch are unaffected."""
     import pandas as pd
 
     corpus = spark.createDataFrame(
@@ -129,6 +130,23 @@ def test_knn_null_coordinate_queries_get_no_rows(spark, tmp_path):
     want0 = [r for r in want if r[0] == 0]
     assert _key(flat_knn(corpus, q_nan, k=5).collect()) == want0
     assert _key(cell_knn(corpus, q_nan, k=5, res=6).collect()) == want0
+
+    # knn_tree: 90-degree parents and 2-point leaves, so the budgeted ring
+    # reaches the edge parents a NULL or NaN coordinate would encode to
+    trees = index_build.build_tree_blobs(
+        index_build.salt_hot_cells(index_build.encode_pages(corpus, res=7, parent_res=1)),
+        leaf_size=2,
+    )
+
+    def tree(qb):
+        return _key(index_build.knn_tree(
+            trees, qb, k=5, search_k=1, parent_res=1, ring=1
+        ).collect())
+
+    want_tree = tree(q.filter("query_id IN (0, 4)"))
+    assert {r[0] for r in want_tree} == {0, 4}
+    assert tree(q) == want_tree
+    assert tree(q_nan) == [r for r in want_tree if r[0] == 0]
 
     pages_p = str(tmp_path / "pages.parquet")
     queries_p = str(tmp_path / "queries.parquet")
