@@ -19,6 +19,14 @@ overestimating only forfeits a viable broadcast (the shuffle equi-join
 fallback is always correct; at cluster scale the corpus side is bucketed on
 the join key, so only the small side moves), while underestimating
 re-creates the oversized broadcast the gate exists to prevent.
+
+Each regime switch has ONE threshold, a module constant read when the
+operator is called; no operator takes a per-call override. Tests reach the
+other regime by monkeypatching the constant (tests/conftest.py
+``shuffle_regime``). ``DRIVER_GRAPH_EDGE_LIMIT`` is the same pattern
+applied to graph size: the iterative graph operators (``dedup.
+dup_components``, ``linkgraph.pagerank``) solve a graph of at most that
+many edges in one bounded driver collect instead of a distributed loop.
 """
 
 from __future__ import annotations
@@ -30,15 +38,13 @@ from pyspark.sql import functions as F
 # serialized, single-threaded) and take the shuffle equi-join instead
 BROADCAST_STRUCT_LIMIT = 1_000_000
 
+# graphs with at most this many edges are solved on the driver in one
+# bounded collect; larger ones take the distributed iterative loop
+DRIVER_GRAPH_EDGE_LIMIT = 500_000
 
-def gate_broadcast(
-    df: DataFrame, est_rows: int, limit: int | None = None
-) -> DataFrame:
-    """Broadcast ``df`` while ``est_rows`` provably fits under ``limit``
-    (default BROADCAST_STRUCT_LIMIT); otherwise return it un-hinted so the
-    planner picks a distributed shuffle equi-join. ``limit`` is exposed so
-    callers can thread a per-call override (tests pin the regime switch by
-    forcing it to 0)."""
-    if limit is None:
-        limit = BROADCAST_STRUCT_LIMIT
-    return F.broadcast(df) if est_rows <= limit else df
+
+def gate_broadcast(df: DataFrame, est_rows: int) -> DataFrame:
+    """Broadcast ``df`` while ``est_rows`` fits under BROADCAST_STRUCT_LIMIT
+    (read at call time); otherwise return it un-hinted so the planner picks
+    a distributed shuffle equi-join."""
+    return F.broadcast(df) if est_rows <= BROADCAST_STRUCT_LIMIT else df

@@ -196,7 +196,6 @@ def rp_lsh_knn(
     query_vec_col: str = "query_vec",
     seed: int = 42,
     n_probes: int = 1,
-    broadcast_limit: int | None = None,
 ) -> DataFrame:
     """Approximate kNN: union of same-bucket candidates over n_tables random
     hyperplane tables, exact re-rank. -> (query_id, rk, vec_id, dist).
@@ -218,7 +217,7 @@ def rp_lsh_knn(
     return rp_lsh_knn_from_state(
         c_sig, planes, queries, k=k, metric=metric,
         query_id_col=query_id_col, query_vec_col=query_vec_col,
-        n_probes=n_probes, broadcast_limit=broadcast_limit,
+        n_probes=n_probes,
     )
 
 
@@ -231,7 +230,6 @@ def rp_lsh_knn_from_state(
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
     n_probes: int = 1,
-    broadcast_limit: int | None = None,
     n_queries: int | None = None,
 ) -> DataFrame:
     """Serve LSH kNN from PERSISTED state (the signed corpus of
@@ -267,9 +265,7 @@ def rp_lsh_knn_from_state(
     # that fits, shuffle equi-join on (tbl, key) past the limit (one count
     # job on the small query table; at cluster scale the signed corpus is
     # bucketed by (tbl, key), so only the probe side moves)
-    q_sig = gate_broadcast(
-        q_sig, n_queries * n_tables * max(1, n_probes), broadcast_limit
-    )
+    q_sig = gate_broadcast(q_sig, n_queries * n_tables * max(1, n_probes))
     cands = (
         c_sig.join(q_sig, ["tbl", "key"])
         .filter(F.col("cid") != F.col("qid"))
@@ -436,7 +432,6 @@ def ivf_knn_from_state(
     n_probe: int = 4,
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
-    broadcast_limit: int | None = None,
     prune_lists: bool = True,
     n_queries: int | None = None,
 ) -> DataFrame:
@@ -475,7 +470,7 @@ def ivf_knn_from_state(
     # partitioned by list_id — build_ivf_pipeline — so probes prune files)
     if n_queries is None:
         n_queries = queries.count()
-    q_lists = gate_broadcast(q_lists, n_queries * eff_probe, broadcast_limit)
+    q_lists = gate_broadcast(q_lists, n_queries * eff_probe)
     cands = (
         c_lists.join(q_lists, "list_id")
         .filter(F.col("cid") != F.col("qid"))
@@ -505,7 +500,6 @@ def ivf_knn(
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
     seed: int = 42,
-    broadcast_limit: int | None = None,
 ) -> DataFrame:
     """IVF ANN: coarse k-means quantizer -> per-vector inverted list ->
     queries probe their ``n_probe`` nearest lists -> exact re-rank.
@@ -523,7 +517,6 @@ def ivf_knn(
     return ivf_knn_from_state(
         c_lists, cents, queries, k=k, n_probe=n_probe,
         query_id_col=query_id_col, query_vec_col=query_vec_col,
-        broadcast_limit=broadcast_limit,
     )
 
 
@@ -683,7 +676,6 @@ def ivf_knn_u8(
     query_vec_col: str = "query_vec",
     seed: int = 42,
     pre_quantized: bool = False,
-    broadcast_limit: int | None = None,
     n_queries: int | None = None,
 ) -> DataFrame:
     """IVF ANN over the packed-uint8 dtype -> (query_id, rk, vec_id, dist).
@@ -731,7 +723,7 @@ def ivf_knn_u8(
     )
     if n_queries is None:
         n_queries = queries.count()
-    q_lists = gate_broadcast(q_lists, n_queries * eff_probe, broadcast_limit)
+    q_lists = gate_broadcast(q_lists, n_queries * eff_probe)
     cands = (
         c_lists.join(q_lists, "list_id")
         .filter(F.col("cid") != F.col("qid"))
@@ -823,7 +815,6 @@ def ivf_range_search(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
-    broadcast_limit: int | None = None,
 ) -> DataFrame:
     """EXACT vector range search with IVF list pruning — every corpus
     vector within TRUE L2 distance ``tau`` of each query ->
@@ -873,7 +864,7 @@ def ivf_range_search(
         ),
     )
     est = q_lists.count()
-    q_lists = gate_broadcast(q_lists, est, broadcast_limit)
+    q_lists = gate_broadcast(q_lists, est)
     tau_sq = float(tau) * float(tau)
     return (
         asg.join(q_lists, "list_id")
@@ -954,7 +945,6 @@ def ivf_range_search_u8(
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
     pre_quantized: bool = False,
-    broadcast_limit: int | None = None,
 ) -> DataFrame:
     """:func:`ivf_range_search` over the packed-uint8 dtype — and here the
     exactness story is WHOLLY integer: ``tau_sq`` is an integer squared-L2
@@ -997,7 +987,7 @@ def ivf_range_search_u8(
         "qid", "qb",
         F.explode(_lists_within_u8(F.col("qb"), cents, radii, bound)).alias("list_id"),
     )
-    q_lists = gate_broadcast(q_lists, q_lists.count(), broadcast_limit)
+    q_lists = gate_broadcast(q_lists, q_lists.count())
     return (
         asg.join(q_lists, "list_id")
         .filter(F.col("cid") != F.col("qid"))

@@ -105,13 +105,12 @@ def hotspot_pages(
     geo: DataFrame,
     res: int,
     min_pts: int,
-    broadcast_limit: int | None = None,
 ) -> DataFrame:
     """(url, cell, cluster_id): pages inside dense cells, labeled. The label
     table is corpus-independent and rides a broadcast-gated hash join; noise
     pages (sparse cells) are excluded, DBSCAN-style."""
     cells = hotspot_cells(geo, res, min_pts)
-    labels = gate_broadcast(cells.select("cell", "cluster_id"), cells.count(), broadcast_limit)
+    labels = gate_broadcast(cells.select("cell", "cluster_id"), cells.count())
     return (
         geo.filter(F.col("lat").isNotNull())
         .select("url", G.encode_cell(F.col("lat"), F.col("lon"), res).alias("cell"))
@@ -124,13 +123,12 @@ def hotspot_stats(
     geo: DataFrame,
     res: int,
     min_pts: int,
-    broadcast_limit: int | None = None,
 ) -> DataFrame:
     """(cluster_id, n_cells, n_pages, lat_c, lon_c): per-hotspot rollup —
     footprint in cells, population in pages, page-centroid (rounded 6dp).
     One aggregation over the labeled pages; n_cells from the label table."""
     cells = hotspot_cells(geo, res, min_pts).localCheckpoint(eager=True)
-    labels = gate_broadcast(cells.select("cell", "cluster_id"), cells.count(), broadcast_limit)
+    labels = gate_broadcast(cells.select("cell", "cluster_id"), cells.count())
     pages = (
         geo.filter(F.col("lat").isNotNull())
         .select(
@@ -232,7 +230,6 @@ def dbscan_points(
     min_pts: int,
     res: int = 13,
     cell_col: str | None = None,
-    broadcast_limit: int | None = None,
 ) -> DataFrame:
     """(url, role, cluster_id): EXACT DBSCAN (Ester et al. 1996) over the
     geotagged corpus — the point-level companion to the grid approximation
@@ -269,10 +266,7 @@ def dbscan_points(
 
     pts = geo.filter(F.col("lat").isNotNull()).select("url")
     e = (
-        geo_near_pairs(
-            geo, eps_km, res=res, cell_col=cell_col,
-            broadcast_limit=broadcast_limit,
-        )
+        geo_near_pairs(geo, eps_km, res=res, cell_col=cell_col)
         .select("url_a", "url_b")
         .localCheckpoint(eager=True)
     )
@@ -297,7 +291,6 @@ def dbscan_points(
     lbl = gate_broadcast(
         comp.select(F.col("url").alias("v"), "canonical_id"),
         comp.count(),
-        broadcast_limit,
     )
     border = (
         sym.join(lbl, "v")

@@ -58,7 +58,6 @@ def contamination_stats(
     id_col: str = "doc_id",
     text_col: str = "text",
     eval_id_col: str = "eval_id",
-    broadcast_limit: int | None = None,
     eval_grams: DataFrame | None = None,
     eval_grams_rows: int | None = None,
 ) -> DataFrame:
@@ -85,7 +84,7 @@ def contamination_stats(
     if eval_grams_rows is None:
         eval_grams_rows = eval_grams.count()
     hits = grams.join(
-        gate_broadcast(eval_grams, eval_grams_rows, broadcast_limit), "g"
+        gate_broadcast(eval_grams, eval_grams_rows), "g"
     )
     w = Window.partitionBy("did").orderBy("p")
     cov = (
@@ -171,7 +170,6 @@ def contamination_intervals(
     id_col: str = "doc_id",
     text_col: str = "text",
     eval_id_col: str = "eval_id",
-    broadcast_limit: int | None = None,
     eval_grams: DataFrame | None = None,
     eval_grams_rows: int | None = None,
 ) -> DataFrame:
@@ -189,7 +187,7 @@ def contamination_intervals(
     if eval_grams_rows is None:
         eval_grams_rows = eval_grams.count()
     hits = grams.join(
-        gate_broadcast(eval_grams, eval_grams_rows, broadcast_limit), "g"
+        gate_broadcast(eval_grams, eval_grams_rows), "g"
     )
     w = Window.partitionBy("did").orderBy("p")
     isl = (
@@ -251,7 +249,6 @@ def decontaminate(
     id_col: str = "doc_id",
     text_col: str = "text",
     eval_id_col: str = "eval_id",
-    broadcast_limit: int | None = None,
     eval_grams: DataFrame | None = None,
     eval_grams_rows: int | None = None,
 ) -> DataFrame:
@@ -266,7 +263,6 @@ def decontaminate(
         id_col,
         text_col,
         eval_id_col,
-        broadcast_limit,
         eval_grams,
         eval_grams_rows,
     )

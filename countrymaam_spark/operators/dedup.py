@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from countrymaam_spark.functions import text as T
+from countrymaam_spark.operators import adaptive
+from countrymaam_spark.operators.adaptive import gate_broadcast
 
 
 def exact_dup_groups(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -323,7 +325,6 @@ def dup_components(
     pairs: DataFrame,
     id_col: str = "doc_id",
     max_iter: int = 60,
-    driver_limit: int | None = 500_000,
 ) -> DataFrame:
     """Near-dup pairs -> (doc_id, canonical_id): connected components by
     ALTERNATING large-star/small-star rounds (Kiveris et al. 2014) — the
@@ -343,10 +344,11 @@ def dup_components(
     that fits in 2^60 ids under the O(log n) practical bound) RAISES instead
     of returning partially-merged labels. Deterministic: min is order-free.
 
-    ``driver_limit`` is the gate_broadcast pattern applied to graph size:
-    when the RAW edge table (pre-dedup — a cheap upper bound that skips a
-    full shuffle on the small path; duplicate edges are harmless to exact
-    union-find) holds at most this many rows, the components are a
+    The small-graph gate (``adaptive.DRIVER_GRAPH_EDGE_LIMIT``, read at
+    call time) is the gate_broadcast pattern applied to graph size: when
+    the RAW edge table (pre-dedup — a cheap upper bound that skips a full
+    shuffle on the small path; duplicate edges are harmless to exact
+    union-find) holds at most that many rows, the components are a
     SMALL-DATA problem — one bounded collect + exact union-find replaces
     ~8 star rounds x ~4 driver jobs each (measured: the contour/hotspot
     cell graphs are grid-bounded at a few 10^4 edges and their wall time
@@ -354,7 +356,7 @@ def dup_components(
     near-dup graphs — the distributed star loop runs as before (duplicates
     removed there: every round joins the edge set). Identical output by
     construction (same min-label contract, both deterministic); equality
-    is pytest-pinned on random graphs. ``None`` disables the gate.
+    is pytest-pinned on random graphs.
     """
     nodes = docs.select(F.col(id_col).alias("node"))
     # pin the edge table ONCE: `pairs` is usually a lazy candidate pipeline
@@ -368,12 +370,12 @@ def dup_components(
     )
     # NOTE (r5 advisor, low — accepted as documented): the gate counts RAW
     # pre-dedup edges, so an LSH-band generator emitting one pair per band
-    # can exceed driver_limit raw while the deduplicated graph is far below
+    # can exceed the limit raw while the deduplicated graph is far below
     # it — the fast path is then skipped (perf only; output identical). If a
     # band-duplicated pipeline regresses, gate on approx_count_distinct or
     # dedup inside the gate when the raw count lands within a small multiple
     # of the limit.
-    if driver_limit is not None and e.count() <= driver_limit:
+    if e.count() <= adaptive.DRIVER_GRAPH_EDGE_LIMIT:
         labels = _components_driver(e)
         spark = docs.sparkSession
         node_type = nodes.schema["node"].dataType
@@ -392,9 +394,9 @@ def dup_components(
             else pd.DataFrame({"node": [], "_m": []}),
             schema,
         )
-        # the label table is bounded by driver_limit — never shuffle the
-        # node side for it
-        return nodes.join(F.broadcast(comp), "node", "left").select(
+        # the label table (at most 2 x the edge limit rows) broadcasts under
+        # the shared gate — never shuffle the node side for it
+        return nodes.join(gate_broadcast(comp, len(labels)), "node", "left").select(
             F.col("node").alias(id_col),
             F.least(
                 F.col("node"), F.coalesce(F.col("_m"), F.col("node"))

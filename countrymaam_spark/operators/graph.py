@@ -392,7 +392,6 @@ def graph_knn(
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
     stats: dict | None = None,
-    broadcast_limit: int | None = None,
 ) -> DataFrame:
     """Graph-walk kNN -> (query_id, rk, vec_id, dist).
 
@@ -422,7 +421,7 @@ def graph_knn(
     # (one count on the cached query table), else each hop's lookup becomes a
     # shuffle equi-join on qid — millions of query vectors per serving batch
     # must never be driver-serialized once per hop (round-3 verdict #1)
-    q_b = gate_broadcast(q, q.count(), broadcast_limit)
+    q_b = gate_broadcast(q, q.count())
 
     # seeded pseudo-random entry points: only entries_num rows are needed, so
     # orderBy+limit (TakeOrdered — a per-partition top-N merge, NO full-sort
@@ -513,7 +512,6 @@ def composite_knn(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
-    broadcast_limit: int | None = None,
 ) -> DataFrame:
     """Two-stage head/tail search (reference CompositeIndex,
     index/composite_index.go:21-43; the CLI's ``rpaknn``): the head — our
@@ -528,7 +526,6 @@ def composite_knn(
         vecs, queries, k=entries_num, n_tables=n_tables, bits=bits,
         id_col=id_col, vec_col=vec_col,
         query_id_col=query_id_col, query_vec_col=query_vec_col, seed=seed,
-        broadcast_limit=broadcast_limit,
     )
     entries = head.select(
         F.col("query_id").alias(query_id_col), F.col("vec_id").alias(id_col)
@@ -538,5 +535,4 @@ def composite_knn(
         max_hops=max_hops, greedy_hops=greedy_hops, seed=seed, entries=entries,
         id_col=id_col, vec_col=vec_col,
         query_id_col=query_id_col, query_vec_col=query_vec_col,
-        broadcast_limit=broadcast_limit,
     )

@@ -360,7 +360,9 @@ def knn_tree(
         "dist_km",
         geo.haversine_km(F.col("lat"), F.col("lon"), F.col("qlat"), F.col("qlon")),
     )
+    # a url sits in one blob and a blob meets each query once: no dedup
     out = topk_per_group(
-        scored.select("query_id", "url", "dist_km"), ["query_id"], "dist_km", "url", k
+        scored.select("query_id", "url", "dist_km"), ["query_id"], "dist_km", "url", k,
+        dedup=False,
     )
     return out.select("query_id", "rk", "url", F.round("dist_km", 6).alias("dist_km"))

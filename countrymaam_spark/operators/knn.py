@@ -23,6 +23,12 @@ Two paths, mirroring the reference's index zoo:
 A query with a NULL or NaN coordinate has no distance to anything: every
 kNN path here returns no rows for it.
 
+Corpus urls are keys. Every corpus row is a candidate and no path
+deduplicates (query_id, url) before its top-k, so a url stored twice is
+two candidates, and both can be returned, by ``flat_knn``, ``cell_knn``
+and ``index_build.knn_tree`` alike (the tree blobs hold each corpus row
+exactly once, pytest-pinned).
+
 Scale notes (100 TB corpus):
 - EVERY corpus probe is a hash equi-join — never a per-pair predicate scan:
   rings enumerate cells at the parent level that keeps the coarse radius in
@@ -596,7 +602,6 @@ def radius_join(
     radius_km: float,
     res: int = 7,
     cell_col: str | None = None,
-    broadcast_limit: int | None = None,
 ) -> DataFrame:
     """Exact within-distance spatial join: every (query, page) pair with
     ``haversine <= radius_km`` — (query_id, url, dist_km).
@@ -619,7 +624,8 @@ def radius_join(
 
     Scale shape (that of the ``cell_knn`` probe): the exploded
     (query, cell) table is the ONLY thing that moves — estimate-gated
-    broadcast, shuffle equi-join past ~1M structs; the corpus is probed by
+    broadcast, shuffle equi-join past ``adaptive.BROADCAST_STRUCT_LIMIT``
+    structs (the one threshold; no per-call override); the corpus is probed by
     a hash equi-join on ``cell`` (cell-bucketed at cluster scale, never
     shuffled), then the exact haversine filter keeps pairs within the
     radius. For planet-sized radii prefer a coarser ``res``: exactness
@@ -685,7 +691,7 @@ def radius_join(
         "qlon",
         F.explode(geo.ring_cells_xy(qcell, res, F.col("rx"), ry)).alias("jcell"),
     )
-    exploded = gate_broadcast(exploded, int(est or 0), limit=broadcast_limit)
+    exploded = gate_broadcast(exploded, int(est or 0))
     # ring cells are array_distinct and urls unique -> pairs unique; no dedup
     cand = exploded.join(pages_cells, exploded["jcell"] == pages_cells["cell"])
     dist = geo.haversine_km(F.col("lat"), F.col("lon"), F.col("qlat"), F.col("qlon"))
@@ -711,7 +717,6 @@ def geo_near_pairs(
     radius_km: float,
     res: int = 7,
     cell_col: str | None = None,
-    broadcast_limit: int | None = None,
 ) -> DataFrame:
     """Geographic self-join: every unordered page pair within ``radius_km``
     -> (url_a, url_b, dist_km), ``url_a < url_b``.
@@ -739,10 +744,7 @@ def geo_near_pairs(
     """
     both = pages_geo.filter(F.col("lat").isNotNull())
     qs = both.select(F.col("url").alias("query_id"), "lat", "lon")
-    pairs = radius_join(
-        both, qs, radius_km, res=res, cell_col=cell_col,
-        broadcast_limit=broadcast_limit,
-    )
+    pairs = radius_join(both, qs, radius_km, res=res, cell_col=cell_col)
     return pairs.filter(F.col("query_id") < F.col("url")).select(
         F.col("query_id").alias("url_a"),
         F.col("url").alias("url_b"),
@@ -976,7 +978,6 @@ def radius_join_var(
     probes: DataFrame,
     res: int = 7,
     cell_col: str | None = None,
-    broadcast_limit: int | None = None,
 ) -> DataFrame:
     """:func:`radius_join` with a PER-ROW radius: ``probes`` carries
     (probe_id, lat, lon, radius_km) and every (probe, point) pair with
@@ -1057,7 +1058,7 @@ def radius_join_var(
             geo.ring_cells_xy(qcell, res, F.col("rx"), F.col("ry"))
         ).alias("jcell"),
     )
-    exploded = gate_broadcast(exploded, int(est or 0), limit=broadcast_limit)
+    exploded = gate_broadcast(exploded, int(est or 0))
     cand = exploded.join(pages_cells, exploded["jcell"] == pages_cells["cell"])
     dist = geo.haversine_km(F.col("lat"), F.col("lon"), F.col("qlat"), F.col("qlon"))
     # compare at the engine's 6-dp distance contract: per-row radii normally
@@ -1081,7 +1082,6 @@ def reverse_knn(
     res: int = 7,
     target_mod: int | None = None,
     salt: str = "kj0",
-    broadcast_limit: int | None = None,
     **cell_kw,
 ) -> DataFrame:
     """Reverse kNN (influence sets, Korn & Muthukrishnan 2000): for each
@@ -1132,9 +1132,7 @@ def reverse_knn(
     qpts = queries.select(
         F.col("query_id").alias("url"), "lat", "lon"
     )
-    out = radius_join_var(
-        qpts, probes, res=res, broadcast_limit=broadcast_limit
-    )
+    out = radius_join_var(qpts, probes, res=res)
     return out.select(
         F.col("url").alias("query_id"),
         F.col("probe_id").alias("url"),

@@ -110,9 +110,7 @@ def _exploded(pages: DataFrame) -> DataFrame:
     ).select("url", (F.col("pos0") + 1).alias("pos"), "line")
 
 
-def page_line_stats(
-    pages: DataFrame, min_docs: int, broadcast_limit: int | None = None
-) -> DataFrame:
+def page_line_stats(pages: DataFrame, min_docs: int) -> DataFrame:
     """(url, n_lines, n_boiler, total_chars, boiler_chars): per-page
     boilerplate accounting under the df >= min_docs threshold.
 
@@ -122,7 +120,7 @@ def page_line_stats(
     """
     b = boiler_lines(pages, min_docs).localCheckpoint(eager=True)
     marked = _exploded(pages).join(
-        gate_broadcast(b.withColumn("is_b", F.lit(1)), b.count(), broadcast_limit),
+        gate_broadcast(b.withColumn("is_b", F.lit(1)), b.count()),
         "line",
         "left",
     )
@@ -153,9 +151,7 @@ def page_line_stats_sql(pg_rel: str, min_docs: int) -> str:
     """
 
 
-def clean_pages(
-    pages: DataFrame, min_docs: int, broadcast_limit: int | None = None
-) -> DataFrame:
+def clean_pages(pages: DataFrame, min_docs: int) -> DataFrame:
     """(url, clean_text): pages with boilerplate lines removed, remaining
     lines rejoined with ``". "`` in original order.
 
@@ -168,7 +164,7 @@ def clean_pages(
     b = boiler_lines(pages, min_docs).localCheckpoint(eager=True)
     kept = (
         _exploded(pages)
-        .join(gate_broadcast(b, b.count(), broadcast_limit), "line", "left_anti")
+        .join(gate_broadcast(b, b.count()), "line", "left_anti")
     )
     return kept.groupBy("url").agg(
         F.array_join(

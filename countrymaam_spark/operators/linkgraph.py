@@ -43,6 +43,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from countrymaam_spark.operators import adaptive
+
 SCALE = 1_000_000
 DAMP_PCT = 85
 
@@ -61,55 +63,55 @@ def pagerank(
     damp_pct: int = DAMP_PCT,
     scale: int = SCALE,
     checkpoint_every: int = 10,
-    driver_limit: int = 500_000,
 ) -> DataFrame:
     """Fixed-iteration integer PageRank: -> (node, rank_micro).
 
     ``edges``: (src string, dst string), duplicates allowed (parallel
     edges add rank proportionally), self-loops allowed.
 
-    Graphs at or under ``driver_limit`` edges are solved driver-side in one
-    bounded collect (the ``dup_components`` small-graph gate, round-5
-    verified): a sub-10^6-row edge list costs 2 x ``iters`` exchange-stage
-    latencies in the distributed loop while the exact integer recurrence is
-    microseconds in plain Python — bit-identical by construction (both
-    sides are the same BIGINT floor-div/sum recurrence). ``driver_limit=0``
-    forces the distributed loop (the 10^10-edge shape).
+    Graphs of at most ``adaptive.DRIVER_GRAPH_EDGE_LIMIT`` edges (read at
+    call time; the ``dup_components`` small-graph gate) are solved
+    driver-side in one bounded collect: a sub-10^6-row edge list costs
+    2 x ``iters`` exchange-stage latencies in the distributed loop while
+    the exact integer recurrence is microseconds in plain Python —
+    bit-identical by construction (both sides are the same BIGINT
+    floor-div/sum recurrence). Larger graphs take the distributed loop
+    (the 10^10-edge shape).
     """
     base = (100 - damp_pct) * scale // 100
-    if driver_limit:
-        # bounded probe: limit+1 rows decides the regime without a count
-        # job over an unbounded table; oversized graphs discard the probe
-        # and take the distributed loop
-        head = edges.select("src", "dst").limit(driver_limit + 1).collect()
-        if len(head) <= driver_limit:
-            from collections import Counter, defaultdict
+    limit = adaptive.DRIVER_GRAPH_EDGE_LIMIT
+    # bounded probe: limit+1 rows decides the regime without a count job
+    # over an unbounded table; oversized graphs discard the probe and take
+    # the distributed loop
+    head = edges.select("src", "dst").limit(limit + 1).collect()
+    if len(head) <= limit:
+        from collections import Counter, defaultdict
 
-            odeg_d: Counter = Counter(r["src"] for r in head)
-            nodes_d = sorted(
-                {r["src"] for r in head} | {r["dst"] for r in head}
-            )
-            r_d = {n: scale for n in nodes_d}
-            for _ in range(iters):
-                contrib: defaultdict = defaultdict(int)
-                for row in head:
-                    s = row["src"]
-                    contrib[row["dst"]] += (r_d[s] * damp_pct) // (
-                        100 * odeg_d[s]
-                    )
-                r_d = {n: base + contrib[n] for n in nodes_d}
-            spark = edges.sparkSession
-            from pyspark.sql.types import LongType, StructField, StructType
+        odeg_d: Counter = Counter(r["src"] for r in head)
+        nodes_d = sorted(
+            {r["src"] for r in head} | {r["dst"] for r in head}
+        )
+        r_d = {n: scale for n in nodes_d}
+        for _ in range(iters):
+            contrib: defaultdict = defaultdict(int)
+            for row in head:
+                s = row["src"]
+                contrib[row["dst"]] += (r_d[s] * damp_pct) // (
+                    100 * odeg_d[s]
+                )
+            r_d = {n: base + contrib[n] for n in nodes_d}
+        spark = edges.sparkSession
+        from pyspark.sql.types import LongType, StructField, StructType
 
-            schema = StructType(
-                [
-                    StructField("node", edges.schema["src"].dataType),
-                    StructField("rank_micro", LongType()),
-                ]
-            )
-            return spark.createDataFrame(
-                [(n, r_d[n]) for n in nodes_d], schema
-            )
+        schema = StructType(
+            [
+                StructField("node", edges.schema["src"].dataType),
+                StructField("rank_micro", LongType()),
+            ]
+        )
+        return spark.createDataFrame(
+            [(n, r_d[n]) for n in nodes_d], schema
+        )
     # nodes and the degree-annotated edges are re-joined EVERY round: pin
     # them once.  localCheckpoint, not .cache() — checkpoint blocks are
     # GC-released, cached plans leak executor storage from a lazily-

@@ -223,7 +223,6 @@ def nearest_polygon_cells(
     res: int = 5,
     init_radius: int = 2,
     max_rounds: int = 6,
-    broadcast_limit: int | None = None,
 ) -> DataFrame:
     """:func:`nearest_polygon` for polygon sets too large to broadcast-cross:
     every stage is a hash EQUI-join against the polygon COVER-CELL table
@@ -257,7 +256,6 @@ def nearest_polygon_cells(
     e = gate_broadcast(
         edges.select("poly_id", "lat1", "lon1", "lat2", "lon2"),
         edges.count(),
-        broadcast_limit,
     )
     n_polys = cover.select("poly_id").distinct().count()
     target = min(k, n_polys)
@@ -356,7 +354,7 @@ def nearest_polygon_cells(
         "query_id", "qlat", "qlon",
         F.explode(geo.ring_cells_xy(qcell, res, rx_col, ry_col)).alias("cell"),
     )
-    exploded = gate_broadcast(exploded, int(est or 0), limit=broadcast_limit)
+    exploded = gate_broadcast(exploded, int(est or 0))
     cand = (
         exploded.join(cover, "cell")
         .select("query_id", "qlat", "qlon", "poly_id")
@@ -372,7 +370,6 @@ def corridor_join(
     routes: DataFrame,
     radius_km: float,
     res: int = 6,
-    broadcast_limit: int | None = None,
 ) -> DataFrame:
     """Corridor (buffer) join: every page within ``radius_km`` of a route's
     polyline -> (route_id, url, dist_km) with dist = min point-to-segment
@@ -444,7 +441,7 @@ def corridor_join(
         .select("url", "lat", "lon")
         .withColumn("cell", geo.encode_cell(F.col("lat"), F.col("lon"), res))
     )
-    cand = pages_cells.join(gate_broadcast(cover, n_cover, broadcast_limit), "cell").select(
+    cand = pages_cells.join(gate_broadcast(cover, n_cover), "cell").select(
         "route_id", "url", F.col("lat").alias("qlat"), F.col("lon").alias("qlon")
     ).distinct()
     seg = geo.point_segment_dist_km(
@@ -452,7 +449,7 @@ def corridor_join(
         F.col("lat1"), F.col("lon1"), F.col("lat2"), F.col("lon2"),
     )
     scored = (
-        cand.join(gate_broadcast(e, routes.count(), broadcast_limit), "route_id")
+        cand.join(gate_broadcast(e, routes.count()), "route_id")
         .groupBy("route_id", "url")
         .agg(F.min(seg).alias("dist"))
     )

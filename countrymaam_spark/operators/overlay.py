@@ -29,7 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from countrymaam_spark.operators.adaptive import BROADCAST_STRUCT_LIMIT, gate_broadcast
+from countrymaam_spark.operators import adaptive
+from countrymaam_spark.operators.adaptive import gate_broadcast
 from countrymaam_spark.operators.pip import _cover_cells
 
 
@@ -85,7 +86,7 @@ def polygon_overlaps(edges: DataFrame, res: int = 5) -> DataFrame:
         )
         .distinct()
     )
-    if n_edges <= BROADCAST_STRUCT_LIMIT:
+    if n_edges <= adaptive.BROADCAST_STRUCT_LIMIT:
         # dim-sized edge set: all three verify stages (edge-pair crossing,
         # a-in-b, b-in-a) become PROJECTIONS over broadcast per-polygon edge
         # arrays — the former shape reduced each through its own

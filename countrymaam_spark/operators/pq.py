@@ -21,11 +21,11 @@ other index family here (tree descent -> linear re-rank,
    codes NEVER shuffle, and each Arrow batch emits only its per-query
    top-``refine`` partial, so the exchange carries O(|Q| × refine ×
    n_batches-partials) candidate rows, window-finalized like every other
-   top-k here. When the query batch exceeds ``max_scan_queries`` (LUT
-   memory = |Q| × m × ksub doubles), the operator falls back to the
-   broadcast-gated pair join (same gate as ``brute_knn``/``cell_knn``)
-   where the SAME asymmetric distance is computed per pair from the
-   reconstructed centroid — identical semantics, no driver-side LUT state.
+   top-k here. When the query batch exceeds ``MAX_SCAN_QUERIES`` (LUT
+   memory = |Q| × m × ksub doubles; read at call time, no per-call
+   override), the query set is sliced into chunks of that size and each
+   chunk runs the SAME LUT scan — one code-table pass per slice, never a
+   cartesian pair join.
 2. **Exact re-rank** — the top-``refine`` candidate ids join back to the
    raw vectors and the true ``V.sq_l2`` (the oracle's fold order) picks the
    final k. ``refine >= corpus`` therefore makes the whole operator EXACT
@@ -281,8 +281,6 @@ def pq_knn_from_state(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
-    max_scan_queries: int = MAX_SCAN_QUERIES,
-    broadcast_limit: int | None = None,
     n_queries: int | None = None,
     ivf_state: DataFrame | None = None,
     ivf_cents: np.ndarray | None = None,
@@ -295,7 +293,9 @@ def pq_knn_from_state(
 
     ``n_queries``: optional caller-supplied batch size (a streaming serve
     loop knows its maxFilesPerTrigger bound) — skips the per-call count
-    planning job that picks the scan-vs-chunk regime.
+    planning job that picks the scan-vs-chunk regime (a batch of more than
+    ``MAX_SCAN_QUERIES`` queries, read at call time, takes the chunked
+    scan).
 
     ``ivf_state``/``ivf_cents``: optional IVF-PQ serving state. When the
     batch exceeds ``PQ_ROUTE_IVF_SLICES`` chunked-ADC passes over the code
@@ -318,16 +318,16 @@ def pq_knn_from_state(
     if (
         ivf_state is not None
         and ivf_cents is not None
-        and n_queries > PQ_ROUTE_IVF_SLICES * max_scan_queries
+        and n_queries > PQ_ROUTE_IVF_SLICES * MAX_SCAN_QUERIES
     ):
         return ivf_pq_knn_from_state(
             ivf_state, ivf_cents, books, corpus, queries,
             k=k, n_probe=ivf_n_probe, refine=refine,
             id_col=id_col, vec_col=vec_col,
             query_id_col=query_id_col, query_vec_col=query_vec_col,
-            broadcast_limit=broadcast_limit, n_queries=n_queries,
+            n_queries=n_queries,
         )
-    if n_queries <= max_scan_queries:
+    if n_queries <= MAX_SCAN_QUERIES:
         # bounded collect: the SAME query rows every other serving path
         # broadcasts; here they ride the mapInPandas closure as LUTs
         q_rows = [(r["qid"], r["qv"]) for r in q.collect()]
@@ -347,7 +347,7 @@ def pq_knn_from_state(
         # code table, not a cartesian shuffle (the former fallback here,
         # codes.crossJoin(q), planned as CartesianProduct once the gate
         # declined the broadcast — the one plan in the repo that degraded
-        # to a cartesian). Slice the query set into <=max_scan_queries LUT
+        # to a cartesian). Slice the query set into <=MAX_SCAN_QUERIES LUT
         # closures and union the per-slice batch-local top-refine partials:
         # each slice is one pass over the code table, identical kernel and
         # numerics to the small-Q path, and the driver materializes one
@@ -355,7 +355,7 @@ def pq_knn_from_state(
         # each mapInPandas closure). Past ~100k queries against a non-IVF
         # PQ index, route to IVF-PQ instead — probe-pruned lists cut the
         # per-query scan itself rather than re-reading the full code table.
-        chunk = max(1, max_scan_queries)
+        chunk = max(1, MAX_SCAN_QUERIES)
         parts: list[DataFrame] = []
         buf: list = []
         for r in q.toLocalIterator():
@@ -381,7 +381,7 @@ def pq_knn_from_state(
     # exact re-rank: candidates are O(|Q| * refine) — the small side
     c = corpus.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cv"))
     scored = (
-        gate_broadcast(cand, n_queries * refine, broadcast_limit)
+        gate_broadcast(cand, n_queries * refine)
         .join(c, "cid")
         .join(q, "qid")
         .withColumn("dist", V.sq_l2(F.col("cv"), F.col("qv")))
@@ -450,7 +450,6 @@ def ivf_pq_knn_from_state(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     query_vec_col: str = "query_vec",
-    broadcast_limit: int | None = None,
     prune_lists: bool = True,
     n_queries: int | None = None,
 ) -> DataFrame:
@@ -478,7 +477,7 @@ def ivf_pq_knn_from_state(
             state = state.filter(F.col("list_id").isin(probed))
     if n_queries is None:
         n_queries = q.count()
-    qb = gate_broadcast(q_lists, n_queries * eff_probe, broadcast_limit)
+    qb = gate_broadcast(q_lists, n_queries * eff_probe)
     cand = (
         state.join(qb, "list_id")
         .filter(F.col("cid") != F.col("qid"))
@@ -490,7 +489,7 @@ def ivf_pq_knn_from_state(
     )
     c = corpus.select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cv"))
     scored = (
-        gate_broadcast(cand, n_queries * refine, broadcast_limit)
+        gate_broadcast(cand, n_queries * refine)
         .join(c, "cid")
         .join(q, "qid")
         .withColumn("dist", V.sq_l2(F.col("cv"), F.col("qv")))

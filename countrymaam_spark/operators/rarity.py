@@ -67,7 +67,6 @@ def doc_rarity(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_limit: int | None = None,
 ) -> DataFrame:
     """(doc_id, n_toks, sum_w, rarity): corpus-relative rarity per document.
 
@@ -90,7 +89,7 @@ def doc_rarity(
         F.col(id_col).alias("doc_id"), F.explode(T.tokens(F.col(text_col))).alias("tok")
     )
     scored = occurrences.join(
-        gate_broadcast(weights, vocab.count(), broadcast_limit), "tok"
+        gate_broadcast(weights, vocab.count()), "tok"
     )
     n = F.count(F.lit(1))
     return scored.groupBy("doc_id").agg(

@@ -114,7 +114,6 @@ def bm25_topk(
     k: int = 10,
     k1: float = K1,
     b: float = B,
-    broadcast_limit: int | None = None,
 ) -> DataFrame:
     """Top-k BM25 retrieval: -> (query_id, rk, doc_id, score_micro).
 
@@ -148,7 +147,7 @@ def bm25_topk(
     n_docs, sum_dl = int(srow[0]), int(srow[1] or 0)
     return bm25_topk_from_state(
         spark, post, term_df(post), n_docs, sum_dl, queries,
-        k=k, k1=k1, b=b, broadcast_limit=broadcast_limit,
+        k=k, k1=k1, b=b,
     )
 
 
@@ -162,7 +161,6 @@ def bm25_topk_from_state(
     k: int = 10,
     k1: float = K1,
     b: float = B,
-    broadcast_limit: int | None = None,
 ) -> DataFrame:
     """Serve BM25 from PERSISTED index state (postings + df tables from
     ``plans.pipeline.build_text_pipeline`` and the two stats scalars): the
@@ -179,11 +177,11 @@ def bm25_topk_from_state(
 
     # df restricted to the query's terms: vocab rows -> |query terms| rows
     dfq = tdf.join(
-        gate_broadcast(qt.select("term").distinct(), n_qt, broadcast_limit), "term"
+        gate_broadcast(qt.select("term").distinct(), n_qt), "term"
     )
 
-    cand = post.join(gate_broadcast(qt, n_qt, broadcast_limit), "term").join(
-        gate_broadcast(dfq, n_qt, broadcast_limit), "term"
+    cand = post.join(gate_broadcast(qt, n_qt), "term").join(
+        gate_broadcast(dfq, n_qt), "term"
     )
     return _score_and_rank(cand, n_docs, sum_dl, k, k1, b)
 
@@ -230,7 +228,6 @@ def bm25_topk_df(
     k: int = 10,
     k1: float = K1,
     b: float = B,
-    broadcast_limit: int | None = None,
 ) -> DataFrame:
     """BM25 over a query DATAFRAME (query_id, qtext) — the streaming-serve
     form: query tokenization runs in Spark (same JVM split as the corpus
@@ -249,10 +246,10 @@ def bm25_topk_df(
             [], "query_id long, rk long, doc_id long, score_micro long"
         )
     dfq = tdf.join(
-        gate_broadcast(qt.select("term").distinct(), n_qt, broadcast_limit), "term"
+        gate_broadcast(qt.select("term").distinct(), n_qt), "term"
     )
-    cand = post.join(gate_broadcast(qt, n_qt, broadcast_limit), "term").join(
-        gate_broadcast(dfq, n_qt, broadcast_limit), "term"
+    cand = post.join(gate_broadcast(qt, n_qt), "term").join(
+        gate_broadcast(dfq, n_qt), "term"
     )
     return _score_and_rank(cand, n_docs, sum_dl, k, k1, b)
 

@@ -293,7 +293,6 @@ def heavy_hitters(
     threshold: int,
     total: int | None = None,
     capacity: int | None = None,
-    broadcast_limit: int | None = None,
 ) -> DataFrame:
     """EXACT heavy hitters without a full-vocabulary shuffle:
     -> (key_col, cnt), every key occurring >= ``threshold`` times.
@@ -346,7 +345,7 @@ def heavy_hitters(
     )
     n_cand = cand.count()
     return (
-        occ.join(gate_broadcast(cand, n_cand, broadcast_limit), key_col, "semi")
+        occ.join(gate_broadcast(cand, n_cand), key_col, "semi")
         .groupBy(key_col)
         .agg(F.count("*").cast("long").alias("cnt"))
         .filter(F.col("cnt") >= int(threshold))

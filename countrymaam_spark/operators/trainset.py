@@ -49,7 +49,6 @@ def training_chunks(
     max_digit_frac: float = 0.5,
     chunk_size: int = 32,
     chunk_stride: int | None = None,
-    broadcast_limit: int | None = None,
     scrub: bool = False,
 ) -> DataFrame:
     """(url, chunk_id, n_chunk_toks, chunk_text): model-ready passages from
@@ -62,7 +61,7 @@ def training_chunks(
     differ only in rotated PII (session emails, dynamic IPs) collapse to
     one canonical page. A narrow projection; the composition still adds no
     new shuffle class."""
-    cleaned = LN.clean_pages(pages, min_line_docs, broadcast_limit)
+    cleaned = LN.clean_pages(pages, min_line_docs)
     if scrub:
         from countrymaam_spark.operators import scrub as SC
 

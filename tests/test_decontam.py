@@ -69,13 +69,10 @@ def test_planted_overlap_and_interval_union(spark):
     assert got[2] == (5, 0, 0, 0.0)
 
 
-def test_shuffle_regime_identical(spark, docs, evals):
+def test_shuffle_regime_identical(spark, docs, evals, shuffle_regime):
     a = _rows(DC.contamination_stats(docs, evals, L=8, eval_id_col="doc_id"))
-    b = _rows(
-        DC.contamination_stats(
-            docs, evals, L=8, eval_id_col="doc_id", broadcast_limit=0
-        )
-    )
+    with shuffle_regime():
+        b = _rows(DC.contamination_stats(docs, evals, L=8, eval_id_col="doc_id"))
     assert a == b
 
 

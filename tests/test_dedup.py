@@ -5,7 +5,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
-from countrymaam_spark.operators import dedup
+from countrymaam_spark.operators import adaptive, dedup
 
 DOCS = "/root/testdata/sf0.001/documents.parquet"
 
@@ -200,18 +200,19 @@ def test_dup_components_long_chain_converges_logarithmically(spark):
     assert got == {i: 1 for i in range(1, n + 1)}
 
 
-def test_dup_components_raises_on_truncation(spark):
+def test_dup_components_raises_on_truncation(spark, monkeypatch):
     """The advisor's silent-truncation hazard: exhausting max_iter raises
     instead of returning partially-merged canonical ids."""
     import pytest as _pytest
 
     docs = spark.createDataFrame([(i, "x") for i in range(1, 5)], "doc_id long, text string")
     pairs = spark.createDataFrame([(1, 2, 1.0), (2, 3, 1.0)], "id_a long, id_b long, jac double")
+    # an edge limit of 0 pins the DISTRIBUTED loop (the truncation
+    # contract's subject; small graphs otherwise take the exact union-find
+    # gate, which has no rounds to exhaust)
+    monkeypatch.setattr(adaptive, "DRIVER_GRAPH_EDGE_LIMIT", 0)
     with _pytest.raises(RuntimeError, match="did not converge"):
-        # driver_limit=None pins the DISTRIBUTED loop (the truncation
-        # contract's subject; small graphs otherwise take the exact
-        # union-find gate, which has no rounds to exhaust)
-        dedup.dup_components(docs, pairs, max_iter=0, driver_limit=None)
+        dedup.dup_components(docs, pairs, max_iter=0)
 
 
 def test_components_minlabel_sql_long_chain_and_random_graphs():
@@ -534,7 +535,7 @@ def test_dup_representatives_total_on_empty_and_pairless(spark):
     assert got == {1: (1, True), 2: (2, True)}
 
 
-def test_components_driver_gate_equals_star_loop(spark):
+def test_components_driver_gate_equals_star_loop(spark, monkeypatch):
     """The small-graph driver path (bounded collect + union-find) must be
     row-identical to the distributed star fixpoint on seeded random graphs
     with singletons and chains mixed in — same min-label contract."""
@@ -549,10 +550,7 @@ def test_components_driver_gate_equals_star_loop(spark):
         docs = spark.createDataFrame([(x,) for x in nodes], "doc_id string")
         pairs = spark.createDataFrame(edges, "id_a string, id_b string")
         fast = sorted(map(tuple, dedup.dup_components(docs, pairs).collect()))
-        slow = sorted(
-            map(
-                tuple,
-                dedup.dup_components(docs, pairs, driver_limit=None).collect(),
-            )
-        )
+        with monkeypatch.context() as m:
+            m.setattr(adaptive, "DRIVER_GRAPH_EDGE_LIMIT", 0)
+            slow = sorted(map(tuple, dedup.dup_components(docs, pairs).collect()))
         assert fast == slow, seed

@@ -47,6 +47,31 @@ def test_tree_blobs_lineage(spark, geo_small):
     assert a == b
 
 
+def test_blob_urls_partition_the_corpus(spark, geo_small):
+    """Every corpus url sits in exactly one blob of a salted build: the
+    unpacked blob urls equal the corpus urls as a multiset. knn_tree's
+    re-rank relies on it to skip the (query_id, url) dedup."""
+    from collections import Counter
+
+    from countrymaam_spark.operators import kdtree
+
+    cells = index_build.salt_hot_cells(
+        index_build.encode_pages(geo_small, res=7, parent_res=4), target_group_rows=50
+    )
+    trees = index_build.build_tree_blobs(cells, seed=42)
+    assert trees.filter(F.col("salt") > 0).count() > 0
+    blob_urls = Counter()
+    for r in trees.select("blob").toLocalIterator():
+        p = kdtree.unpack_payload(r["blob"])
+        blob_urls.update(
+            kdtree.decode_urls(p["url_buf"], p["url_off"], range(len(p["lat"])))
+        )
+    corpus = Counter(
+        r["url"] for r in geo_small.filter(F.col("lat").isNotNull()).select("url").collect()
+    )
+    assert blob_urls == corpus
+
+
 def test_knn_tree_recall(spark, geo_small):
     cells = index_build.salt_hot_cells(
         index_build.encode_pages(geo_small, res=7, parent_res=4), target_group_rows=2000

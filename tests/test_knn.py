@@ -599,51 +599,52 @@ def test_radius_join_equals_brute(spark, geo_small, queries_small, radius_km, re
     assert got == _brute_radius(geo_small, queries_small, radius_km)
 
 
-def test_radius_join_shuffle_regime_bit_equal(spark, geo_small, queries_small):
-    """Forcing the estimate gate into the shuffle regime (broadcast_limit=0)
-    must not change a single pair — the fallback join is the same relation."""
+def test_radius_join_shuffle_regime_bit_equal(
+    spark, geo_small, queries_small, shuffle_regime
+):
+    """Forcing the estimate gate into the shuffle regime must not change a
+    single pair — the fallback join is the same relation."""
     from countrymaam_spark.operators.knn import radius_join
 
     a = sorted(
         map(tuple, radius_join(geo_small, queries_small, 200.0, res=6).collect())
     )
-    b = sorted(
-        map(
-            tuple,
-            radius_join(
-                geo_small, queries_small, 200.0, res=6, broadcast_limit=0
-            ).collect(),
+    with shuffle_regime():
+        b = sorted(
+            map(tuple, radius_join(geo_small, queries_small, 200.0, res=6).collect())
         )
-    )
     assert a == b and len(a) > 0
 
 
-def test_radius_join_plan_is_equi_join(spark, geo_small, queries_small):
+def _plans_both_regimes(shuffle_regime, make_df):
+    """-> (default plan, forced shuffle-regime plan) of make_df()."""
+
+    def plan():
+        return make_df()._jdf.queryExecution().executedPlan().toString()
+
+    default = plan()
+    with shuffle_regime():
+        return default, plan()
+
+
+def test_radius_join_plan_is_equi_join(
+    spark, geo_small, queries_small, no_auto_broadcast, shuffle_regime
+):
     """The corpus probe must be a hash equi-join on cell in BOTH regimes —
     never a BroadcastNestedLoopJoin/CartesianProduct (the O(corpus x queries)
     shape the cell index exists to avoid) — and the estimate gate must
     actually flip the regime (auto-broadcast disabled so the plan string
     reflects only the gate's decision, as in test_adaptive_broadcast)."""
-    from tests.test_adaptive_broadcast import no_auto_broadcast
-
     from countrymaam_spark.operators.knn import radius_join
 
-    with no_auto_broadcast(spark):
-        for limit in (None, 0):
-            plan = (
-                radius_join(
-                    geo_small, queries_small, 200.0, res=6, broadcast_limit=limit
-                )
-                ._jdf.queryExecution()
-                .executedPlan()
-                .toString()
-            )
-            assert "BroadcastNestedLoopJoin" not in plan
-            assert "CartesianProduct" not in plan
-            if limit == 0:
-                assert "BroadcastHashJoin" not in plan
-            else:
-                assert "BroadcastHashJoin" in plan
+    default, forced = _plans_both_regimes(
+        shuffle_regime, lambda: radius_join(geo_small, queries_small, 200.0, res=6)
+    )
+    for plan in (default, forced):
+        assert "BroadcastNestedLoopJoin" not in plan
+        assert "CartesianProduct" not in plan
+    assert "BroadcastHashJoin" in default
+    assert "BroadcastHashJoin" not in forced
 
 
 def test_radius_join_prebuilt_cell_state_bit_equal(spark, geo_small, queries_small):
@@ -747,23 +748,18 @@ def test_geo_near_pairs_unordered_once(spark, geo_small):
     assert p.filter(F.col("url_a") >= F.col("url_b")).count() == 0
 
 
-def test_geo_near_pairs_plan_no_nested_loop(spark, geo_small):
+def test_geo_near_pairs_plan_no_nested_loop(
+    spark, geo_small, no_auto_broadcast, shuffle_regime
+):
     """Both gate regimes must probe via a hash equi-join on cell (the repo
     invariant: no BroadcastNestedLoopJoin/CartesianProduct on any path)."""
-    from tests.test_adaptive_broadcast import no_auto_broadcast
-
     from countrymaam_spark.operators.knn import geo_near_pairs
 
-    with no_auto_broadcast(spark):
-        for limit in (None, 0):
-            plan = (
-                geo_near_pairs(geo_small, 10.0, res=12, broadcast_limit=limit)
-                ._jdf.queryExecution()
-                .executedPlan()
-                .toString()
-            )
-            assert "BroadcastNestedLoopJoin" not in plan
-            assert "CartesianProduct" not in plan
+    for plan in _plans_both_regimes(
+        shuffle_regime, lambda: geo_near_pairs(geo_small, 10.0, res=12)
+    ):
+        assert "BroadcastNestedLoopJoin" not in plan
+        assert "CartesianProduct" not in plan
 
 
 def test_idw_estimate_matches_oracle_and_bounds(spark, queries_small):

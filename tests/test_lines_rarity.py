@@ -80,11 +80,13 @@ def test_clean_keeps_unique_segments_in_order(spark, pages):
     assert joined.count() == 0
 
 
-def test_line_stats_shuffle_regime_identical(spark, pages):
-    """broadcast_limit=0 forces the distributed equi-join; output must be
-    bit-identical to the broadcast regime (the gate only changes the plan)."""
+def test_line_stats_shuffle_regime_identical(spark, pages, shuffle_regime):
+    """The forced shuffle regime takes the distributed equi-join; output must
+    be bit-identical to the broadcast regime (the gate only changes the
+    plan)."""
     a = _rows(LN.page_line_stats(pages, 10))
-    b = _rows(LN.page_line_stats(pages, 10, broadcast_limit=0))
+    with shuffle_regime():
+        b = _rows(LN.page_line_stats(pages, 10))
     assert a == b
 
 
@@ -104,11 +106,11 @@ def test_rarity_exact_weights_on_planted_corpus(spark):
     assert got == {1: (4, 9, 2.25), 2: (2, 9, 4.5)}
 
 
-def test_rarity_shuffle_regime_identical(spark):
+def test_rarity_shuffle_regime_identical(spark, shuffle_regime):
     docs = spark.read.parquet(DOCS)
-    assert _rows(RY.doc_rarity(docs)) == _rows(
-        RY.doc_rarity(docs, broadcast_limit=0)
-    )
+    a = _rows(RY.doc_rarity(docs))
+    with shuffle_regime():
+        assert _rows(RY.doc_rarity(docs)) == a
 
 
 def test_lines_and_rarity_total_on_empty_input(spark):

@@ -8,6 +8,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
+from countrymaam_spark.operators import adaptive
 from countrymaam_spark.operators import linkgraph as LG
 from countrymaam_spark.sources import pages as pg
 
@@ -92,12 +93,11 @@ def test_host_edges_no_self_loops_and_deterministic(spark):
     assert all(s != d for s, d in e1)
 
 
-def test_pagerank_driver_gate_equals_distributed(spark, edges_df):
+def test_pagerank_driver_gate_equals_distributed(spark, edges_df, monkeypatch):
     """The small-graph driver path (r6) must be bit-identical to the
-    distributed loop (driver_limit=0 forces it) — same BIGINT recurrence."""
+    distributed loop (an edge limit of 0 forces it) — same BIGINT
+    recurrence."""
     fast = {tuple(r) for r in LG.pagerank(edges_df, iters=5).collect()}
-    dist = {
-        tuple(r)
-        for r in LG.pagerank(edges_df, iters=5, driver_limit=0).collect()
-    }
+    monkeypatch.setattr(adaptive, "DRIVER_GRAPH_EDGE_LIMIT", 0)
+    dist = {tuple(r) for r in LG.pagerank(edges_df, iters=5).collect()}
     assert fast == dist and len(fast) > 0

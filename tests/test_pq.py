@@ -48,23 +48,23 @@ def test_pq_full_refine_is_exact_scan_path(spark, corpus, queries, brute):
     assert got == want
 
 
-def test_pq_chunked_path_matches_scan_path(spark, corpus, queries, brute):
-    """max_scan_queries below |Q| forces the big-Q fallback, which now
+def test_pq_chunked_path_matches_scan_path(
+    spark, corpus, queries, brute, monkeypatch, shuffle_regime
+):
+    """MAX_SCAN_QUERIES below |Q| forces the big-Q fallback, which now
     chunks the query set through the same _adc_scan LUT kernel (one code
     table pass per slice) instead of a cartesian pair join: bit-identical
     result at full refine, and NO CartesianProduct anywhere in the plan at
     any |Q| (the old crossJoin fallback degraded to one when the broadcast
     gate declined)."""
-    got = _full(
-        pq.pq_knn(corpus, queries, k=5, m=8, refine=10**9, max_scan_queries=0).collect()
-    )
+    monkeypatch.setattr(pq, "MAX_SCAN_QUERIES", 0)
+    got = _full(pq.pq_knn(corpus, queries, k=5, m=8, refine=10**9).collect())
     assert got == brute
     # 8 queries / chunk size 3 -> 3 slices unioned; plan must stay
     # cartesian-free even with the broadcast gate forced off
-    df = pq.pq_knn(
-        corpus, queries, k=5, m=8, refine=10**9, max_scan_queries=3,
-        broadcast_limit=0,
-    )
+    monkeypatch.setattr(pq, "MAX_SCAN_QUERIES", 3)
+    with shuffle_regime():
+        df = pq.pq_knn(corpus, queries, k=5, m=8, refine=10**9)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert _full(df.collect()) == brute
@@ -223,7 +223,7 @@ def test_ivfpq_pipeline_roundtrip_and_append(spark, corpus, queries, brute, tmp_
     ]
 
 
-def test_pq_empty_batch_with_n_queries_hint(spark, corpus):
+def test_pq_empty_batch_with_n_queries_hint(spark, corpus, monkeypatch):
     """A caller-supplied n_queries > 0 with an actually-empty query table
     (streaming foreachBatch delivers empty micro-batches after restart) must
     return the empty frame on BOTH regimes, not crash in np.stack/parts[0]
@@ -233,15 +233,15 @@ def test_pq_empty_batch_with_n_queries_hint(spark, corpus):
     empty_q = spark.createDataFrame(
         [], "query_id long, query_vec array<double>"
     )
-    # collect path (n_queries <= max_scan_queries)
+    monkeypatch.setattr(pq, "MAX_SCAN_QUERIES", 4)
+    # collect path (n_queries <= MAX_SCAN_QUERIES)
     out = pq.pq_knn_from_state(
         codes, books, corpus, empty_q, k=5, refine=10, n_queries=3
     )
     assert out.count() == 0
-    # chunked path (n_queries > max_scan_queries)
+    # chunked path (n_queries > MAX_SCAN_QUERIES)
     out2 = pq.pq_knn_from_state(
-        codes, books, corpus, empty_q, k=5, refine=10,
-        n_queries=10, max_scan_queries=4,
+        codes, books, corpus, empty_q, k=5, refine=10, n_queries=10
     )
     assert out2.count() == 0
 
@@ -259,18 +259,19 @@ def test_pq_auto_routes_to_ivfpq_at_volume(spark, corpus, queries, brute, monkey
     state = pq.ivf_pq_state(corpus, cents, books)
     codes = pq.pq_codes(corpus, books)
 
+    monkeypatch.setattr(pq, "MAX_SCAN_QUERIES", 1)
     routed = pq.pq_knn_from_state(
         codes, books, corpus, queries, k=5, refine=n,
-        max_scan_queries=1, n_queries=queries.count(),  # 8 > 20*1? no ->
+        n_queries=queries.count(),  # 8 > 20*1? no ->
         ivf_state=state, ivf_cents=cents, ivf_n_probe=4,
     )
-    # 8 queries, max_scan_queries=1 -> 8 slices < 20: must NOT route
+    # 8 queries, MAX_SCAN_QUERIES=1 -> 8 slices < 20: must NOT route
     assert _full(routed.collect()) == brute
 
     monkeypatch.setattr(pq, "PQ_ROUTE_IVF_SLICES", 0)
     routed2 = pq.pq_knn_from_state(
         codes, books, corpus, queries, k=5, refine=n,
-        max_scan_queries=1, n_queries=queries.count(),
+        n_queries=queries.count(),
         ivf_state=state, ivf_cents=cents, ivf_n_probe=4,
     )
     # 8 slices > 0: routes to IVF-PQ; full budget => identical to brute

@@ -104,12 +104,12 @@ def test_bm25_plan_invariants(spark, docs):
     assert "BroadcastHashJoin" in plan
 
 
-def test_bm25_shuffle_regime_same_rows(spark, docs):
-    """broadcast_limit=0 forces the at-volume regime: the query-term joins
-    become shuffle equi-joins (still no nested loop) and the result set is
-    identical."""
+def test_bm25_shuffle_regime_same_rows(spark, docs, shuffle_regime):
+    """The forced at-volume regime: the query-term joins become shuffle
+    equi-joins (still no nested loop) and the result set is identical."""
     base = {tuple(r) for r in S.bm25_topk(spark, docs, QUERIES, k=10).collect()}
-    forced = S.bm25_topk(spark, docs, QUERIES, k=10, broadcast_limit=0)
+    with shuffle_regime():
+        forced = S.bm25_topk(spark, docs, QUERIES, k=10)
     plan = forced._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
