@@ -163,7 +163,7 @@ def _pages_geo_rel(sf: str) -> str:
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: cell-index kNN join (candidate rings + exact re-rank)."""
+    """Flagship: cell-index kNN join (candidate cells + exact re-rank)."""
     sf_dir = "/root/testdata/sf0.001"
     g = _pages_geo(spark, sf_dir).select("url", "lat", "lon")
     q = PG.load_knn_queries(spark, sf_dir)
@@ -435,7 +435,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     def _knn_cell_pruned(s, d):
         # partition-pruned serving: the corpus snapshot directory-partitioned
         # on the res-3 parent cell (Iceberg partition-spec analog), the probe
-        # reading only the parent directories its rings and bands touch
+        # reading only the parent directories of its probed cells
         # (literal IN => PartitionFilters at plan time). The cover is exact,
         # so the oracle is the same exact-kNN SQL
         import tempfile

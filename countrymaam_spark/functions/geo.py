@@ -21,10 +21,13 @@ generation walks grid rings (analog of best-first tree descent,
 
 Every function here has a ``*_SQL`` template string used verbatim by the
 DuckDB oracle so engine and oracle share one formula definition.
+``bbox_min_dist_km_np`` is the one numpy twin: the same bound, evaluated
+by driver-side plans.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -240,15 +243,21 @@ def bbox_min_dist_km(
 ) -> Column:
     """SOUND great-circle lower bound (km) on the distance from a point to
     any point inside a lat/lon rectangle — the pruning bound for
-    nearest-polygon search (Spark-side only; the oracle never prunes).
+    nearest-polygon search and for ``cell_knn``'s probe (whose driver plan
+    evaluates the identical formula in numpy, :func:`bbox_min_dist_km_np`).
 
-    Derivation: for q = (lat2, lon2) in the rect, cos(theta) =
-    sin(p)sin(q) + cos(p)cos(q)cos(dlon) with |dlon| >= the wrapped gap to
-    the rect's longitude interval, and cos latitudes are non-negative, so
-    cos(theta) <= sin(p)sin(lat2) + cos(p)cos(dgap)cos(lat2). That upper
-    envelope is a sinusoid in lat2 with its maximum at
-    atan2(sin(p), cos(p)cos(dgap)) — clamped to [lat_lo, lat_hi] it gives
-    the max cos(theta) over the rect, hence the min angle. Tight when the
+    Derivation: for q = (lat2, lon2) in the rect, haversine's
+    a = sin^2((lat2 - p)/2) + cos(p)cos(lat2)sin^2(dlon/2) with |dlon| >= g,
+    the wrapped gap to the rect's longitude interval, and cos latitudes are
+    non-negative, so a >= f(lat2) = sin^2((lat2 - p)/2)
+    + cos(p)cos(lat2)sin^2(g/2) = (1 - A cos(lat2 - opt))/2: a sinusoid in
+    lat2 with amplitude A = sqrt(1 - cos^2(p) sin^2(g)) and its minimum at
+    opt = atan2(sin(p), cos(p)cos(g)). With opt inside [lat_lo, lat_hi] the
+    bound is (1 - A)/2, else f at the better edge. The distance is
+    haversine's 2R asin(sqrt(a)), and (1 - A)/2 is evaluated as
+    x / (2(1 + sqrt(1 - x))), x = cos^2(p) sin^2(g): both keep full
+    precision near 0, where an acos form is off by up to 0.1 km and, for a
+    point inside the rect, exceeds the true distance 0. Tight when the
     optimum latitude is reachable; always a true lower bound (property-
     tested against random edges in tests/test_geo_functions.py).
     """
@@ -261,18 +270,45 @@ def bbox_min_dist_km(
         (plon >= lon_lo) & (plon <= lon_hi), F.lit(0.0)
     ).otherwise(F.least(wrapped(plon, lon_lo), wrapped(plon, lon_hi)))
     sp, cp = F.sin(F.radians(plat)), F.cos(F.radians(plat))
-    b = cp * F.cos(F.radians(dgap))
+    g = F.radians(dgap)
+    hg = F.pow(F.sin(g / 2.0), 2)
 
-    def cos_theta(lat2: Column) -> Column:
-        return sp * F.sin(F.radians(lat2)) + b * F.cos(F.radians(lat2))
+    def f(lat2: Column) -> Column:
+        return F.pow(F.sin(F.radians(lat2 - plat) / 2.0), 2) + cp * F.cos(F.radians(lat2)) * hg
 
-    opt_lat = F.degrees(F.atan2(sp, b))
-    best = F.when(
-        (opt_lat >= lat_lo) & (opt_lat <= lat_hi),
-        F.sqrt(sp * sp + b * b),  # sinusoid amplitude = value at its max
-    ).otherwise(F.greatest(cos_theta(lat_lo), cos_theta(lat_hi)))
-    best = F.least(F.lit(1.0), F.greatest(F.lit(-1.0), best))
-    return F.lit(EARTH_RADIUS_KM) * F.acos(best)
+    opt_lat = F.degrees(F.atan2(sp, cp * F.cos(g)))
+    x = F.pow(cp * F.sin(g), 2)
+    a = F.when(
+        (opt_lat >= lat_lo) & (opt_lat <= lat_hi), x / (2.0 * (1.0 + F.sqrt(1.0 - x)))
+    ).otherwise(F.least(f(lat_lo), f(lat_hi)))
+    return F.lit(2.0 * EARTH_RADIUS_KM) * F.asin(F.sqrt(F.least(a, F.lit(1.0))))
+
+
+def bbox_min_dist_km_np(plat, plon, lat_lo, lat_hi, lon_lo, lon_hi) -> np.ndarray:
+    """:func:`bbox_min_dist_km` on numpy arrays, step for step (driver-side
+    plans; parity with the Column form is pytest-pinned)."""
+    def wrapped(a, b):
+        d = np.abs(a - b)
+        return np.minimum(d, 360.0 - d)
+
+    dgap = np.where(
+        (plon >= lon_lo) & (plon <= lon_hi), 0.0,
+        np.minimum(wrapped(plon, lon_lo), wrapped(plon, lon_hi)),
+    )
+    sp, cp = np.sin(np.radians(plat)), np.cos(np.radians(plat))
+    g = np.radians(dgap)
+    hg = np.sin(g / 2.0) ** 2
+
+    def f(lat2):
+        return np.sin(np.radians(lat2 - plat) / 2.0) ** 2 + cp * np.cos(np.radians(lat2)) * hg
+
+    opt_lat = np.degrees(np.arctan2(sp, cp * np.cos(g)))
+    x = (cp * np.sin(g)) ** 2
+    a = np.where(
+        (opt_lat >= lat_lo) & (opt_lat <= lat_hi), x / (2.0 * (1.0 + np.sqrt(1.0 - x))),
+        np.minimum(f(lat_lo), f(lat_hi)),
+    )
+    return 2.0 * EARTH_RADIUS_KM * np.arcsin(np.sqrt(np.minimum(a, 1.0)))
 
 
 def quadkey(xt: Column, yt: Column, z: int) -> Column:

@@ -9,16 +9,17 @@ Two paths, mirroring the reference's index zoo:
   oracle, and the right plan when |queries| is small enough to broadcast —
   one pass over the corpus, no shuffle of the big side.
 
-- ``cell_knn`` — candidate generation via quad-cell ring lookup + exact
-  haversine re-rank, the Spark form of best-first tree descent + re-rank
-  (reference index/bsp_tree_index.go:35-92). The driver plans each
-  query's probe from the per-cell counts (the reference plans from subtree
-  counts, bsp_tree/bsp_tree.go:22-60): the smallest ring holding k points
-  bounds the k-th distance by D, and the probe ring is sized so that every
-  point outside it is provably farther than D (branch-and-bound with the
-  bound known up front), so ONE probe is exact while touching only candidate
-  cells. It has no candidate budget: the reference's recall-vs-effort knob
-  (countrymaam.go:40-45) is ``index_build.knn_tree(search_k=)``.
+- ``cell_knn`` — candidate generation via a cell probe + exact haversine
+  re-rank, the Spark form of best-first tree descent + re-rank (reference
+  index/bsp_tree_index.go:35-92). The driver plans each query's probe from
+  the per-cell counts (the reference plans from subtree counts,
+  bsp_tree/bsp_tree.go:22-60): the smallest ring holding k points bounds
+  the k-th distance by D, and the probe is every non-empty cell whose
+  sound lower bound is <= D — the reference's leaf pruning by a lower
+  bound, with the bound known up front — so ONE probe is exact while
+  touching only candidate cells. It has no candidate budget: the
+  reference's recall-vs-effort knob (countrymaam.go:40-45) is
+  ``index_build.knn_tree(search_k=)``.
 
 A query with a NULL or NaN coordinate has no distance to anything: every
 kNN path here returns no rows for it.
@@ -30,15 +31,14 @@ and ``index_build.knn_tree`` alike (the tree blobs hold each corpus row
 exactly once, pytest-pinned).
 
 Scale notes (100 TB corpus):
-- EVERY corpus probe is a hash equi-join — never a per-pair predicate scan:
-  rings enumerate cells at the parent level that keeps the coarse radius in
-  [2, 4] and join on (level, parent cell); full-wrap latitude bands explode
-  to the coarse y-rows they span and join on (level, row id), with the exact
-  range filter after.
-- the exploded (query, cell) side is broadcast while small (sized exactly
-  from the plan) and becomes a distributed shuffle join beyond ~1M rows;
-  the corpus side never shuffles (at cluster scale it is a cell-bucketed
-  table).
+- EVERY corpus probe is a hash equi-join on ``cell`` — never a per-pair
+  predicate scan and never a per-row explode of the corpus: ``cell_knn``
+  ships one (query, cell) row per probed non-empty cell, so its probe table
+  is never larger than the candidates it yields; the radius joins explode
+  each query's ring of cells.
+- the (query, cell) side is broadcast while small (sized exactly from the
+  plan) and becomes a distributed shuffle join beyond ~1M rows; the corpus
+  side never shuffles (at cluster scale it is a cell-bucketed table).
 - the plan runs on the driver: the batch and the ``lv == res`` slice of the
   count lut are collected, and the dense count grid and its summed-area
   table take 2^(2 res + 1) int64 each (256 KB at res 7, 64 MB at res 11).
@@ -281,18 +281,23 @@ def update_cell_lut(
     )
 
 
-def _shift_of(m: np.ndarray, res: int) -> np.ndarray:
-    """Coarse-enumeration shift for a ring/band of radius ``m`` fine cells:
-    the parent level ``res - s`` keeps the coarse radius in [2, 4]."""
-    return np.clip(np.floor(np.log2(np.maximum(m, 1))).astype(np.int64) - 1, 0, res)
+def _cell_corpus(pages_geo: DataFrame, res: int, cell_col: str | None = None) -> DataFrame:
+    """(url, lat, lon, cell) of every geotagged page, widened: ``cell`` is
+    ``cell_col`` of a corpus already encoded at ``res`` (index state: no
+    per-batch encode) or ``geo.encode_cell`` at ``res``."""
+    cell = F.col(cell_col) if cell_col else geo.encode_cell(F.col("lat"), F.col("lon"), res)
+    return _widen(
+        pages_geo.filter(F.col("lat").isNotNull()).select("url", "lat", "lon", cell.alias("cell"))
+    )
 
 
 def _plan_rings(
     qlat: np.ndarray, qlon: np.ndarray, cells: np.ndarray, cnts: np.ndarray,
     res: int, k: int,
-) -> dict[str, np.ndarray]:
-    """Per-query exact probe (query cell qx, qy; rx, ry, band, s) from the
-    per-cell counts.
+) -> tuple[np.ndarray, np.ndarray]:
+    """Per-query distance bound (D, ry) from the per-cell counts: the k
+    nearest points lie within D of the query, and every cell holding a point
+    within D lies in rows ``qy - ry .. qy + ry``.
 
     1. The count ring: the smallest Chebyshev ring r around the query cell
        holding >= k points, found by a binary search over a summed-area
@@ -303,19 +308,17 @@ def _plan_rings(
        hav(d) <= hav(dphi_max) + cos(qlat) * maxcos * hav(dlam_max), with
        the largest latitude / wrapped longitude offsets and the largest
        cos(lat) over the ring's rows.
-    3. The probe ring (rx, ry) is sized so that the distance to every point
-       OUTSIDE it is provably > D — ry from the meridian bound ry*cd*KM, rx
-       from the longitude bound 2R*cmin*sin(rx*cd/2) with cmin the cosine
-       at the band's pole-ward edge. Where that bound cannot reach D (high
-       latitude, wide rings) the probe is the full-wrap latitude band. So
-       the probe holds the k nearest points, ties included.
+    3. ry from the meridian bound: a row more than ry rows away is more than
+       ry * cd degrees of latitude, so more than D, from the query.
 
-    A corpus with fewer than k points probes the whole globe. Counts that
-    trail the corpus (an append not yet in the lut) only widen rings; counts
-    ABOVE the corpus's would break exactness, so ``stats`` must never lead
-    the corpus it describes."""
+    A corpus with fewer than k points gives D = inf and every row. Counts
+    that trail the corpus's only widen D; counts ABOVE the corpus's would
+    break exactness, so ``stats`` must never lead the corpus it describes."""
     nx, ny = 2 << res, 1 << res
     cd = geo.cell_deg(res)
+    n = len(qlat)
+    if int(cnts.sum()) < k:  # the whole globe: every point is a neighbour
+        return np.full(n, np.inf), np.full(n, ny, np.int64)
     grid = np.zeros((ny, nx), np.int64)
     np.add.at(grid, (cells % geo._X_SHIFT, (cells % geo._R_SHIFT) // geo._X_SHIFT), cnts)
     sat = np.zeros((ny + 1, nx + 1), np.int64)
@@ -333,11 +336,6 @@ def _plan_rings(
         part = np.where(lo < hi, left_of(hi) - left_of(lo), left_of(nx) - left_of(lo) + left_of(hi))
         return np.where(2 * r + 1 >= nx, left_of(nx), part)
 
-    n = len(qlat)
-    if int(grid.sum()) < k:  # the whole globe: every point is a neighbour
-        ry = np.full(n, ny, np.int64)
-        return {"qx": qx, "qy": qy, "rx": np.full(n, nx // 2, np.int64), "ry": ry,
-                "band": np.ones(n, bool), "s": _shift_of(ry, res)}
     lo, hi = np.zeros(n, np.int64), np.full(n, ny, np.int64)  # ring ny: every cell
     while (lo < hi).any():
         mid = (lo + hi) // 2
@@ -361,91 +359,63 @@ def _plan_rings(
     hav = (np.sin(np.radians(dphi) / 2) ** 2
            + np.cos(np.radians(qlat)) * maxcos * np.sin(np.radians(dlam) / 2) ** 2)
     d = 2.0 * geo.EARTH_RADIUS_KM * np.arcsin(np.sqrt(np.minimum(hav, 1.0)))
-    # slack far above float error in the engine's haversine and cell floors
+    # slack far above float error in the engine's haversine, the cell floors
+    # and the probe's lower bound
     d = d * (1 + 1e-9) + 1e-6
-
     ry = np.minimum(np.floor(d / (cd * geo.KM_PER_DEG)).astype(np.int64) + 1, ny)
-    cmin = np.cos(np.radians(np.minimum(np.abs(qlat) + (ry + 1) * cd, 90.0)))
-    a = d / (2.0 * geo.EARTH_RADIUS_KM * np.maximum(cmin, 1e-300))
-    rx = np.floor(np.degrees(2.0 * np.arcsin(np.minimum(a, 1.0))) / cd).astype(np.int64) + 1
-
-    def lon_bound(rx):
-        return 2.0 * geo.EARTH_RADIUS_KM * cmin * np.sin(np.radians(np.minimum(rx * cd, 180.0)) / 2)
-
-    rx += lon_bound(rx) <= d
-    band = (a >= 1.0) | (2 * rx + 1 >= nx)
-    rx = np.where(band, nx // 2, rx)
-    s = np.where(band, _shift_of(ry, res), _shift_of(np.maximum(rx, ry), res))
-    return {"qx": qx, "qy": qy, "rx": rx, "ry": ry, "band": band, "s": s}
+    return d, ry
 
 
-def _band_key(t, crow):
-    """Probe key of coarse row ``crow`` (rows of height 2^t) of a latitude
-    band: negative, so it never collides with a cell id. Works on numpy
-    arrays and on Columns alike."""
-    return -(((t + 1) << 32) + crow)
+def _probe_table(
+    batch: pd.DataFrame, d: np.ndarray, ry: np.ndarray, cells: np.ndarray, res: int
+) -> pd.DataFrame:
+    """The probe (query_id, qlat, qlon, cell): every cell of ``cells`` (the
+    non-empty cells at ``res``) in the query's rows ``qy +- ry`` whose lower
+    bound ``geo.bbox_min_dist_km_np`` is <= the query's D — every cell that
+    can hold one of its k nearest points, and no empty one.
 
-
-def _probe_table(plan: pd.DataFrame, res: int) -> pd.DataFrame:
-    """Every probe key of the batch -> (query_id, qlat, qlon, key, ylo, yhi)
-    plus the fine-cell rectangle x0..x1, y0..y1 the key stands for.
-
-    A ring enumerates the coarse cells at level ``res - s`` that cover its
-    fine ring (ceil-division cover, x wraps, y clips — what
-    ``geo.ring_cells_xy`` yields); cell ids carry their level, so rings of
-    different levels share one key space. A band enumerates the coarse rows
-    of height 2^s it spans, and [ylo, yhi] is its exact fine y range (a
-    ring's is every row)."""
+    Vectorized over the batch: with the cells sorted by (y, x), one
+    ``searchsorted`` slice per query holds its rows."""
     nx, ny = 2 << res, 1 << res
-    qx, qy, rx, ry, s = (plan[c].to_numpy(np.int64) for c in ("qx", "qy", "rx", "ry", "s"))
-    band = plan["band"].to_numpy(bool)
-    w = np.left_shift(1, s)
-
-    i = np.flatnonzero(~band)
-    nxc, nyc = nx >> s[i], ny >> s[i]
-    cx, cy = qx[i] >> s[i], qy[i] >> s[i]
-    rcx = np.minimum(-(-rx[i] // w[i]), nxc // 2)
-    rcy = -(-ry[i] // w[i])
-    span = int(max(rcx.max(), rcy.max())) if len(i) else 0
-    offs = np.arange(-span, span + 1)
-    dx, dy = (o.ravel() for o in np.meshgrid(offs, offs))
-    y = cy[:, None] + dy
-    qi, o = np.nonzero(
-        (np.abs(dx) <= rcx[:, None]) & (np.abs(dy) <= rcy[:, None]) & (y >= 0) & (y < nyc[:, None])
-    )
-    x, y, sr, q = (cx[qi] + dx[o]) % nxc[qi], y[qi, o], s[i][qi], i[qi]
-    rings = pd.DataFrame({
-        "q": q, "key": (res - sr) * geo._R_SHIFT + x * geo._X_SHIFT + y, "ylo": 0, "yhi": ny - 1,
-        "x0": x << sr, "x1": ((x + 1) << sr) - 1, "y0": y << sr, "y1": ((y + 1) << sr) - 1,
-    }).drop_duplicates(["q", "key"])
-
-    j = np.flatnonzero(band)
-    ylo, yhi = qy[j] - ry[j], qy[j] + ry[j]
-    lo = np.maximum(ylo >> s[j], 0)
-    n_rows = np.minimum(yhi >> s[j], np.maximum(ny >> s[j], 1) - 1) - lo + 1
-    qj, o = np.nonzero(np.arange(int(n_rows.max()) if len(j) else 0) < n_rows[:, None])
-    bands = pd.DataFrame({
-        "q": j[qj], "key": _band_key(s[j][qj], lo[qj] + o), "ylo": ylo[qj], "yhi": yhi[qj],
-        "x0": 0, "x1": nx - 1, "y0": np.maximum(ylo[qj], 0), "y1": np.minimum(yhi[qj], ny - 1),
+    cd = geo.cell_deg(res)
+    x, y = (cells % geo._R_SHIFT) // geo._X_SHIFT, cells % geo._X_SHIFT
+    order = np.argsort(y * nx + x)
+    cells, x, y = cells[order], x[order], y[order]
+    qlat, qlon = batch["lat"].to_numpy(float), batch["lon"].to_numpy(float)
+    _, qy = _cell_xy(qlat, qlon, res)
+    key = y * nx + x
+    lo = np.searchsorted(key, np.maximum(qy - ry, 0) * nx)
+    n = np.searchsorted(key, (np.minimum(qy + ry, ny - 1) + 1) * nx) - lo
+    # bound the (query, cell) pairs in slices of the batch holding about
+    # max(|cells|, |batch|) pairs each, so the transient stays a small
+    # multiple of the arrays already on the driver (a 19.6k-query self-join
+    # has 3.7M pairs)
+    block = (np.cumsum(n) - n) // max(len(cells), len(batch))
+    kept = []
+    for qs in np.split(np.arange(len(batch)), np.flatnonzero(np.diff(block)) + 1):
+        q = np.repeat(qs, n[qs])
+        i = np.arange(len(q)) - np.repeat(np.cumsum(n[qs]) - n[qs], n[qs]) + lo[q]
+        lb = geo.bbox_min_dist_km_np(
+            qlat[q], qlon[q], y[i] * cd - 90.0, (y[i] + 1) * cd - 90.0,
+            x[i] * cd - 180.0, (x[i] + 1) * cd - 180.0,
+        )
+        keep = lb <= d[q]
+        kept.append((q[keep], i[keep]))
+    q, i = (np.concatenate(a) for a in zip(*kept))
+    return pd.DataFrame({
+        "query_id": batch["query_id"].to_numpy()[q], "qlat": qlat[q], "qlon": qlon[q],
+        "cell": cells[i],
     })
-    probe = pd.concat([rings, bands], ignore_index=True)
-    return plan[["query_id", "qlat", "qlon"]].iloc[probe["q"]].reset_index(drop=True).join(
-        probe.drop(columns="q").astype(np.int64)
-    )
 
 
 def _parent_cover(probe: pd.DataFrame, res: int, ppr: int) -> list[int]:
-    """Parent cells at ``ppr`` of every fine cell the probe keys stand for:
-    exactly the directories the probe can read rows from."""
-    d = res - ppr
-    npx, npy = 2 << ppr, 1 << ppr
-    x0, x1, y0, y1 = (probe[c].to_numpy(np.int64) >> d for c in ("x0", "x1", "y0", "y1"))
-    # 2-D difference array: +1/-1 at the rectangle corners, then prefix sums
-    mark = np.zeros((npy + 1, npx + 1), np.int64)
-    for yy, xx, v in ((y0, x0, 1), (y0, x1 + 1, -1), (y1 + 1, x0, -1), (y1 + 1, x1 + 1, 1)):
-        np.add.at(mark, (yy, xx), v)
-    py, px = np.nonzero(mark.cumsum(0).cumsum(1)[:npy, :npx] > 0)
-    return [ppr * geo._R_SHIFT + int(x) * geo._X_SHIFT + int(y) for x, y in zip(px, py)]
+    """The distinct parent cells at ``ppr`` of the probed cells: exactly the
+    directories the probe reads rows from."""
+    c, d = probe["cell"].to_numpy(np.int64), res - ppr
+    return np.unique(
+        ppr * geo._R_SHIFT + (((c % geo._R_SHIFT) // geo._X_SHIFT) >> d) * geo._X_SHIFT
+        + ((c % geo._X_SHIFT) >> d)
+    ).tolist()
 
 
 def cell_knn(
@@ -458,55 +428,49 @@ def cell_knn(
     stats: DataFrame | None = None,
     partition_parent_res: int | None = None,
 ) -> DataFrame:
-    """Exact kNN via ONE count-bounded cell-ring probe + re-rank.
+    """Exact kNN via ONE count-bounded cell probe + re-rank.
 
     The driver plans the batch: it collects the queries (a query with a NULL
-    or NaN coordinate gets no rows) and the per-cell counts, and sizes each
-    query's probe in numpy (:func:`_plan_rings`) so that it provably holds
-    the exact top-k. The returned DataFrame is lazy: the probe, the exact
-    haversine and the top-k run in the caller's action. There is no
-    candidate budget; ``index_build.knn_tree`` is the budgeted path.
+    or NaN coordinate gets no rows) and the per-cell counts, bounds each
+    query's k-th distance by D (:func:`_plan_rings`) and probes exactly the
+    non-empty cells whose lower bound is <= D (:func:`_probe_table`), which
+    provably hold the exact top-k. The returned DataFrame is lazy: the
+    probe, the exact haversine and the top-k run in the caller's action.
+    There is no candidate budget; ``index_build.knn_tree`` is the budgeted
+    path.
 
     The counts come from ``stats`` — the planning lut from
     :func:`build_cell_lut` (its ``lv == res`` slice) that
     ``load_cell_state`` returns, or a plain :func:`build_cell_stats` table —
-    or, without ``stats``, from one aggregation over the corpus. Index-state
-    serving (the production shape) passes ``stats`` plus ``cell_col``
-    naming a column of ``pages_geo`` already encoded at ``res`` (the
-    persisted, cell-bucketed corpus table): serving then performs NO
-    per-batch corpus encode and NO corpus aggregation; only the probe
-    touches the corpus. Both are opt-in and explicit because a stray
-    ``cell`` column encoded at a different resolution would silently corrupt
-    candidate generation. Results are bit-identical to the stateless path
-    (pytest-pinned).
+    or, without ``stats``, from one aggregation over the corpus. Every cell
+    the corpus holds a page in must have a positive count: the probe reads
+    only counted cells. Index-state serving (the production shape) passes
+    ``stats`` plus ``cell_col`` naming a column of ``pages_geo`` already
+    encoded at ``res`` (the persisted, cell-bucketed corpus table): serving
+    then performs NO per-batch corpus encode and NO corpus aggregation; only
+    the probe touches the corpus. Both are opt-in and explicit because a
+    stray ``cell`` column encoded at a different resolution would silently
+    corrupt candidate generation. Results are bit-identical to the
+    stateless path (pytest-pinned).
 
     ``partition_parent_res``: when the persisted corpus is
     directory-partitioned on a coarse ``parent`` cell
     (``build_cell_pipeline(partition_parent_res=...)``), pass that res here
-    and the probe reads ONLY the directories its rings and bands touch — a
-    literal ``parent IN (...)`` planned on the driver from the exact parent
-    cover of the probe keys (the IVF probed-list prune, spatially). A
+    and the probe reads ONLY the directories of its probed cells — a
+    literal ``parent IN (...)`` planned on the driver from the distinct
+    parents of the probe's cells (the IVF probed-list prune, spatially). A
     metro-concentrated batch then scans that metro's files instead of the
     whole corpus. The prune is skipped when the cover reaches half the
     parent grid (a scan is cheaper than a 1000-term IN).
 
-    ``timings`` receives ``plan_radius`` (the driver plan's seconds) and,
-    when a prune cover is planned, ``prune_parents_round0`` (its size).
+    ``timings`` receives ``plan_radius`` (the driver plan's seconds),
+    ``probe_rows`` (the probe table's rows), ``cands_per_query_p50`` and
+    ``cands_per_query_max`` (the counted pages of each query's probed
+    cells: the candidates it examines) and, when a prune cover is planned,
+    ``prune_parents_round0`` (its size).
     """
     t0 = time.time()
     spark = pages_geo.sparkSession
-    if cell_col is not None:
-        # pre-encoded corpus (index state): no per-batch encode
-        narrow = pages_geo.filter(F.col("lat").isNotNull()).select(
-            "url", "lat", "lon", F.col(cell_col).alias("cell")
-        )
-    else:
-        narrow = (
-            pages_geo.filter(F.col("lat").isNotNull())
-            .select("url", "lat", "lon")
-            .withColumn("cell", geo.encode_cell(F.col("lat"), F.col("lon"), res))
-        )
-    pages_cells = _widen(narrow)
     if partition_parent_res is not None:
         if cell_col is None or "parent" not in pages_geo.columns:
             raise ValueError(
@@ -528,16 +492,16 @@ def cell_knn(
     elif stats is not None:
         counts = stats
     else:
-        counts = build_cell_stats(pages_cells, res, cell_col="cell")
+        counts = build_cell_stats(pages_geo, res, cell_col=cell_col)
     counts = counts.select("cell", "cnt").toPandas()
-    cells = counts["cell"].to_numpy(np.int64)
+    cells, cnts = counts["cell"].to_numpy(np.int64), counts["cnt"].to_numpy(np.int64)
     if (cells // geo._R_SHIFT != res).any():
         raise ValueError(f"stats cells are not at res {res}")
-    qlat, qlon = batch["lat"].to_numpy(float), batch["lon"].to_numpy(float)
-    rings = _plan_rings(qlat, qlon, cells, counts["cnt"].to_numpy(np.int64), res, k)
-    plan = pd.DataFrame({"query_id": batch["query_id"], "qlat": qlat, "qlon": qlon, **rings})
-    probe = _probe_table(plan, res)
-    corpus = pages_cells
+    d, ry = _plan_rings(
+        batch["lat"].to_numpy(float), batch["lon"].to_numpy(float), cells, cnts, res, k
+    )
+    probe = _probe_table(batch, d, ry, cells, res)
+    source = pages_geo
     if partition_parent_res is not None:
         probed = _parent_cover(probe, res, partition_parent_res)
         if timings is not None:
@@ -545,50 +509,36 @@ def cell_knn(
         if 2 * len(probed) <= (2 << partition_parent_res) << partition_parent_res:
             # filter BEFORE the narrow projection: the prune column is the
             # directory key and must reach the scan to prune at plan time
-            corpus = pages_geo.filter(
-                F.col("lat").isNotNull() & F.col("parent").isin(probed)
-            ).select("url", "lat", "lon", F.col(cell_col).alias("cell"))
+            source = pages_geo.filter(F.col("parent").isin(probed))
     if timings is not None:
-        timings["plan_radius"] = time.time() - t0
+        seen = probe["cell"].map(pd.Series(cnts, index=cells)).groupby(probe["query_id"]).sum()
+        seen = seen.reindex(batch["query_id"], fill_value=0)
+        timings.update(
+            plan_radius=time.time() - t0, probe_rows=len(probe),
+            cands_per_query_p50=float(seen.median()), cands_per_query_max=int(seen.max()),
+        )
 
-    # ONE hash equi-join probes every ring and band of the batch: the corpus
-    # carries one key per distinct ring level and band row height in the
-    # batch, the shipped probe table one row per (query, key). The exact
-    # [ylo, yhi] filter afterwards trims band rows to the band.
-    ring_s = sorted(set(plan.loc[~plan["band"], "s"].tolist()))
-    band_s = sorted(set(plan.loc[plan["band"], "s"].tolist()))
-    cx, cy = geo.cell_x(F.col("cell")), geo.cell_y(F.col("cell"))
-    # geo.cell_parent at level res - s, spelled with shifts of the shared
-    # x/y columns: each Column call is a driver round-trip
-    keys = [
-        F.lit((res - s) * geo._R_SHIFT) + F.shiftright(cx, s) * F.lit(geo._X_SHIFT)
-        + F.shiftright(cy, s)
-        for s in ring_s
-    ] + [_band_key(s, F.shiftright(cy, s)) for s in band_s]
-    keyed = corpus.select(
-        "url", "lat", "lon", cy.alias("cy"), F.explode(F.array(*keys)).alias("key")
-    )
+    # ONE hash equi-join on cell probes the whole batch: the shipped probe
+    # table holds one row per (query, probed cell)
     probe_df = spark.createDataFrame(
-        probe[["query_id", "qlat", "qlon", "key", "ylo", "yhi"]],
+        probe,
         StructType([
             StructField("query_id", qid.dataType), StructField("qlat", DoubleType()),
-            StructField("qlon", DoubleType()), StructField("key", LongType()),
-            StructField("ylo", LongType()), StructField("yhi", LongType()),
+            StructField("qlon", DoubleType()), StructField("cell", LongType()),
         ]),
     )
     cands = (
         gate_broadcast(probe_df, len(probe))
-        .join(keyed, "key")
-        .filter(F.col("cy").between(F.col("ylo"), F.col("yhi")))
+        .join(_cell_corpus(source, res, cell_col), "cell")
         .withColumn(
             "dist_km",
             geo.haversine_km(F.col("lat"), F.col("lon"), F.col("qlat"), F.col("qlon")),
         )
     )
-    # ring cells are distinct, band rows too, and each query has one probe
-    # -> (query, url) pairs are unique; no dedup shuffle. Project to the 3
-    # columns the top-k needs BEFORE the window (measured 7.3 s -> 3.9 s on
-    # the 20M-pair metro probe).
+    # probed cells are distinct per query and urls unique per cell -> (query,
+    # url) pairs are unique; no dedup shuffle. Project to the 3 columns the
+    # top-k needs BEFORE the window (measured 7.3 s -> 3.9 s on the 20M-pair
+    # metro probe).
     ranked = topk_per_group(
         cands.select("query_id", "url", "dist_km"), ["query_id"], "dist_km", "url", k,
         dedup=False,
@@ -618,9 +568,9 @@ def radius_join(
     - ``ry`` (latitude cells) depends only on the radius: meridian distance
       alone bounds it.
     - ``rx`` (longitude cells) widens with |qlat| via the band-edge
-      cosine (the same bound ``cell_knn`` sizes its rings with); when the required
-      lon width reaches the full circle (high latitude or huge radius) the
-      ring degrades to the exact full-wrap latitude band.
+      cosine; when the required lon width reaches the full circle (high
+      latitude or huge radius) the ring degrades to the exact full-wrap
+      latitude band.
 
     Scale shape (that of the ``cell_knn`` probe): the exploded
     (query, cell) table is the ONLY thing that moves — estimate-gated
@@ -642,19 +592,9 @@ def radius_join(
     # ceil+1 keeps it strict when radius is an exact cell multiple
     ry = min(int(math.ceil(radius_deg / cd)) + 1, ny)
 
-    if cell_col is not None:
-        narrow = pages_geo.filter(F.col("lat").isNotNull()).select(
-            "url", "lat", "lon", F.col(cell_col).alias("cell")
-        )
-    else:
-        narrow = (
-            pages_geo.filter(F.col("lat").isNotNull())
-            .select("url", "lat", "lon")
-            .withColumn("cell", geo.encode_cell(F.col("lat"), F.col("lon"), res))
-        )
-    pages_cells = _widen(narrow)
+    pages_cells = _cell_corpus(pages_geo, res, cell_col)
 
-    # invert _lon_bound_km for the fixed radius: the bound evaluates
+    # invert the longitude bound for the fixed radius: it evaluates
     # 2R*cmin*sin(rx*cd/2) with cmin the band-edge cosine, so the needed rx
     # is ceil(2*asin(radius/(2R*cmin))/cd)+1 — full wrap once the argument
     # leaves asin's domain (cmin -> 0 near the poles, or radius ~ antipodal)
@@ -995,17 +935,7 @@ def radius_join_var(
     """
     nx, ny = 2 << res, 1 << res
     cd = geo.cell_deg(res)
-    if cell_col is not None:
-        narrow = points.filter(F.col("lat").isNotNull()).select(
-            "url", "lat", "lon", F.col(cell_col).alias("cell")
-        )
-    else:
-        narrow = (
-            points.filter(F.col("lat").isNotNull())
-            .select("url", "lat", "lon")
-            .withColumn("cell", geo.encode_cell(F.col("lat"), F.col("lon"), res))
-        )
-    pages_cells = _widen(narrow)
+    pages_cells = _cell_corpus(points, res, cell_col)
 
     # NULL radius -> beyond-antipodal sentinel: s >= 1 takes the full-wrap
     # branch and ry clamps to the pole, so "unbounded" needs no extra path

@@ -17,14 +17,14 @@ semantics chosen per sink:
   across restarts/replays — and ``foreachBatch`` upserts the *changed*
   rows into the lut snapshot by SET (idempotent), never by add.
 
-Consistency: the two sinks commit independently. ``cell_knn`` sizes each
-probe so that the ring the lut says holds k points is inside it, so a lut
-that TRAILS the corpus (counts at or below the corpus's) is safe — it only
-widens rings — while a lut that LEADS the corpus (a micro-batch the lut
-sink has committed and the corpus sink has not) can over-count a ring and
-return a wrong top-k until the corpus catches up. Serve from a state where
-the corpus sink has processed at least what the lut sink has (as after
-``processAllAvailable`` on both). At scale the snapshot rewrite in
+Consistency: the two sinks commit independently. ``cell_knn`` bounds each
+query's k-th distance from the lut's counts and probes only the cells the
+lut counts, so a lut that LEADS the corpus (a micro-batch the lut sink has
+committed and the corpus sink has not) can over-count a ring and return a
+wrong top-k, and one that TRAILS it misses the pages of any cell it does not
+count yet; lower counts in cells it does count only widen the probe. Serve
+from a state where both sinks have processed the same micro-batches (as
+after ``processAllAvailable`` on both). At scale the snapshot rewrite in
 ``_upsert_lut`` becomes an Iceberg/Delta ``MERGE INTO`` on (lv, cell); the
 lut is <= 5x|cells| rows, not corpus-sized, so either form is cheap.
 """

@@ -176,3 +176,62 @@ def test_bbox_min_dist_is_sound_lower_bound(spark):
         a = np.sin((p2 - p1) / 2) ** 2 + np.cos(p1) * np.cos(p2) * np.sin((l2 - l1) / 2) ** 2
         d = 2 * R * np.arcsin(np.sqrt(np.minimum(a, 1.0)))
         assert lb <= d.min() + 1e-6, (plat, plon, lat_lo, lat_hi, lon_lo, lon_hi, lb, d.min())
+
+
+def test_bbox_min_dist_np_sound_and_matches_column(spark):
+    """The numpy twin of bbox_min_dist_km, which cell_knn's driver plan
+    probes cells with: for cells next to the antimeridian and in polar rows,
+    at res 7 and res 20, and queries near and far (on the other side of the
+    antimeridian too), the bound never exceeds the engine's haversine to a
+    point of the cell, corners and edges included, beyond float rounding
+    (1e-9 km, far below cell_knn's 1e-6 km slack on D, also at res 20 where
+    a cell is 20 m across), and equals the Column form within 1e-9 km."""
+    import numpy as np
+
+    rng = np.random.default_rng(17)
+    cases = []
+    for res in (7, 20):
+        nx, ny, cd = 2 << res, 1 << res, geo.cell_deg(res)
+        for j in range(60):
+            x = int(rng.choice([0, 1, nx - 2, nx - 1, rng.integers(0, nx)]))
+            y = int(rng.choice([0, 1, ny - 2, ny - 1, rng.integers(0, ny)]))
+            lat_lo, lon_lo = y * cd - 90.0, x * cd - 180.0
+            if j % 3 == 0:  # anywhere
+                plat, plon = rng.uniform(-90, 90), rng.uniform(-180, 180)
+            else:  # within a few cells, wrapped across the antimeridian
+                plat = float(np.clip(lat_lo + rng.uniform(-3, 4) * cd, -90, 90))
+                plon = ((lon_lo + rng.uniform(-3, 4) * cd + 180.0) % 360.0) - 180.0
+            cases.append((plat, plon, lat_lo, lat_lo + cd, lon_lo, lon_lo + cd))
+    rows = []
+    for c, (plat, plon, lat_lo, lat_hi, lon_lo, lon_hi) in enumerate(cases):
+        u = np.concatenate([[0.0, 1.0, 0.0, 1.0], rng.random(12), [0.0] * 4, [1.0] * 4])
+        v = np.concatenate([[0.0, 0.0, 1.0, 1.0], rng.random(12), rng.random(4), rng.random(4)])
+        u, v = np.concatenate([u, v[4:]]), np.concatenate([v, u[4:]])  # edges on both axes
+        for a, b in zip(u, v):
+            rows.append((c, float(lat_lo + a * (lat_hi - lat_lo)), float(lon_lo + b * (lon_hi - lon_lo))))
+    cdf = spark.createDataFrame(
+        [(i, *map(float, c)) for i, c in enumerate(cases)],
+        "c long, plat double, plon double, lat_lo double, lat_hi double, "
+        "lon_lo double, lon_hi double",
+    )
+    pdf = spark.createDataFrame(rows, "c long, lat double, lon double")
+    col_lb = {
+        r["c"]: r["lb"]
+        for r in cdf.select("c", geo.bbox_min_dist_km(
+            F.col("plat"), F.col("plon"),
+            F.col("lat_lo"), F.col("lat_hi"), F.col("lon_lo"), F.col("lon_hi"),
+        ).alias("lb")).collect()
+    }
+    nearest = {
+        r["c"]: r["d"]
+        for r in pdf.join(cdf, "c").groupBy("c").agg(F.min(geo.haversine_km(
+            F.col("plat"), F.col("plon"), F.col("lat"), F.col("lon"))).alias("d")).collect()
+    }
+    arr = np.array(cases)
+    np_lb = geo.bbox_min_dist_km_np(*arr.T)
+    for i in range(len(cases)):
+        assert abs(np_lb[i] - col_lb[i]) <= 1e-9, (cases[i], np_lb[i], col_lb[i])
+        assert np_lb[i] <= nearest[i] + 1e-9, (cases[i], np_lb[i], nearest[i])
+    # points inside their own cell: the bound is 0, not acos's 0.1 km
+    inside = arr[:, 2:4].mean(1), arr[:, 4:6].mean(1)
+    assert (geo.bbox_min_dist_km_np(*inside, *arr[:, 2:].T) == 0.0).all()

@@ -172,6 +172,22 @@ def test_flat_knn_plan_shape(spark, geo_small, queries_small):
     assert "WindowGroupLimit" in plan
 
 
+def test_cell_knn_plan_joins_probe_on_cell(spark, geo_small, queries_small):
+    """cell_knn's executed plan is one hash join of the shipped (query,
+    cell) probe to the corpus on cell equality, with no explode (Generate)
+    on either side. ``timings`` reports the probe: its rows and
+    the candidates per query, which the probe's cells hold (at least k
+    each, here where the corpus holds more than k pages)."""
+    t: dict = {}
+    df = cell_knn(geo_small, queries_small, k=5, res=6, timings=t)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Generate" not in plan and "BroadcastHashJoin [cell#" in plan
+    n_q, n_pages = queries_small.count(), geo_small.filter(F.col("lat").isNotNull()).count()
+    assert n_q <= t["probe_rows"] <= n_q * n_pages
+    assert 5 <= t["cands_per_query_p50"] <= t["cands_per_query_max"] <= n_pages
+
+
 def test_cell_knn_prebuilt_state_bit_equal(spark, geo_small, queries_small, tmp_path):
     """Index-state serving (pre-encoded corpus + persisted lut) must return
     bit-identical results to the stateless path, and the pipeline must skip
@@ -283,9 +299,9 @@ def test_cell_pipeline_partitioned_layout(spark, geo_small, queries_small, tmp_p
 
 def test_cell_knn_parent_prune_bit_equal(spark, geo_small, queries_small, tmp_path):
     """Serving with the parent-directory prune (partition_parent_res=) must
-    be bit-identical to the stateless path — including sparse/band queries,
-    which bypass the prune — and must actually engage (the parent cover
-    size is recorded)."""
+    be bit-identical to the stateless path — including sparse queries,
+    whose cover can reach half the grid and bypass the prune — and must
+    actually engage (the parent cover size is recorded)."""
     from countrymaam_spark.plans import pipeline as P
 
     want = _key(cell_knn(geo_small, queries_small, k=5, res=6).collect())
@@ -391,8 +407,8 @@ def test_cell_knn_clustered_corpus_bit_equal(spark, tmp_path):
 
 def test_cell_knn_escalation_under_prune_bit_equal(spark, tmp_path):
     """High-latitude queries on pruned lut serving. 40 queries over a sparse
-    northern corpus plan rings that are wide in longitude (the longitude
-    bound shrinks with cos(lat)) and together span a dozen res-3 parents,
+    northern corpus plan probes that are wide in longitude (a degree of
+    longitude shrinks with cos(lat)) and together span a dozen res-3 parents,
     all of which the pruned read must keep. Results must match the flat
     oracle bit-for-bit."""
     from countrymaam_spark.plans import pipeline as P
@@ -424,14 +440,16 @@ def test_cell_knn_escalation_under_prune_bit_equal(spark, tmp_path):
 
 
 def test_cell_knn_prune_cover_holds_every_probed_parent(spark, tmp_path):
-    """The driver enumerates exactly the coarse cells geo.ring_cells_xy
-    gives for each ring, and its parent cover contains the partition parent
-    of every coarse cell a ring probes and of every row a band probes — here
-    for rings across the antimeridian and near the poles, at a partition res
-    both finer and coarser than the probe's coarse level. A metro batch
-    whose rings straddle parent boundaries (the res-3 corner at (0, 0) and
-    the antimeridian) must stay bit-equal to flat_knn under the prune: a
-    cover that drops part of a ring returns wrong neighbours."""
+    """The driver probe is exactly the non-empty cells whose Column-form
+    lower bound is within the query's D, so it never has more rows than
+    candidates; it holds every point within the query's brute-force k-th
+    distance, cuts the polar strip short of a full-wrap band, and its
+    parent cover is exactly the parents of the probed cells — here for
+    queries across the antimeridian and near the poles, at partition res 1,
+    3 and 5. A metro batch whose probes straddle parent boundaries (the
+    res-3 corner at (0, 0) and the antimeridian) must stay bit-equal to
+    flat_knn under the prune: a cover that drops a probed cell's parent
+    returns wrong neighbours."""
     import numpy as np
     import pandas as pd
 
@@ -448,45 +466,54 @@ def test_cell_knn_prune_cover_holds_every_probed_parent(spark, tmp_path):
                            rng.uniform(-180, -170, 200)])
     px = np.clip(np.floor((plon + 180.0) / G.cell_deg(res)), 0, nx - 1).astype(np.int64)
     py = np.clip(np.floor((plat + 90.0) / G.cell_deg(res)), 0, ny - 1).astype(np.int64)
-    cells = res * G._R_SHIFT + px * G._X_SHIFT + py
-    cells, cnts = np.unique(cells, return_counts=True)
+    pcell = res * G._R_SHIFT + px * G._X_SHIFT + py
+    cells, cnts = np.unique(pcell, return_counts=True)
     qlat = np.array([0.5, -0.5, 30.0, -30.0, 75.0, -75.0, 84.0, -84.0, 60.0, 10.0])
     qlon = np.array([179.99, -179.99, 179.5, -179.5, 179.0, -179.0, 178.0, -178.0, -179.9, 0.0])
-    plan = pd.DataFrame({"query_id": np.arange(len(qlat)), "qlat": qlat, "qlon": qlon,
-                         **knn_mod._plan_rings(qlat, qlon, cells, cnts, res, k)})
-    probe = knn_mod._probe_table(plan, res)
-    ring, band = plan[~plan["band"]], plan[plan["band"]]
-    assert len(ring) >= 6 and ring["s"].nunique() >= 2 and len(band) >= 1
+    batch = pd.DataFrame({"query_id": np.arange(len(qlat)), "lat": qlat, "lon": qlon})
+    d, ry = knn_mod._plan_rings(qlat, qlon, cells, cnts, res, k)
+    probe = knn_mod._probe_table(batch, d, ry, cells, res)
+    by_q = probe.groupby("query_id")["cell"].apply(set)
 
-    ring_cells = set()
-    for s in sorted(ring["s"].unique()):
-        lv = res - int(s)
-        sq = spark.createDataFrame(ring[ring["s"] == s][["query_id", "qlat", "qlon", "rx", "ry"]])
-        enum = sq.select("query_id", F.explode(G.ring_cells_xy(
-            G.encode_cell(F.col("qlat"), F.col("qlon"), lv), lv,
-            F.ceil(F.col("rx") / F.lit(1 << int(s))).cast("long"),
-            F.ceil(F.col("ry") / F.lit(1 << int(s))).cast("long"),
-        )).alias("c"))
-        ring_cells |= {(r["query_id"], r["c"]) for r in enum.collect()}
-    assert {(q, key) for q, key in zip(probe["query_id"], probe["key"]) if key >= 0} == ring_cells
+    # the probe is exactly the non-empty cells, of any row, whose Column-form
+    # lower bound is <= the query's D
+    cd = G.cell_deg(res)
+    cdf = spark.createDataFrame(pd.DataFrame(
+        {"cell": cells, "x": (cells % G._R_SHIFT) // G._X_SHIFT, "y": cells % G._X_SHIFT}))
+    qdf = spark.createDataFrame(pd.DataFrame({"query_id": batch["query_id"], "qlat": qlat,
+                                              "qlon": qlon, "d": d}))
+    lb = G.bbox_min_dist_km(F.col("qlat"), F.col("qlon"), F.col("y") * cd - 90.0,
+                            (F.col("y") + 1) * cd - 90.0, F.col("x") * cd - 180.0,
+                            (F.col("x") + 1) * cd - 180.0)
+    within = qdf.crossJoin(cdf).filter(lb <= F.col("d")).select("query_id", "cell").collect()
+    assert set(zip(probe["query_id"], probe["cell"])) == {(r[0], r[1]) for r in within}
+    assert len(probe) == len(within)
+
+    count = dict(zip(cells.tolist(), cnts.tolist()))
+    assert len(probe) <= sum(count[c] for c in probe["cell"])
+    R = G.EARTH_RADIUS_KM
+    for i in range(len(qlat)):
+        p1, p2 = np.radians(qlat[i]), np.radians(plat)
+        a = (np.sin(np.radians(plat - qlat[i]) / 2) ** 2
+             + np.cos(p1) * np.cos(p2) * np.sin(np.radians(plon - qlon[i]) / 2) ** 2)
+        dist = 2 * R * np.arcsin(np.sqrt(np.minimum(a, 1.0)))
+        need = set(pcell[dist <= np.sort(dist)[k - 1]].tolist())
+        assert need <= by_q[i], (i, sorted(need - by_q[i]))
+    for i in (6, 7):  # +-84: the probe is no full-wrap band of the strip
+        qy = int(np.floor((qlat[i] + 90.0) / G.cell_deg(res)))
+        strip = {c for c in count if abs(c % G._X_SHIFT - qy) <= ry[i]}
+        assert strip - by_q[i], i
+
     for ppr in (1, 3, 5):
-        probed = set()
-        for _, c in ring_cells:
-            lv, x, y = c // G._R_SHIFT, (c % G._R_SHIFT) // G._X_SHIFT, c % G._X_SHIFT
-            if lv >= ppr:  # the coarse cell lies in one parent
-                probed.add((x >> (lv - ppr), y >> (lv - ppr)))
-            else:  # the coarse cell spans a block of parents
-                sh = ppr - lv
-                probed |= {((x << sh) + i, (y << sh) + j)
-                           for i in range(1 << sh) for j in range(1 << sh)}
-        for qy, ry in zip(band["qy"], band["ry"]):  # a band reads whole rows
-            rows = range(max(qy - ry, 0) >> (res - ppr), (min(qy + ry, ny - 1) >> (res - ppr)) + 1)
-            probed |= {(x, y) for x in range(2 << ppr) for y in rows}
-        cover = {((c % G._R_SHIFT) // G._X_SHIFT, c % G._X_SHIFT)
-                 for c in knn_mod._parent_cover(probe, res, ppr)}
-        assert probed <= cover, (ppr, sorted(probed - cover))
-        if ppr == 3:  # rings at x = +-179.99 wrap: both edge columns probed
-            assert {x for x, _ in probed} >= {0, 15}
+        sh = res - ppr
+        parents = {((c % G._R_SHIFT) // G._X_SHIFT >> sh, c % G._X_SHIFT >> sh)
+                   for c in probe["cell"]}
+        cover = [((c % G._R_SHIFT) // G._X_SHIFT, c % G._X_SHIFT, c // G._R_SHIFT)
+                 for c in knn_mod._parent_cover(probe, res, ppr)]
+        assert {(x, y) for x, y, _ in cover} == parents and len(cover) == len(parents)
+        assert {lv for _, _, lv in cover} == {ppr}
+        if ppr == 3:  # probes at x = +-179.99 wrap: both edge columns probed
+            assert {x for x, _ in parents} >= {0, 15}
 
     dense = [
         (f"https://metro.example/{i}", -1.5 + (i * 37 % 300) / 100.0, -1.5 + (i * 61 % 300) / 100.0)
