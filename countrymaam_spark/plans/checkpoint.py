@@ -22,12 +22,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def content_hash(df: DataFrame) -> int:
-    """Order-insensitive, duplicate-sensitive content hash: SUM of per-row
-    sha256-derived 60-bit values mod 2^61-1. Sum (unlike bit_xor) is
-    commutative AND counts multiplicity, so duplicate-heavy datasets with
-    pairwise-cancelling rows cannot collide; the decimal(38) accumulator keeps
-    the fold overflow-free at any row count (ANSI-safe)."""
+def rows_and_hash(df: DataFrame) -> tuple[int, int]:
+    """(row count, ``content_hash``) of ``df`` in one aggregation: what a
+    manifest entry records and a resume check compares."""
     m61 = (1 << 61) - 1
     cols = [F.coalesce(F.col(c).cast("string"), F.lit("\x00")) for c in sorted(df.columns)]
     row_h = F.conv(F.substring(F.sha2(F.concat_ws("\x1f", *cols), 256), 1, 15), 16, 10).cast(
@@ -35,10 +32,22 @@ def content_hash(df: DataFrame) -> int:
     )
     out = (
         df.select((row_h % F.lit(m61)).cast("decimal(38,0)").alias("row_h"))
-        .agg((F.sum("row_h") % F.lit(m61)).cast("long").alias("h"))
-        .collect()[0]["h"]
+        .agg(
+            F.count(F.lit(1)).alias("n"),
+            (F.sum("row_h") % F.lit(m61)).cast("long").alias("h"),
+        )
+        .collect()[0]
     )
-    return int(out or 0)
+    return int(out["n"]), int(out["h"] or 0)
+
+
+def content_hash(df: DataFrame) -> int:
+    """Order-insensitive, duplicate-sensitive content hash: SUM of per-row
+    sha256-derived 60-bit values mod 2^61-1. Sum (unlike bit_xor) is
+    commutative AND counts multiplicity, so duplicate-heavy datasets with
+    pairwise-cancelling rows cannot collide; the decimal(38) accumulator keeps
+    the fold overflow-free at any row count (ANSI-safe)."""
+    return rows_and_hash(df)[1]
 
 
 class Manifest:
@@ -93,10 +102,10 @@ def run_stage(
     }
     if entry is not None and os.path.exists(os.path.join(path, "_SUCCESS")):
         df = spark.read.parquet(path)
-        if (
-            entry.get("params") == want_params
-            and df.count() == entry["rows"]
-            and (not verify_hash or content_hash(df) == entry["hash"])
+        if entry.get("params") == want_params and (
+            rows_and_hash(df) == (entry["rows"], entry["hash"])
+            if verify_hash
+            else df.count() == entry["rows"]
         ):
             return df, True
     df = build_fn()
@@ -105,11 +114,8 @@ def run_stage(
         w = w.partitionBy(*partition_by)
     w.parquet(path)
     out = spark.read.parquet(path)
-    manifest.stages[name] = {
-        "rows": out.count(),
-        "hash": content_hash(out),
-        "params": want_params,
-    }
+    rows, h = rows_and_hash(out)
+    manifest.stages[name] = {"rows": rows, "hash": h, "params": want_params}
     manifest.save()
     return out, False
 

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from countrymaam_spark.operators import index_build
 from countrymaam_spark.operators.geotag import extract_geo
-from countrymaam_spark.plans.checkpoint import Manifest, content_hash, run_stage
+from countrymaam_spark.plans.checkpoint import Manifest, rows_and_hash, run_stage
 
 
 def build_index_pipeline(
@@ -391,12 +391,9 @@ def _refresh_stage_entry(
     the Iceberg new-snapshot-commit analog on plain parquet."""
     path = os.path.join(manifest.out_dir, name)
     out = spark.read.parquet(path)
+    rows, h = rows_and_hash(out)
     entry = manifest.stages.get(name, {})
-    manifest.stages[name] = {
-        "rows": out.count(),
-        "hash": content_hash(out),
-        "params": entry.get("params", {}),
-    }
+    manifest.stages[name] = {"rows": rows, "hash": h, "params": entry.get("params", {})}
     manifest.save()
     return out
 
@@ -550,9 +547,10 @@ def build_cell_pipeline(
         ),
         params=params,
     )
+    # run_stage wrote or verified these counts; recounting costs two actions
     return {
-        "cell_corpus": {"rows": cells_df.count(), "skipped": skipped_c},
-        "cell_lut": {"rows": lut_df.count(), "skipped": skipped_l},
+        "cell_corpus": {"rows": manifest.stages["cell_corpus"]["rows"], "skipped": skipped_c},
+        "cell_lut": {"rows": manifest.stages["cell_lut"]["rows"], "skipped": skipped_l},
     }
 
 
@@ -717,12 +715,16 @@ def load_trees(spark: SparkSession, out_dir: str, batch_size: int = 16):
     on exit — consume (execute) the yielded DataFrame inside the ``with``
     block. A bare setter here would silently degrade every later parquet
     read in the session.
+
+    The scan takes the blob writer's schema (``index_build.TREE_SCHEMA``)
+    instead of inferring it from the files, so opening the table starts no
+    Spark job.
     """
     key = "spark.sql.parquet.columnarReaderBatchSize"
     prev = spark.conf.get(key, None)
     spark.conf.set(key, str(batch_size))
     try:
-        yield spark.read.parquet(os.path.join(out_dir, "trees"))
+        yield spark.read.schema(index_build.TREE_SCHEMA).parquet(os.path.join(out_dir, "trees"))
     finally:
         if prev is None:
             spark.conf.unset(key)

@@ -1,6 +1,8 @@
 """Index build + checkpoint/resume + tree-served kNN recall."""
 
 import os
+import time
+from contextlib import ExitStack
 
 import pytest
 from pyspark.sql import functions as F
@@ -9,7 +11,7 @@ from countrymaam_spark.operators import index_build
 from countrymaam_spark.operators.geotag import extract_geo
 from countrymaam_spark.operators.knn import flat_knn
 from countrymaam_spark.plans import pipeline
-from countrymaam_spark.plans.checkpoint import Manifest, content_hash
+from countrymaam_spark.plans.checkpoint import Manifest, content_hash, run_stage
 from countrymaam_spark.sources import pages as pg
 
 
@@ -139,6 +141,94 @@ def test_pipeline_checkpoint_resume(spark, geo_small, tmp_path):
     assert r3["geo"]["skipped"] and r3["cells"]["skipped"]
     assert not r3["trees"]["skipped"]
     assert Manifest(out_dir).stages["trees"]["rows"] == m1["trees"]["rows"]
+
+
+def _jobs_in_group(spark, group: str, fn):
+    """-> (fn(), number of Spark jobs fn started). The status tracker fills
+    from the listener bus after the fact, so wait until a marker job started
+    after fn is visible: every job fn started is then counted too."""
+    sc, tracker = spark.sparkContext, spark.sparkContext.statusTracker()
+    try:
+        sc.setJobGroup(group, group)
+        out = fn()
+        sc.setJobGroup(group + "-marker", group)
+        sc.parallelize([0], 1).count()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(group + "-marker"):
+        assert time.monotonic() < deadline, "marker job never reached the status tracker"
+        time.sleep(0.05)
+    return out, len(tracker.getJobIdsForGroup(group))
+
+
+def test_load_trees_opens_without_a_job(spark, geo_small, tmp_path):
+    """Opening the blob table through ``load_trees`` starts no Spark job (the
+    reader takes the writer's schema instead of inferring it), and the tree
+    path serves the same rows from it as from a plain parquet read."""
+    cells = index_build.salt_hot_cells(
+        index_build.encode_pages(geo_small, res=7, parent_res=4), target_group_rows=500
+    )
+    index_build.build_tree_blobs(cells, seed=42).write.parquet(str(tmp_path / "trees"))
+    queries = spark.read.parquet(
+        os.path.join(pg.fixture_dir("sf0.001"), "knn_queries.parquet")
+    ).filter(F.col("query_id") < 8)
+
+    def serve(trees):
+        return sorted(
+            tuple(r) for r in index_build.knn_tree(trees, queries, k=5, search_k=16).collect()
+        )
+
+    with ExitStack() as stack:
+        trees, jobs = _jobs_in_group(
+            spark, "open-trees", lambda: stack.enter_context(pipeline.load_trees(spark, str(tmp_path)))
+        )
+        assert jobs == 0
+        assert trees.schema == spark.read.parquet(str(tmp_path / "trees")).schema
+        got = serve(trees)
+    assert got and got == serve(spark.read.parquet(str(tmp_path / "trees")))
+
+
+@pytest.mark.parametrize("partition_by", [None, ["parent"]])
+def test_manifest_rows_and_hash_match_snapshot(spark, geo_small, tmp_path, partition_by):
+    """A stage's manifest ``rows``/``hash`` are the snapshot's ``count()`` and
+    ``content_hash``, when built and when resumed with or without hash
+    verification; a stale count or hash is caught and rebuilt."""
+    out_dir = str(tmp_path / "idx")
+
+    def stage(verify_hash):
+        return run_stage(
+            spark, Manifest(out_dir), "cells",
+            lambda: index_build.encode_pages(geo_small, res=7, parent_res=2),
+            verify_hash=verify_hash, partition_by=partition_by,
+        )
+
+    def entry_matches(out):
+        entry = Manifest(out_dir).stages["cells"]
+        return (entry["rows"], entry["hash"]) == (out.count(), content_hash(out)) and entry["rows"] > 0
+
+    for verify_hash, want_skipped in ((False, False), (False, True), (True, True)):
+        out, skipped = stage(verify_hash)
+        assert skipped == want_skipped and entry_matches(out)
+    for field, verify_hash in (("hash", True), ("rows", False)):
+        m = Manifest(out_dir)
+        m.stages["cells"][field] += 1
+        m.save()
+        out, skipped = stage(verify_hash)
+        assert not skipped and entry_matches(out), field
+
+
+def test_cell_pipeline_report_rows_are_snapshot_counts(spark, geo_small, tmp_path):
+    """``build_cell_pipeline`` reports the row counts of the snapshots it
+    wrote or resumed."""
+    out_dir = str(tmp_path / "cell")
+    for want_skipped in (False, True):
+        rep = pipeline.build_cell_pipeline(spark, geo_small, out_dir, res=6, partition_parent_res=3)
+        cells, lut = pipeline.load_cell_state(spark, out_dir)
+        assert rep == {
+            "cell_corpus": {"rows": cells.count(), "skipped": want_skipped},
+            "cell_lut": {"rows": lut.count(), "skipped": want_skipped},
+        }
 
 
 def test_two_runs_identical_content(spark, tmp_path):
