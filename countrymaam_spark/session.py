@@ -9,7 +9,8 @@ caller (tests use a small count; bench uses the core count).
 The heap is neither pinned (``-Xms``) nor pre-touched: with geobench's 1 GB
 heap on a 4-core box, dropping both cut the median peak PSS from 2005 to
 1397 MB (knn_metro) and from 1944 to 1479 MB (knn_uniform), with every
-timing within its benchmark bound.
+timing within its benchmark bound. Larger heaps (the tests' 8 GB) and sf10
+runs are not measured unpinned.
 """
 
 from __future__ import annotations

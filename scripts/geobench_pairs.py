@@ -5,8 +5,8 @@
 For each seed it runs ``geobench/run.py --trace 0`` once in each checkout,
 one after the other, alternating which side runs first (the parent on even
 seeds), so host drift falls on both sides alike. Each checkout runs its own
-copy of geobench, unchanged, with the same ``--seconds``; the metrics' units,
-directions and bounds come from PARENT_DIR/BENCHMARK.json.
+copy of geobench, unchanged; the run length (``run_seconds``) and the
+metrics' units, directions and bounds come from PARENT_DIR/BENCHMARK.json.
 
 It prints one line per run (side, seed, ``correct``, ``failed``, metrics) as
 the run finishes, then one row per end-to-end metric: each side's median and
@@ -15,7 +15,9 @@ the change of the median relative to the parent's, and a verdict:
 
 - ``claim`` when there are at least ten pairs, the change wins at least
   nine tenths of them and the medians differ by more than the parent's
-  interquartile range;
+  interquartile range, and the change's runs fail no more operations and
+  are no less often correct than the parent's (``claim (more failures)``
+  otherwise: a gain that costs correctness is not a gain);
 - ``worse`` when the change's median is worse than the parent's by more than
   the metric's bound;
 - ``unresolved`` when either side's interquartile range, relative to its
@@ -69,8 +71,10 @@ def quartiles(vals: list[float]) -> tuple[float, float, float]:
     return q1, q2, q3
 
 
-def summarize(name: str, spec: dict, pairs: list[dict[str, dict]]) -> str | None:
-    """The report row of one metric over the pairs where both sides have it."""
+def summarize(name: str, spec: dict, pairs: list[dict[str, dict]],
+              more_failures: bool) -> str | None:
+    """The report row of one metric over the pairs where both sides have it;
+    ``more_failures`` withholds a ``claim`` from a change that fails more."""
     got = [(p["parent"]["metrics"][name]["value"], p["change"]["metrics"][name]["value"])
            for p in pairs
            if name in p["parent"]["metrics"] and name in p["change"]["metrics"]]
@@ -85,7 +89,7 @@ def summarize(name: str, spec: dict, pairs: list[dict[str, dict]]) -> str | None
     spread = max((p3 - p1) / abs(pm) if pm else 0.0, (c3 - c1) / abs(cm) if cm else 0.0)
     every_run_better = all(sign * (a - b) > 0 for a in par for b in chg)
     if len(got) >= 10 and wins >= 0.9 * len(got) and abs(cm - pm) > p3 - p1:
-        verdict = "claim"
+        verdict = "claim (more failures)" if more_failures else "claim"
     elif sign * rel > bound:
         verdict = "worse"
     elif spread > bound and not every_run_better:
@@ -103,13 +107,12 @@ def main() -> int:
     ap.add_argument("change", help="checkout of the change")
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", required=True, type=parse_seeds, help="e.g. 1-10")
-    ap.add_argument("--seconds", type=float, help="default: BENCHMARK.json run_seconds")
     ap.add_argument("--out", help="also write every run's result as JSON lines here")
     args = ap.parse_args()
 
     with open(os.path.join(args.parent, "BENCHMARK.json")) as f:
         bench = json.load(f)
-    seconds = args.seconds if args.seconds is not None else bench["run_seconds"]
+    seconds = bench["run_seconds"]
     dirs = {"parent": args.parent, "change": args.change}
     out = open(args.out, "a") if args.out else None
     pairs: list[dict[str, dict]] = []
@@ -133,14 +136,18 @@ def main() -> int:
     print(f"\n{args.workload}: {len(pairs)} pairs, seeds {args.seeds[0]}-{args.seeds[-1]}, "
           f"{seconds:g} s windows; medians [q1, q3], inclusive quartiles")
     print(f"{'metric':24s} {'unit':5s} {'parent':28s} {'change':28s} {'wins':6s} {'median':>8s}")
+    totals = {side: (sum(p[side]["correct"] for p in pairs), sum(p[side]["failed"] for p in pairs))
+              for side in SIDES}
+    more_failures = (totals["change"][0] < totals["parent"][0]
+                     or totals["change"][1] > totals["parent"][1])
     for spec in bench["end_to_end"]:
-        row = summarize(spec["name"], spec, pairs)
+        row = summarize(spec["name"], spec, pairs, more_failures)
         if row:
             print(row)
     for side in SIDES:
-        runs = [p[side] for p in pairs]
-        print(f"{side}: {sum(r['correct'] for r in runs)}/{len(runs)} runs correct, "
-              f"{sum(r['failed'] for r in runs)} failed of {sum(r['attempted'] for r in runs)} ops")
+        correct, failed = totals[side]
+        print(f"{side}: {correct}/{len(pairs)} runs correct, {failed} failed of "
+              f"{sum(p[side]['attempted'] for p in pairs)} ops")
     return 0
 
 
