@@ -57,9 +57,9 @@ from countrymaam_spark.operators.nearest import (
 from countrymaam_spark.operators.overlay import polygon_overlaps, polygon_overlaps_sql
 from countrymaam_spark.operators.pip import (
     point_in_polygon,
-    point_in_polygon_arrays,
     point_in_polygon_compact,
     point_in_polygon_sql,
+    polygon_page_counts,
     polygon_stats,
     polygon_stats_sql,
 )
@@ -510,9 +510,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["pip_join_compact"] = lambda s, d: point_in_polygon_compact(
         _pages_geo(s, d), PG.load_polygon_edges(s, d), res=6, min_res=3
     )
-    # exact stage as a higher-order expression over per-polygon edge arrays:
-    # the verify has NO exchange at all (and is the streaming-legal form)
-    q["pip_join_arrays"] = lambda s, d: point_in_polygon_arrays(
+    # the same plan as pip_join; the query stays until the query set is
+    # retired as a whole
+    q["pip_join_arrays"] = lambda s, d: point_in_polygon(
         _pages_geo(s, d), PG.load_polygon_edges(s, d), res=6
     )
     # vector measures per polygon (perimeter / shoelace area / centroid);
@@ -556,17 +556,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
     q["pip_outside"] = _pip_outside
 
-    q["pip_counts"] = lambda s, d: (
-        PG.load_polygon_edges(s, d)
-        .select("poly_id")
-        .distinct()
-        .join(
-            point_in_polygon(_pages_geo(s, d), PG.load_polygon_edges(s, d), res=6),
-            "poly_id",
-            "left",
-        )
-        .groupBy("poly_id")
-        .agg(F.count("url").alias("n_pages"))
+    q["pip_counts"] = lambda s, d: polygon_page_counts(
+        _pages_geo(s, d), PG.load_polygon_edges(s, d), res=6
     )
 
     def _knn_tree(s: SparkSession, d: str) -> DataFrame:

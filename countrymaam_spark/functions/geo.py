@@ -48,6 +48,32 @@ def cell_deg(res: int) -> float:
     return 180.0 / (1 << res)
 
 
+def valid_point(lat: Column, lon: Column) -> Column:
+    """True where the coordinate pair is usable: neither value is NULL or
+    NaN. A NaN compares greater than every number, so an unfiltered NaN
+    clamps into an edge row or column of a grid instead of dropping out."""
+    return lat.isNotNull() & lon.isNotNull() & ~F.isnan(lat) & ~F.isnan(lon)
+
+
+def valid_point_sql(lat: str, lon: str) -> str:
+    """The identical predicate as SQL (DuckDB oracle)."""
+    return (
+        f"({lat} IS NOT NULL AND {lon} IS NOT NULL"
+        f" AND NOT isnan({lat}) AND NOT isnan({lon}))"
+    )
+
+
+def edge_bbox_aggs() -> list[Column]:
+    """Aggregate expressions for the bounding box (lat_lo, lat_hi, lon_lo,
+    lon_hi) of a group of (lat1, lon1, lat2, lon2) edge rows."""
+    return [
+        F.least(F.min("lat1"), F.min("lat2")).alias("lat_lo"),
+        F.greatest(F.max("lat1"), F.max("lat2")).alias("lat_hi"),
+        F.least(F.min("lon1"), F.min("lon2")).alias("lon_lo"),
+        F.greatest(F.max("lon1"), F.max("lon2")).alias("lon_hi"),
+    ]
+
+
 def encode_cell(lat: Column, lon: Column, res: int) -> Column:
     """lat/lon -> packed qcell id at ``res``. Pure column arithmetic."""
     if not 0 <= res <= MAX_RES:

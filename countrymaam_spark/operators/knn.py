@@ -51,7 +51,7 @@ import time
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -89,10 +89,7 @@ def _valid_queries(queries: DataFrame) -> DataFrame:
     """The queries with a usable coordinate pair. Without this filter a NULL
     coordinate makes haversine's ``least(a, 1)`` skip the NULL and return
     the antipodal distance for every page."""
-    return queries.filter(
-        F.col("lat").isNotNull() & F.col("lon").isNotNull()
-        & ~F.isnan("lat") & ~F.isnan("lon")
-    )
+    return queries.filter(geo.valid_point(F.col("lat"), F.col("lon")))
 
 
 def _query_batch(queries: DataFrame) -> pd.DataFrame:
@@ -546,6 +543,68 @@ def cell_knn(
     return ranked.select("query_id", "rk", "url", F.round("dist_km", 6).alias("dist_km"))
 
 
+def _radius_ring(q: DataFrame, radius_km: Column, res: int) -> DataFrame:
+    """Each row of ``q`` (point columns ``qlat``/``qlon``) times every cell
+    of its ring sized for the per-row ``radius_km``: each point within that
+    great-circle distance of the row's point lies in one of the ring's
+    cells. -> ``q``'s columns + ``cell``, broadcast while the table is
+    small (:func:`adaptive.gate_broadcast`).
+
+    The ring inverts the cell pruning bound for the radius, so it is sized
+    analytically, per row, with no driver loop:
+
+    - ``ry`` (latitude cells) depends only on the radius: the meridian
+      guarantee ``ry*cd*KM_PER_DEG > radius`` holds with
+      ``ry = ceil(radius_deg/cd) + 1`` (the +1 keeps it strict when the
+      radius is an exact cell multiple).
+    - ``rx`` (longitude cells) inverts the band-edge bound
+      ``2R*cmin*sin(rx*cd/2)``, with ``cmin`` the cosine at the ring's
+      pole-ward edge: ``rx = ceil(2*asin(radius/(2R*cmin))/cd) + 1``. Once
+      the argument leaves asin's domain (``cmin`` -> 0 near the poles, or a
+      radius near antipodal) the ring is the full-wrap latitude band.
+
+    One small driver action sizes the exploded table (an upper bound) for
+    the gate.
+    """
+    nx, ny = 2 << res, 1 << res
+    cd = geo.cell_deg(res)
+    ry = F.least(
+        (F.ceil(radius_km / F.lit(geo.KM_PER_DEG) / F.lit(cd)) + 1).cast("long"),
+        F.lit(ny).cast("long"),
+    )
+    cmin = F.greatest(
+        F.cos(
+            F.radians(
+                F.least(
+                    F.abs(F.col("qlat")) + (ry + 1).cast("double") * F.lit(cd),
+                    F.lit(90.0),
+                )
+            )
+        ),
+        F.lit(0.0),
+    )
+    s = radius_km / F.lit(2.0 * geo.EARTH_RADIUS_KM) / F.greatest(cmin, F.lit(1e-15))
+    rx_needed = (
+        F.ceil(F.degrees(F.asin(F.least(s, F.lit(1.0))) * 2.0) / F.lit(cd)) + 1
+    ).cast("long")
+    rx = F.when(s >= 1.0, F.lit(nx // 2).cast("long")).otherwise(
+        F.least(rx_needed, F.lit(nx // 2).cast("long"))
+    )
+    sized = q.withColumn("_rx", rx).withColumn("_ry", ry)
+    est = sized.agg(
+        F.sum(
+            F.least(F.col("_rx") * 2 + 1, F.lit(nx))
+            * F.least(F.col("_ry") * 2 + 1, F.lit(ny))
+        )
+    ).collect()[0][0]
+    qcell = geo.encode_cell(F.col("qlat"), F.col("qlon"), res)
+    exploded = sized.select(
+        *q.columns,
+        F.explode(geo.ring_cells_xy(qcell, res, F.col("_rx"), F.col("_ry"))).alias("cell"),
+    )
+    return gate_broadcast(exploded, int(est or 0))
+
+
 def radius_join(
     pages_geo: DataFrame,
     queries: DataFrame,
@@ -560,17 +619,9 @@ def radius_join(
     kNN, /root/reference/index/bsp_tree_index.go:35-92, but its
     candidates-then-verify pattern IS the range join once the pruning bound
     is inverted): where the kNN bounds its k-th distance from the cell
-    counts first, the fixed radius sizes the ring ANALYTICALLY per query —
-    pick (rx, ry) so that the ring guarantee (distance to any point outside
-    the ring) exceeds ``radius_km``, i.e. every point outside the enumerated
-    ring is provably farther than the radius. One probe, no driver loop:
-
-    - ``ry`` (latitude cells) depends only on the radius: meridian distance
-      alone bounds it.
-    - ``rx`` (longitude cells) widens with |qlat| via the band-edge
-      cosine; when the required lon width reaches the full circle (high
-      latitude or huge radius) the ring degrades to the exact full-wrap
-      latitude band.
+    counts first, the fixed radius sizes each query's ring analytically
+    (:func:`_radius_ring`), so every point outside the enumerated ring is
+    provably farther than the radius. One probe, no driver loop.
 
     Scale shape (that of the ``cell_knn`` probe): the exploded
     (query, cell) table is the ONLY thing that moves — estimate-gated
@@ -585,55 +636,14 @@ def radius_join(
     Pass ``cell_col`` to serve from a pre-encoded corpus (index state), as
     with ``cell_knn``.
     """
-    nx, ny = 2 << res, 1 << res
-    cd = geo.cell_deg(res)
-    radius_deg = radius_km / geo.KM_PER_DEG
-    # lat guarantee is ry*cd*KM_PER_DEG > radius  <=>  ry > radius_deg/cd;
-    # ceil+1 keeps it strict when radius is an exact cell multiple
-    ry = min(int(math.ceil(radius_deg / cd)) + 1, ny)
-
     pages_cells = _cell_corpus(pages_geo, res, cell_col)
-
-    # invert the longitude bound for the fixed radius: it evaluates
-    # 2R*cmin*sin(rx*cd/2) with cmin the band-edge cosine, so the needed rx
-    # is ceil(2*asin(radius/(2R*cmin))/cd)+1 — full wrap once the argument
-    # leaves asin's domain (cmin -> 0 near the poles, or radius ~ antipodal)
-    cmin = F.greatest(
-        F.cos(
-            F.radians(
-                F.least(F.abs(F.col("qlat")) + F.lit((ry + 1) * cd), F.lit(90.0))
-            )
-        ),
-        F.lit(0.0),
-    )
-    s = F.lit(radius_km / (2.0 * geo.EARTH_RADIUS_KM)) / F.greatest(cmin, F.lit(1e-15))
-    rx_needed = (
-        F.ceil(F.degrees(F.asin(F.least(s, F.lit(1.0))) * 2.0) / F.lit(cd)) + 1
-    ).cast("long")
-    rx_col = F.when(s >= 1.0, F.lit(nx // 2).cast("long")).otherwise(
-        F.least(rx_needed, F.lit(nx // 2).cast("long"))
-    )
-
     q = queries.select(
         "query_id",
         F.col("lat").alias("qlat"),
         F.col("lon").alias("qlon"),
-    ).withColumn("rx", rx_col)
-    # ONE tiny driver action plans the probe: the exploded-size estimate
-    # (upper bound; ry is a constant, rx already clamped to the wrap width)
-    est = q.agg(
-        F.sum(F.least(F.col("rx") * 2 + 1, F.lit(nx)) * F.lit(2 * ry + 1))
-    ).collect()[0][0]
-    qcell = geo.encode_cell(F.col("qlat"), F.col("qlon"), res)
-    exploded = q.select(
-        "query_id",
-        "qlat",
-        "qlon",
-        F.explode(geo.ring_cells_xy(qcell, res, F.col("rx"), ry)).alias("jcell"),
     )
-    exploded = gate_broadcast(exploded, int(est or 0))
     # ring cells are array_distinct and urls unique -> pairs unique; no dedup
-    cand = exploded.join(pages_cells, exploded["jcell"] == pages_cells["cell"])
+    cand = _radius_ring(q, F.lit(radius_km), res).join(pages_cells, "cell")
     dist = geo.haversine_km(F.col("lat"), F.col("lon"), F.col("qlat"), F.col("qlon"))
     return (
         cand.withColumn("dist_km", dist)
@@ -926,70 +936,22 @@ def radius_join_var(
     matches every point) — the ring degrades to the exact full-wrap
     latitude band covering the whole grid, no special-case join.
 
-    Same one-probe-round shape as the fixed-radius join — the analytic
-    (rx, ry) sizing just evaluates per row (``ring_cells_xy`` already takes
-    Columns): ry from the meridian bound, rx from the band-edge cosine
-    inversion, full wrap when the asin argument leaves its domain. The
-    exploded (probe, cell) table is the only thing that moves
-    (estimate-gated); points are probed by a hash equi-join on ``cell``.
+    Same one-probe-round shape as the fixed-radius join: each probe's ring
+    is sized from its own radius (:func:`_radius_ring`), the exploded
+    (probe, cell) table is the only thing that moves (estimate-gated), and
+    points are probed by a hash equi-join on ``cell``.
     """
-    nx, ny = 2 << res, 1 << res
-    cd = geo.cell_deg(res)
     pages_cells = _cell_corpus(points, res, cell_col)
-
-    # NULL radius -> beyond-antipodal sentinel: s >= 1 takes the full-wrap
-    # branch and ry clamps to the pole, so "unbounded" needs no extra path
-    r_km = F.coalesce(
-        F.col("radius_km").cast("double"),
-        F.lit(4.0 * geo.EARTH_RADIUS_KM * math.pi),
-    )
-    r_deg = r_km / F.lit(geo.KM_PER_DEG)
-    ry_col = F.least(
-        (F.ceil(r_deg / F.lit(cd)) + 1).cast("long"), F.lit(ny).cast("long")
-    )
-    cmin = F.greatest(
-        F.cos(
-            F.radians(
-                F.least(
-                    F.abs(F.col("qlat")) + (ry_col + 1).cast("double") * F.lit(cd),
-                    F.lit(90.0),
-                )
-            )
-        ),
-        F.lit(0.0),
-    )
-    s = r_km / F.lit(2.0 * geo.EARTH_RADIUS_KM) / F.greatest(cmin, F.lit(1e-15))
-    rx_needed = (
-        F.ceil(F.degrees(F.asin(F.least(s, F.lit(1.0))) * 2.0) / F.lit(cd)) + 1
-    ).cast("long")
-    rx_col = F.when(s >= 1.0, F.lit(nx // 2).cast("long")).otherwise(
-        F.least(rx_needed, F.lit(nx // 2).cast("long"))
-    )
-
     q = probes.select(
         "probe_id",
         F.col("lat").alias("qlat"),
         F.col("lon").alias("qlon"),
         F.col("radius_km").cast("double").alias("radius_km"),
-    ).withColumn("rx", rx_col).withColumn("ry", ry_col)
-    est = q.agg(
-        F.sum(
-            F.least(F.col("rx") * 2 + 1, F.lit(nx))
-            * F.least(F.col("ry") * 2 + 1, F.lit(2 * ny))
-        )
-    ).collect()[0][0]
-    qcell = geo.encode_cell(F.col("qlat"), F.col("qlon"), res)
-    exploded = q.select(
-        "probe_id",
-        "qlat",
-        "qlon",
-        "radius_km",
-        F.explode(
-            geo.ring_cells_xy(qcell, res, F.col("rx"), F.col("ry"))
-        ).alias("jcell"),
     )
-    exploded = gate_broadcast(exploded, int(est or 0))
-    cand = exploded.join(pages_cells, exploded["jcell"] == pages_cells["cell"])
+    # NULL radius -> beyond-antipodal sentinel: the ring takes the full-wrap
+    # branch and ry clamps to the pole, so "unbounded" needs no extra path
+    ring_km = F.coalesce(F.col("radius_km"), F.lit(4.0 * geo.EARTH_RADIUS_KM * math.pi))
+    cand = _radius_ring(q, ring_km, res).join(pages_cells, "cell")
     dist = geo.haversine_km(F.col("lat"), F.col("lon"), F.col("qlat"), F.col("qlon"))
     # compare at the engine's 6-dp distance contract: per-row radii normally
     # COME from engine outputs (knn_join's rounded dist_km), so a raw-vs-

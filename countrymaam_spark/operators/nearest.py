@@ -11,9 +11,9 @@ scan) — applied to the point->polygon metric:
    ``lb = bbox_min_dist_km`` per (query, polygon) pair. The pair table is a
    broadcast fan-out of |polys| rows per query — no shuffle of the query
    side; the dim table stays driver-sized (polygon sets are dimension
-   tables; for a polygon table too large to broadcast, generate candidates
-   from the compact cover + cell rings instead, as point_in_polygon's
-   shuffle path does).
+   tables; for a polygon table too large to broadcast-cross, generate
+   candidates from the cover cells + cell rings instead:
+   ``nearest_polygon_cells``).
 2. **Upper bound.** The argmin-lb polygon per query is evaluated exactly
    (min over its edges) -> ``ub``; any polygon with ``lb > ub`` cannot be
    the nearest (nor in the top-k once k-th best is <= ub).
@@ -46,12 +46,7 @@ SMALL_POLY_BRUTE_LIMIT = 256
 
 
 def _poly_bboxes(edges: DataFrame) -> DataFrame:
-    return edges.groupBy("poly_id").agg(
-        F.least(F.min("lat1"), F.min("lat2")).alias("lat_lo"),
-        F.greatest(F.max("lat1"), F.max("lat2")).alias("lat_hi"),
-        F.least(F.min("lon1"), F.min("lon2")).alias("lon_lo"),
-        F.greatest(F.max("lon1"), F.max("lon2")).alias("lon_hi"),
-    )
+    return edges.groupBy("poly_id").agg(*geo.edge_bbox_aggs())
 
 
 def _exact_pair_dist(pairs: DataFrame, edges: DataFrame) -> DataFrame:
@@ -89,10 +84,7 @@ def _polys_with_segs(edges: DataFrame) -> DataFrame:
     kernel becomes a pure projection (``array_min`` over the segs) instead
     of an edges join + a (query, poly)-keyed aggregation exchange."""
     return edges.groupBy("poly_id").agg(
-        F.least(F.min("lat1"), F.min("lat2")).alias("lat_lo"),
-        F.greatest(F.max("lat1"), F.max("lat2")).alias("lat_hi"),
-        F.least(F.min("lon1"), F.min("lon2")).alias("lon_lo"),
-        F.greatest(F.max("lon1"), F.max("lon2")).alias("lon_hi"),
+        *geo.edge_bbox_aggs(),
         F.collect_list(F.struct("lat1", "lon1", "lat2", "lon2")).alias("segs"),
     )
 
@@ -237,20 +229,20 @@ def nearest_polygon_cells(
        smallest per query is a sound upper bound ``ub`` on the true k-th
        nearest distance.
     3. **Complete.** Any polygon with boundary distance <= ub has a cover
-       cell containing a boundary point within ub of the query, and a ring
-       sized analytically for radius ub (radius_join's inverted pruning
-       bound, per-row) enumerates every cell containing any point within
-       ub — so the ring-probe candidate set provably contains the true
+       cell containing a boundary point within ub of the query, and the
+       ring sized analytically for radius ub (``knn._radius_ring``, the
+       radius joins' ring) enumerates every cell containing any point
+       within ub — so the ring-probe candidate set provably contains the true
        top-k. Exact re-rank + window top-k finishes.
 
     Results are identical to :func:`nearest_polygon` (equality pinned in
     pytest at k=1 and k=3).
     """
     from countrymaam_spark.operators.adaptive import gate_broadcast
+    from countrymaam_spark.operators.knn import _radius_ring
     from countrymaam_spark.operators.pip import _cover_cells
 
     nx, ny = 2 << res, 1 << res
-    cd = geo.cell_deg(res)
     cover = _cover_cells(edges, res).localCheckpoint(eager=True)
     # estimate-gated: a non-dim polygon set's edge table joins as a shuffle
     e = gate_broadcast(
@@ -320,43 +312,11 @@ def nearest_polygon_cells(
         .select("query_id", (F.col("dist") + F.lit(1e-6)).alias("ub"))
     )
 
-    # 3. completion ring sized for ub (radius_join's analytic inversion,
-    #    per-row): every cell containing any point within ub is enumerated
-    qc = q.join(ub, "query_id")
-    ry_col = F.least(
-        (F.ceil(F.col("ub") / F.lit(geo.KM_PER_DEG * cd)) + 1).cast("long"),
-        F.lit(ny).cast("long"),
-    )
-    cmin = F.greatest(
-        F.cos(
-            F.radians(
-                F.least(
-                    F.abs(F.col("qlat")) + (ry_col + 1).cast("double") * F.lit(cd),
-                    F.lit(90.0),
-                )
-            )
-        ),
-        F.lit(0.0),
-    )
-    s = (F.col("ub") / F.lit(2.0 * geo.EARTH_RADIUS_KM)) / F.greatest(
-        cmin, F.lit(1e-15)
-    )
-    rx_needed = (
-        F.ceil(F.degrees(F.asin(F.least(s, F.lit(1.0))) * 2.0) / F.lit(cd)) + 1
-    ).cast("long")
-    rx_col = F.when(s >= 1.0, F.lit(nx // 2).cast("long")).otherwise(
-        F.least(rx_needed, F.lit(nx // 2).cast("long"))
-    )
-    est = qc.agg(
-        F.sum(F.least(rx_col * 2 + 1, F.lit(nx)) * (ry_col * 2 + 1))
-    ).collect()[0][0]
-    exploded = qc.select(
-        "query_id", "qlat", "qlon",
-        F.explode(geo.ring_cells_xy(qcell, res, rx_col, ry_col)).alias("cell"),
-    )
-    exploded = gate_broadcast(exploded, int(est or 0))
+    # 3. completion ring sized for ub: every cell containing any point
+    #    within ub is enumerated
     cand = (
-        exploded.join(cover, "cell")
+        _radius_ring(q.join(ub, "query_id"), F.col("ub"), res)
+        .join(cover, "cell")
         .select("query_id", "qlat", "qlon", "poly_id")
         .distinct()
     )

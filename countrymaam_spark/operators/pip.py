@@ -3,9 +3,10 @@
 
 Coarse stage: each polygon's bbox is covered by quad-cells at ``res``; pages
 equi-join on cell (only the covered slice of the corpus is touched — at 100 TB
-this is the partition-pruning stage). Exact stage: ray casting as pure column
-math over (candidate page x polygon edge), crossing-parity aggregated per
-(poly, page). No UDFs anywhere.
+this is the partition-pruning stage). Exact stage: ray-cast crossing parity
+as a higher-order expression over the polygon's edge array, evaluated per
+candidate row. No UDFs anywhere, and one plan (:func:`_contained`) serves
+every entry point, batch and streaming.
 
 Limitation (documented): polygons must not cross the antimeridian (the
 fixture generator guarantees this); split such polygons upstream.
@@ -23,12 +24,7 @@ def _cover_cells(edges: DataFrame, res: int) -> DataFrame:
     """polygon bbox -> exploded cover cells (poly_id, cell)."""
     nx, ny = 2 << res, 1 << res
     step = F.lit(geo.cell_deg(res))
-    bbox = edges.groupBy("poly_id").agg(
-        F.least(F.min("lat1"), F.min("lat2")).alias("lat_lo"),
-        F.greatest(F.max("lat1"), F.max("lat2")).alias("lat_hi"),
-        F.least(F.min("lon1"), F.min("lon2")).alias("lon_lo"),
-        F.greatest(F.max("lon1"), F.max("lon2")).alias("lon_hi"),
-    )
+    bbox = edges.groupBy("poly_id").agg(*geo.edge_bbox_aggs())
     x_lo = F.greatest(F.floor((F.col("lon_lo") + 180.0) / step).cast("long"), F.lit(0))
     x_hi = F.least(F.floor((F.col("lon_hi") + 180.0) / step).cast("long"), F.lit(nx - 1))
     y_lo = F.greatest(F.floor((F.col("lat_lo") + 90.0) / step).cast("long"), F.lit(0))
@@ -53,66 +49,69 @@ def _cover_cells(edges: DataFrame, res: int) -> DataFrame:
     )
 
 
-def point_in_polygon(
-    pages_geo: DataFrame, edges: DataFrame, res: int = 6,
-    broadcast_polygons: bool = True,
-) -> DataFrame:
+def _edges_arrays(edges: DataFrame) -> DataFrame:
+    """(poly_id, edges_arr) — each polygon's edge list as one array column."""
+    return edges.groupBy("poly_id").agg(
+        F.collect_list(
+            F.struct(
+                F.col("lat1").alias("lat1"), F.col("lon1").alias("lon1"),
+                F.col("lat2").alias("lat2"), F.col("lon2").alias("lon2"),
+            )
+        ).alias("edges_arr")
+    )
+
+
+def _crossing_pred(e):
+    """Ray-cast crossing predicate for one edges-array element against the
+    row's (lat, lon) point columns (half-open boundary rule)."""
+    return (
+        (e["lat1"] > F.col("lat")) != (e["lat2"] > F.col("lat"))
+    ) & (
+        F.col("lon")
+        < (e["lon2"] - e["lon1"])
+        * (F.col("lat") - e["lat1"])
+        / (e["lat2"] - e["lat1"])
+        + e["lon1"]
+    )
+
+
+def _contained(cells: DataFrame, cover: DataFrame, edges: DataFrame) -> DataFrame:
+    """The containment plan: ``cells`` rows (a ``cell`` key and the point's
+    ``lat``/``lon``) that lie inside a polygon, with that polygon's
+    ``poly_id`` added to the caller's columns.
+
+    ``cover`` (poly_id, cell) and the per-polygon edge arrays are broadcast
+    dim tables, so the page side flows through two broadcast joins and a
+    filter: no exchange of the candidates, and — the parity being a pure
+    expression — legal inside a stream-static join. ``cover`` must give
+    each (row, polygon) pair at most one candidate row, or the pair comes
+    back once per copy.
+    """
+    cand = cells.join(F.broadcast(cover), "cell").join(
+        F.broadcast(_edges_arrays(edges)), "poly_id"
+    )
+    # size(filter(...)), NOT aggregate(...): with an ArrowEvalPython stage
+    # (the geotag UDF) in the lineage, Spark 4.1's optimizer mis-binds the
+    # 3-arg aggregate HOF's outer references during python-UDF extraction
+    # ([INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND lat] evaluated against the
+    # broadcast side); the 2-arg filter HOF binds correctly
+    crossings = F.size(F.filter(F.col("edges_arr"), _crossing_pred))
+    return cand.filter(crossings % 2 == 1).drop("edges_arr")
+
+
+def point_in_polygon(pages_geo: DataFrame, edges: DataFrame, res: int = 6) -> DataFrame:
     """-> (poly_id, url) pairs where the page's point lies inside the ring
     (ray-casting crossing parity; boundary points follow the half-open rule).
 
-    ``broadcast_polygons=True`` (default) is the small-dim-table plan: cover
-    cells and the edge table broadcast, the page scan never shuffles. For a
-    country-scale polygon table that cannot broadcast, pass False: the cover
-    join becomes a shuffle (sort-merge / shuffled-hash, Catalyst + AQE pick,
-    AQE skew-split handles mega-polygons) keyed on cell, and the verify join
-    shuffles candidates by poly_id — only candidate pages move, never the
-    full scan."""
+    Polygons are a dim table: the cover cells and the edge arrays broadcast
+    and the page scan never shuffles. A polygon set whose full cover is too
+    large to broadcast goes through :func:`point_in_polygon_compact`."""
     pages_cells = (
         pages_geo.filter(F.col("lat").isNotNull())
         .select("url", "lat", "lon")
         .withColumn("cell", geo.encode_cell(F.col("lat"), F.col("lon"), res))
     )
-    cover = _cover_cells(edges, res)
-    e = edges.select("poly_id", "lat1", "lon1", "lat2", "lon2")
-    if broadcast_polygons:
-        # dim-table regime: verify with the exchange-free edges-array parity
-        # (point_in_polygon_arrays' exact stage — pytest-pinned identical);
-        # the page scan flows through two broadcast joins and a filter, no
-        # groupBy(poly_id, url) exchange of the candidate set at all
-        cand = pages_cells.join(F.broadcast(cover), "cell")
-        withe = cand.join(F.broadcast(_edges_arrays(edges)), "poly_id")
-        crossings = F.size(F.filter(F.col("edges_arr"), _crossing_pred))
-        return (
-            withe.select("poly_id", "url", crossings.alias("_crossings"))
-            .filter(F.col("_crossings") % 2 == 1)
-            .select("poly_id", "url")
-        )
-    cand = pages_cells.join(cover, "cell").select("poly_id", "url", "lat", "lon")
-    return _verify_ray_cast(cand, e)
-
-
-def _verify_ray_cast(cand: DataFrame, e: DataFrame) -> DataFrame:
-    """Exact stage: ray-cast crossing parity over (candidate x polygon edge).
-
-    ``cand`` must hold each (poly_id, url) pair AT MOST ONCE — a duplicated
-    candidate doubles its crossing count and flips the parity test.
-    """
-    pairs = cand.join(e, "poly_id")
-    crosses = (
-        (F.col("lat1") > F.col("lat")) != (F.col("lat2") > F.col("lat"))
-    ) & (
-        F.col("lon")
-        < (F.col("lon2") - F.col("lon1"))
-        * (F.col("lat") - F.col("lat1"))
-        / (F.col("lat2") - F.col("lat1"))
-        + F.col("lon1")
-    )
-    return (
-        pairs.groupBy("poly_id", "url")
-        .agg(F.sum(F.when(crosses, 1).otherwise(0)).alias("crossings"))
-        .filter(F.col("crossings") % 2 == 1)
-        .select("poly_id", "url")
-    )
+    return _contained(pages_cells, _cover_cells(edges, res), edges).select("poly_id", "url")
 
 
 def compact_cover(cover: DataFrame, res: int, min_res: int = 0) -> DataFrame:
@@ -198,8 +197,7 @@ def uncompact_cover(compact: DataFrame, res: int) -> DataFrame:
 
 
 def point_in_polygon_compact(
-    pages_geo: DataFrame, edges: DataFrame, res: int = 6, min_res: int = 3,
-    broadcast_polygons: bool = True,
+    pages_geo: DataFrame, edges: DataFrame, res: int = 6, min_res: int = 3
 ) -> DataFrame:
     """:func:`point_in_polygon` with the coarse stage joined against the
     COMPACT cover: pages encode one cell per level in [min_res, res] (an
@@ -209,11 +207,11 @@ def point_in_polygon_compact(
 
     Same candidate set as the full-res cover — each page hits exactly one
     of {cell, its ancestors} per polygon (compact disjointness) — so results
-    are identical; what changes is the cover's size (broadcast bytes /
-    shuffle rows), which is the binding constant for country-scale polygon
-    tables. The page side carries #levels rows per page through the join;
-    with min_res chosen ~3 levels up that is a 4x row fan-out against a
-    cover shrunk by orders of magnitude on large polygons.
+    are identical; what changes is the size of the broadcast cover, which
+    is the binding constant for country-scale polygon tables. The page side
+    carries #levels rows per page through the join; with min_res chosen ~3
+    levels up that is a 4x row fan-out against a cover shrunk by orders of
+    magnitude on large polygons.
     """
     pages_cells = (
         pages_geo.filter(F.col("lat").isNotNull())
@@ -227,20 +225,7 @@ def point_in_polygon_compact(
         )
     )
     cover = compact_cover(_cover_cells(edges, res), res, min_res)
-    e = edges.select("poly_id", "lat1", "lon1", "lat2", "lon2")
-    if broadcast_polygons:
-        # same exchange-free edges-array verify as point_in_polygon's
-        # broadcast regime (results pinned identical in pytest)
-        cand = pages_cells.join(F.broadcast(cover), "cell")
-        withe = cand.join(F.broadcast(_edges_arrays(edges)), "poly_id")
-        crossings = F.size(F.filter(F.col("edges_arr"), _crossing_pred))
-        return (
-            withe.select("poly_id", "url", crossings.alias("_crossings"))
-            .filter(F.col("_crossings") % 2 == 1)
-            .select("poly_id", "url")
-        )
-    cand = pages_cells.join(cover, "cell").select("poly_id", "url", "lat", "lon")
-    return _verify_ray_cast(cand, e)
+    return _contained(pages_cells, cover, edges).select("poly_id", "url")
 
 
 def point_in_polygon_sql(pages_rel: str, edges_rel: str) -> str:
@@ -272,10 +257,7 @@ def polygon_page_counts(pages_geo: DataFrame, edges: DataFrame, res: int = 6) ->
     )
 
 
-def zonal_stats(
-    pages_geo: DataFrame, edges: DataFrame, res: int = 6,
-    broadcast_polygons: bool = True,
-) -> DataFrame:
+def zonal_stats(pages_geo: DataFrame, edges: DataFrame, res: int = 6) -> DataFrame:
     """Zonal statistics: per-polygon page aggregate over the PIP join —
     (poly_id, n_pages, n_domains, n_langs), one row per polygon with zeros
     for polygons containing no page.
@@ -290,7 +272,7 @@ def zonal_stats(
     is a narrow projection of the same scan.  All-exact output columns
     (bigint), so the DuckDB oracle matches bit-for-bit.
     """
-    inside = point_in_polygon(pages_geo, edges, res, broadcast_polygons)
+    inside = point_in_polygon(pages_geo, edges, res)
     attrs = pages_geo.filter(F.col("lat").isNotNull()).select(
         "url",
         F.regexp_extract(F.col("url"), r"^https?://([^/]+)", 1).alias("_domain"),
@@ -399,76 +381,7 @@ def polygon_stats_sql(edges_rel: str) -> str:
     """
 
 
-def _edges_arrays(edges: DataFrame) -> DataFrame:
-    """(poly_id, edges_arr) — each polygon's edge list as one array column."""
-    return edges.groupBy("poly_id").agg(
-        F.collect_list(
-            F.struct(
-                F.col("lat1").alias("lat1"), F.col("lon1").alias("lon1"),
-                F.col("lat2").alias("lat2"), F.col("lon2").alias("lon2"),
-            )
-        ).alias("edges_arr")
-    )
-
-
-def point_in_polygon_arrays(
-    pages_geo: DataFrame, edges: DataFrame, res: int = 6
-) -> DataFrame:
-    """:func:`point_in_polygon` with the exact stage as a HIGHER-ORDER
-    expression instead of an aggregation: each polygon's edges are packed
-    into one array column (broadcast, built once), and the crossing parity
-    is ``F.aggregate`` over that array — evaluated per candidate row inside
-    the join task.
-
-    Plan consequence: the verify stage has NO exchange at all. The standard
-    path expands candidates x edges and reduces through a
-    groupBy(poly_id, url) shuffle (partial agg collapses it map-side, but
-    the final exchange still moves ~|candidates| rows); here the page scan
-    flows through two broadcast joins and a filter, nothing else — and the
-    parity being a pure expression is what makes PIP legal inside a
-    STREAM-static join (no stateful aggregation spent on the verify, see
-    streaming/ingest.stream_pip_counts).
-
-    Results are identical to :func:`point_in_polygon` (same formula, same
-    half-open boundary rule; equality pinned in pytest).
-    """
-    pages_cells = (
-        pages_geo.filter(F.col("lat").isNotNull())
-        .select("url", "lat", "lon")
-        .withColumn("cell", geo.encode_cell(F.col("lat"), F.col("lon"), res))
-    )
-    cand = pages_cells.join(F.broadcast(_cover_cells(edges, res)), "cell")
-    withe = cand.join(F.broadcast(_edges_arrays(edges)), "poly_id")
-    # size(filter(...)), NOT aggregate(...): with an ArrowEvalPython stage
-    # (the geotag UDF) in the lineage, Spark 4.1's optimizer mis-binds the
-    # 3-arg aggregate HOF's outer references during python-UDF extraction
-    # ([INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND lat] evaluated against the
-    # broadcast side); the 2-arg filter HOF binds correctly
-    crossings = F.size(F.filter(F.col("edges_arr"), _crossing_pred))
-    return (
-        withe.select("poly_id", "url", crossings.alias("_crossings"))
-        .filter(F.col("_crossings") % 2 == 1)
-        .select("poly_id", "url")
-    )
-
-
-def _crossing_pred(e):
-    """Ray-cast crossing predicate for one edges-array element against the
-    row's (lat, lon) point columns — shared by batch and streaming."""
-    return (
-        (e["lat1"] > F.col("lat")) != (e["lat2"] > F.col("lat"))
-    ) & (
-        F.col("lon")
-        < (e["lon2"] - e["lon1"])
-        * (F.col("lat") - e["lat1"])
-        / (e["lat2"] - e["lat1"])
-        + e["lon1"]
-    )
-
-
-def point_outside_polygons(
-    pages_geo: DataFrame, edges: DataFrame, res: int = 6, **kw
-) -> DataFrame:
+def point_outside_polygons(pages_geo: DataFrame, edges: DataFrame, res: int = 6) -> DataFrame:
     """-> (url): geotagged pages contained by NO polygon — the spatial
     ANTI-join (coverage-gap / open-ocean detection; the complement query a
     curation pipeline runs to find pages its region taxonomy misses).
@@ -476,7 +389,7 @@ def point_outside_polygons(
     One left_anti hash join against the verified inside-pairs: the anti
     side is the pip result (candidates-then-verify, already corpus-safe);
     the pages side never shuffles more than the pip join itself does."""
-    inside = point_in_polygon(pages_geo, edges, res=res, **kw).select("url")
+    inside = point_in_polygon(pages_geo, edges, res=res).select("url")
     return (
         pages_geo.filter(F.col("lat").isNotNull())
         .select("url")

@@ -11,6 +11,13 @@ from pyspark.sql import functions as F
 
 from countrymaam_spark.functions import geo
 
+# every entry point and its oracle drop pages without a usable coordinate
+_VALID_SQL = geo.valid_point_sql("lat", "lon")
+
+
+def _valid() -> Column:
+    return geo.valid_point(F.col("lat"), F.col("lon"))
+
 
 def assign_tiles(pages_geo: DataFrame, zooms: list[int]) -> DataFrame:
     """-> (url, z, xt, yt) for each zoom level.
@@ -25,7 +32,7 @@ def assign_tiles(pages_geo: DataFrame, zooms: list[int]) -> DataFrame:
         for z, (xt, yt) in ((z, _tile_cols(z)) for z in zooms)
     ]
     return (
-        pages_geo.filter(F.col("lat").isNotNull())
+        pages_geo.filter(_valid())
         .select("url", F.explode(F.array(*structs)).alias("t"))
         .select("url", "t.z", "t.xt", "t.yt")
     )
@@ -63,7 +70,7 @@ def tile_counts(pages_geo: DataFrame, zooms: list[int]) -> DataFrame:
         xt, yt = _tile_cols(z)
         keys += [xt.alias(f"_x{z}"), yt.alias(f"_y{z}")]
     fine = (
-        pages_geo.filter(F.col("lat").isNotNull())
+        pages_geo.filter(_valid())
         .select(*keys)
         .groupBy(*[f"_x{z}" for z in zooms], *[f"_y{z}" for z in zooms])
         .agg(F.count("*").alias("_n"))
@@ -99,7 +106,7 @@ def assign_tiles_sql(pages_rel: str, zooms: list[int]) -> str:
     for z in zooms:
         xt, yt = _tile_sql(z, "lat", "lon")
         selects.append(
-            f"SELECT url, {z} AS z, {xt} AS xt, {yt} AS yt FROM {pages_rel} WHERE lat IS NOT NULL"
+            f"SELECT url, {z} AS z, {xt} AS xt, {yt} AS yt FROM {pages_rel} WHERE {_VALID_SQL}"
         )
     return " UNION ALL ".join(selects)
 
@@ -173,7 +180,7 @@ def quadkey_counts(pages_geo: DataFrame, z: int) -> DataFrame:
     """
     xt, yt = _tile_cols(z)
     return (
-        pages_geo.filter(F.col("lat").isNotNull())
+        pages_geo.filter(_valid())
         .select(geo.quadkey(xt, yt, z).alias("quadkey"))
         .groupBy("quadkey")
         .agg(F.count("*").alias("n_pages"))
@@ -185,7 +192,7 @@ def quadkey_counts_sql(pages_rel: str, z: int) -> str:
     qk = geo.quadkey_sql(xt, yt, z)
     return (
         f"SELECT {qk} AS quadkey, CAST(COUNT(*) AS BIGINT) AS n_pages "
-        f"FROM {pages_rel} WHERE lat IS NOT NULL GROUP BY 1"
+        f"FROM {pages_rel} WHERE {_VALID_SQL} GROUP BY 1"
     )
 
 
@@ -226,7 +233,7 @@ def viewport_join(pages_geo: DataFrame, viewports: DataFrame, res: int = 6) -> D
         )
     )
     pages_cells = (
-        pages_geo.filter(F.col("lat").isNotNull())
+        pages_geo.filter(_valid())
         .select("url", "lat", "lon")
         .withColumn("cell", geo.encode_cell(F.col("lat"), F.col("lon"), res))
     )
@@ -245,7 +252,7 @@ def viewport_join_sql(pages_rel: str, viewports_rel: str) -> str:
     return f"""
         SELECT v.view_id, p.url, p.lat, p.lon
         FROM {pages_rel} p, {viewports_rel} v
-        WHERE p.lat IS NOT NULL
+        WHERE {geo.valid_point_sql('p.lat', 'p.lon')}
           AND p.lat BETWEEN v.lat_lo AND v.lat_hi
           AND p.lon BETWEEN v.lon_lo AND v.lon_hi
     """
@@ -261,7 +268,7 @@ def tile_domains(pages_geo: DataFrame, z: int) -> DataFrame:
     xt, yt = _tile_cols(z)
     dom = F.regexp_extract(F.col("url"), r"^https?://([^/]+)", 1)
     return (
-        pages_geo.filter(F.col("lat").isNotNull())
+        pages_geo.filter(_valid())
         .select(xt.alias("xt"), yt.alias("yt"), dom.alias("domain"))
         .groupBy("xt", "yt")
         .agg(F.countDistinct("domain").alias("n_domains"))
@@ -277,7 +284,7 @@ def tile_domains_sql(pages_rel: str, z: int) -> str:
         FROM (
             SELECT {xt} AS xt, {yt} AS yt,
                    regexp_extract(url, '^https?://([^/]+)', 1) AS domain
-            FROM {pages_rel} WHERE lat IS NOT NULL
+            FROM {pages_rel} WHERE {_VALID_SQL}
         ) t
         GROUP BY xt, yt
     """
@@ -296,7 +303,7 @@ def tile_top_pages(pages: DataFrame, z: int, k: int = 3) -> DataFrame:
 
     xt, yt = _tile_cols(z)
     ranked = (
-        pages.filter(F.col("lat").isNotNull())
+        pages.filter(_valid())
         .select(
             xt.alias("xt"), yt.alias("yt"), "url",
             F.length("text").alias("_len"),
@@ -326,7 +333,7 @@ def tile_top_pages_sql(pages_rel: str, z: int, k: int = 3) -> str:
                    ) AS rk
             FROM (
                 SELECT {xt} AS xt, {yt} AS yt, url, text
-                FROM {pages_rel} WHERE lat IS NOT NULL
+                FROM {pages_rel} WHERE {_VALID_SQL}
             ) t
         ) r
         WHERE rk <= {k}
@@ -393,7 +400,7 @@ def tile_terms(pages: DataFrame, z: int, k: int = 5) -> DataFrame:
                 )
 
     counts = (
-        pages.filter(F.col("lat").isNotNull())
+        pages.filter(_valid())
         .select(xt.alias("xt"), yt.alias("yt"), F.lower(F.col("text")).alias("lt"))
         .mapInArrow(tok_count, "xt long, yt long, token string, pcnt long")
         .groupBy("xt", "yt", "token")
@@ -430,7 +437,7 @@ def tile_terms_sql(pages_rel: str, z: int, k: int = 5) -> str:
                 FROM (
                     SELECT {xt} AS xt, {yt} AS yt,
                            unnest({T.tokens_sql('text')}) AS token
-                    FROM {pages_rel} WHERE lat IS NOT NULL
+                    FROM {pages_rel} WHERE {_VALID_SQL}
                 ) e
                 WHERE LENGTH(token) >= 2 AND token NOT IN ({sw})
                 GROUP BY xt, yt, token

@@ -45,7 +45,7 @@ def build_index_pipeline(
         lambda: extract_geo(pages).select("url", "lat", "lon", "text_sha"),
         params=params,
     )
-    report["geo"] = {"rows": geo_df.count(), "skipped": skipped}
+    report["geo"] = {"rows": _rows(manifest, "geo"), "skipped": skipped}
 
     cells_df, skipped = run_stage(
         spark,
@@ -56,7 +56,7 @@ def build_index_pipeline(
         ),
         params=params,
     )
-    report["cells"] = {"rows": cells_df.count(), "skipped": skipped}
+    report["cells"] = {"rows": _rows(manifest, "cells"), "skipped": skipped}
 
     trees_df, skipped = run_stage(
         spark,
@@ -65,13 +65,13 @@ def build_index_pipeline(
         lambda: index_build.build_tree_blobs(cells_df, seed=seed, kind=kind, n_trees=n_trees),
         params=params,
     )
-    report["trees"] = {"rows": trees_df.count(), "skipped": skipped}
+    report["trees"] = {"rows": _rows(manifest, "trees"), "skipped": skipped}
 
-    lineage_df, skipped = run_stage(
+    _, skipped = run_stage(
         spark, manifest, "lineage", lambda: index_build.lineage(trees_df),
         params=params,
     )
-    report["lineage"] = {"rows": lineage_df.count(), "skipped": skipped}
+    report["lineage"] = {"rows": _rows(manifest, "lineage"), "skipped": skipped}
 
     # counters table: per-stage row counts as data (queryable metrics)
     counters = spark.createDataFrame(
@@ -107,7 +107,7 @@ def build_graph_pipeline(
         "k": k, "rho": rho, "max_iter": max_iter, "seed": seed,
         "id_col": id_col, "vec_col": vec_col,
     }
-    edges_df, skipped = run_stage(
+    _, skipped = run_stage(
         spark,
         manifest,
         "graph_edges",
@@ -117,7 +117,7 @@ def build_graph_pipeline(
         ),
         params=params,
     )
-    return {"graph_edges": {"rows": edges_df.count(), "skipped": skipped}}
+    return {"graph_edges": {"rows": _rows(manifest, "graph_edges"), "skipped": skipped}}
 
 
 def build_ivf_pipeline(
@@ -164,7 +164,7 @@ def build_ivf_pipeline(
         params=params,
     )
     cents = _cents_array(cents_df)
-    lists_df, skipped_l = run_stage(
+    _, skipped_l = run_stage(
         spark,
         manifest,
         "ivf_lists",
@@ -177,8 +177,8 @@ def build_ivf_pipeline(
         partition_by=["list_id"],
     )
     return {
-        "ivf_centroids": {"rows": cents_df.count(), "skipped": skipped_c},
-        "ivf_lists": {"rows": lists_df.count(), "skipped": skipped_l},
+        "ivf_centroids": {"rows": _rows(manifest, "ivf_centroids"), "skipped": skipped_c},
+        "ivf_lists": {"rows": _rows(manifest, "ivf_lists"), "skipped": skipped_l},
     }
 
 
@@ -221,7 +221,7 @@ def build_pq_pipeline(
     books = books_holder.get("books")
     if books is None:  # resumed from snapshot
         books = pq.books_from_df(books_df)
-    codes_df, skipped_c = run_stage(
+    _, skipped_c = run_stage(
         spark,
         manifest,
         "pq_codes",
@@ -229,8 +229,8 @@ def build_pq_pipeline(
         params=params,
     )
     return {
-        "pq_books": {"rows": books_df.count(), "skipped": skipped_b},
-        "pq_codes": {"rows": codes_df.count(), "skipped": skipped_c},
+        "pq_books": {"rows": _rows(manifest, "pq_books"), "skipped": skipped_b},
+        "pq_codes": {"rows": _rows(manifest, "pq_codes"), "skipped": skipped_c},
     }
 
 
@@ -262,12 +262,10 @@ def append_pq_pipeline(
     delta = pq.pq_codes(new_corpus, books, id_col=id_col, vec_col=vec_col)
     path = os.path.join(out_dir, "pq_codes")
     delta.write.mode("append").parquet(path)
-    out = _refresh_stage_entry(spark, manifest, "pq_codes")
+    _, appended = _refresh_stage_entry(spark, manifest, "pq_codes")
     return {
         "pq_codes": {
-            "rows": out.count(),
-            "appended": delta.count(),
-            "skipped": False,
+            "rows": _rows(manifest, "pq_codes"), "appended": appended, "skipped": False,
         }
     }
 
@@ -328,7 +326,7 @@ def build_ivfpq_pipeline(
     books = books_holder.get("books")
     if books is None:
         books = pq.books_from_df(books_df)
-    state_df, skipped_s = run_stage(
+    _, skipped_s = run_stage(
         spark,
         manifest,
         "ivfpq_state",
@@ -337,9 +335,9 @@ def build_ivfpq_pipeline(
         partition_by=["list_id"],
     )
     return {
-        "ivfpq_centroids": {"rows": cents_df.count(), "skipped": skipped_c},
-        "ivfpq_books": {"rows": books_df.count(), "skipped": skipped_b},
-        "ivfpq_state": {"rows": state_df.count(), "skipped": skipped_s},
+        "ivfpq_centroids": {"rows": _rows(manifest, "ivfpq_centroids"), "skipped": skipped_c},
+        "ivfpq_books": {"rows": _rows(manifest, "ivfpq_books"), "skipped": skipped_b},
+        "ivfpq_state": {"rows": _rows(manifest, "ivfpq_state"), "skipped": skipped_s},
     }
 
 
@@ -372,30 +370,37 @@ def append_ivfpq_pipeline(
     delta = pq.ivf_pq_state(new_corpus, cents, books, id_col=id_col, vec_col=vec_col)
     path = os.path.join(out_dir, "ivfpq_state")
     delta.write.mode("append").partitionBy("list_id").parquet(path)
-    out = _refresh_stage_entry(spark, manifest, "ivfpq_state")
+    _, appended = _refresh_stage_entry(spark, manifest, "ivfpq_state")
     return {
         "ivfpq_state": {
-            "rows": out.count(),
-            "appended": delta.count(),
-            "skipped": False,
+            "rows": _rows(manifest, "ivfpq_state"), "appended": appended, "skipped": False,
         }
     }
 
 
+def _rows(manifest: Manifest, name: str) -> int:
+    """A stage snapshot's row count as its manifest entry records it:
+    ``run_stage`` and ``_refresh_stage_entry`` count every snapshot they
+    write, and a resumed one only when its count matched, so a report
+    never counts again."""
+    return manifest.stages[name]["rows"]
+
+
 def _refresh_stage_entry(
     spark: SparkSession, manifest: Manifest, name: str
-) -> DataFrame:
+) -> tuple[DataFrame, int]:
     """Re-read a stage snapshot after an in-place append and refresh its
     manifest rows/hash, so later resume verification (run_stage's row-count +
     content-hash checks) accepts the appended table instead of rebuilding —
-    the Iceberg new-snapshot-commit analog on plain parquet."""
+    the Iceberg new-snapshot-commit analog on plain parquet.
+    -> (snapshot, rows it gained over the previous entry)."""
     path = os.path.join(manifest.out_dir, name)
     out = spark.read.parquet(path)
     rows, h = rows_and_hash(out)
     entry = manifest.stages.get(name, {})
     manifest.stages[name] = {"rows": rows, "hash": h, "params": entry.get("params", {})}
     manifest.save()
-    return out
+    return out, rows - entry.get("rows", 0)
 
 
 def append_ivf_pipeline(
@@ -424,12 +429,10 @@ def append_ivf_pipeline(
     delta = ann.ivf_assignments(new_corpus, cents, id_col=id_col, vec_col=vec_col)
     path = os.path.join(out_dir, "ivf_lists")
     delta.write.mode("append").partitionBy("list_id").parquet(path)
-    out = _refresh_stage_entry(spark, manifest, "ivf_lists")
+    _, appended = _refresh_stage_entry(spark, manifest, "ivf_lists")
     return {
         "ivf_lists": {
-            "rows": out.count(),
-            "appended": delta.count(),
-            "skipped": False,
+            "rows": _rows(manifest, "ivf_lists"), "appended": appended, "skipped": False,
         }
     }
 
@@ -463,8 +466,8 @@ def append_graph_pipeline(
         id_col=id_col, vec_col=vec_col,
     ).localCheckpoint(eager=True)
     updated.write.mode("overwrite").parquet(path)
-    out = _refresh_stage_entry(spark, manifest, "graph_edges")
-    return {"graph_edges": {"rows": out.count(), "skipped": False}}
+    _refresh_stage_entry(spark, manifest, "graph_edges")
+    return {"graph_edges": {"rows": _rows(manifest, "graph_edges"), "skipped": False}}
 
 
 def build_cell_pipeline(
@@ -538,7 +541,7 @@ def build_cell_pipeline(
     )
     # the multi-level count lut (<= 5x|cells| rows): cell_knn plans each
     # batch on the driver from its lv == res slice
-    lut_df, skipped_l = run_stage(
+    _, skipped_l = run_stage(
         spark,
         manifest,
         "cell_lut",
@@ -547,10 +550,9 @@ def build_cell_pipeline(
         ),
         params=params,
     )
-    # run_stage wrote or verified these counts; recounting costs two actions
     return {
-        "cell_corpus": {"rows": manifest.stages["cell_corpus"]["rows"], "skipped": skipped_c},
-        "cell_lut": {"rows": manifest.stages["cell_lut"]["rows"], "skipped": skipped_l},
+        "cell_corpus": {"rows": _rows(manifest, "cell_corpus"), "skipped": skipped_c},
+        "cell_lut": {"rows": _rows(manifest, "cell_lut"), "skipped": skipped_l},
     }
 
 
@@ -603,10 +605,10 @@ def build_text_pipeline(
         lambda: build_postings(docs, id_col, text_col),
         params=params,
     )
-    tdf, sk2 = run_stage(
+    _, sk2 = run_stage(
         spark, manifest, "text_df", lambda: term_df(post), params=params
     )
-    stats, sk3 = run_stage(
+    _, sk3 = run_stage(
         spark,
         manifest,
         "text_stats",
@@ -616,9 +618,9 @@ def build_text_pipeline(
         params=params,
     )
     return {
-        "text_postings": {"rows": post.count(), "skipped": sk1},
-        "text_df": {"rows": tdf.count(), "skipped": sk2},
-        "text_stats": {"rows": stats.count(), "skipped": sk3},
+        "text_postings": {"rows": _rows(manifest, "text_postings"), "skipped": sk1},
+        "text_df": {"rows": _rows(manifest, "text_df"), "skipped": sk2},
+        "text_stats": {"rows": _rows(manifest, "text_stats"), "skipped": sk3},
     }
 
 
@@ -647,7 +649,7 @@ def append_text_pipeline(
     manifest = Manifest(out_dir)
     delta = build_postings(new_docs, id_col, text_col).localCheckpoint(eager=True)
     delta.write.mode("append").parquet(os.path.join(out_dir, "text_postings"))
-    post = _refresh_stage_entry(spark, manifest, "text_postings")
+    _, appended = _refresh_stage_entry(spark, manifest, "text_postings")
 
     tdf_path = os.path.join(out_dir, "text_df")
     merged = (
@@ -658,7 +660,7 @@ def append_text_pipeline(
         .localCheckpoint(eager=True)  # a lazy plan cannot overwrite its input
     )
     merged.write.mode("overwrite").parquet(tdf_path)
-    tdf = _refresh_stage_entry(spark, manifest, "text_df")
+    _refresh_stage_entry(spark, manifest, "text_df")
 
     stats_path = os.path.join(out_dir, "text_stats")
     old = spark.read.parquet(stats_path).first()
@@ -676,8 +678,8 @@ def append_text_pipeline(
     ).write.mode("overwrite").parquet(stats_path)
     _refresh_stage_entry(spark, manifest, "text_stats")
     return {
-        "text_postings": {"rows": post.count(), "appended": delta.count()},
-        "text_df": {"rows": tdf.count()},
+        "text_postings": {"rows": _rows(manifest, "text_postings"), "appended": appended},
+        "text_df": {"rows": _rows(manifest, "text_df")},
     }
 
 
@@ -767,7 +769,7 @@ def build_dedup_pipeline(
         "n": n, "num_hashes": num_hashes, "bands": bands,
         "id_col": id_col, "text_col": text_col,
     }
-    sha, sk1 = run_stage(
+    _, sk1 = run_stage(
         spark,
         manifest,
         "dedup_sha",
@@ -785,7 +787,7 @@ def build_dedup_pipeline(
         lambda: DD._doc_shingles(docs, id_col, text_col, n),
         params=params,
     )
-    bnd, sk3 = run_stage(
+    _, sk3 = run_stage(
         spark,
         manifest,
         "dedup_bands",
@@ -797,9 +799,9 @@ def build_dedup_pipeline(
         params=params,
     )
     return {
-        "dedup_sha": {"rows": sha.count(), "skipped": sk1},
-        "dedup_shingles": {"rows": sh.count(), "skipped": sk2},
-        "dedup_bands": {"rows": bnd.count(), "skipped": sk3},
+        "dedup_sha": {"rows": _rows(manifest, "dedup_sha"), "skipped": sk1},
+        "dedup_shingles": {"rows": _rows(manifest, "dedup_shingles"), "skipped": sk2},
+        "dedup_bands": {"rows": _rows(manifest, "dedup_bands"), "skipped": sk3},
     }
 
 
@@ -868,7 +870,7 @@ def append_dedup_pipeline(
         eager=True
     )
     new_sh.write.mode("append").parquet(os.path.join(out_dir, "dedup_shingles"))
-    sh_all = _refresh_stage_entry(spark, manifest, "dedup_shingles")
+    sh_all, sh_appended = _refresh_stage_entry(spark, manifest, "dedup_shingles")
 
     new_bands = DD._band_rows(
         new_sh.withColumn("sig", T.minhash_sig_vec(F.col("sh"), num_hashes)),
@@ -876,7 +878,7 @@ def append_dedup_pipeline(
         bands,
     ).localCheckpoint(eager=True)
     new_bands.write.mode("append").parquet(os.path.join(out_dir, "dedup_bands"))
-    bands_all = _refresh_stage_entry(spark, manifest, "dedup_bands")
+    bands_all, _ = _refresh_stage_entry(spark, manifest, "dedup_bands")
 
     cands = (
         new_bands.select(F.col("did").alias("id_n"), "band", "key")
@@ -893,9 +895,9 @@ def append_dedup_pipeline(
     ).localCheckpoint(eager=True)
     pairs.write.mode("overwrite").parquet(os.path.join(out_dir, "dedup_new_pairs"))
     return {
-        "dedup_sha": {"rows": merged.count(), "exact_hits": n_exact},
-        "dedup_shingles": {"rows": sh_all.count(), "appended": new_sh.count()},
-        "dedup_bands": {"rows": bands_all.count()},
+        "dedup_sha": {"rows": _rows(manifest, "dedup_sha"), "exact_hits": n_exact},
+        "dedup_shingles": {"rows": _rows(manifest, "dedup_shingles"), "appended": sh_appended},
+        "dedup_bands": {"rows": _rows(manifest, "dedup_bands")},
         "dedup_new_pairs": {"rows": pairs.count()},
     }
 
@@ -938,7 +940,7 @@ def build_lsh_pipeline(
         "dim": int(dim), "id_col": id_col, "vec_col": vec_col,
     }
     planes = ann._hyperplanes(dim, n_tables, bits, seed)
-    sig_df, skipped = run_stage(
+    _, skipped = run_stage(
         spark,
         manifest,
         "lsh_signatures",
@@ -952,7 +954,7 @@ def build_lsh_pipeline(
         params=params,
         partition_by=["tbl"],
     )
-    return {"lsh_signatures": {"rows": sig_df.count(), "skipped": skipped}}
+    return {"lsh_signatures": {"rows": _rows(manifest, "lsh_signatures"), "skipped": skipped}}
 
 
 def load_lsh(spark: SparkSession, out_dir: str):
@@ -993,9 +995,9 @@ def append_lsh_pipeline(
     )
     path = os.path.join(out_dir, "lsh_signatures")
     delta.write.mode("append").partitionBy("tbl").parquet(path)
-    out = _refresh_stage_entry(spark, manifest, "lsh_signatures")
+    _, appended = _refresh_stage_entry(spark, manifest, "lsh_signatures")
     return {
         "lsh_signatures": {
-            "rows": out.count(), "appended": delta.count(), "skipped": False,
+            "rows": _rows(manifest, "lsh_signatures"), "appended": appended, "skipped": False,
         }
     }

@@ -86,27 +86,19 @@ def stream_pip_counts(
     tagged with their containing polygon and counted per (event-time
     window, polygon).
 
-    The containment test is STREAM-STATIC: the polygon cover cells and the
-    per-polygon edges-ARRAY table are static broadcast sides, and the
-    ray-cast parity is a higher-order expression
-    (operators/pip.point_in_polygon_arrays) — stateless, so the single
-    stateful operator in the plan is the final watermarked window count
-    (Structured Streaming's one-stateful-agg sweet spot).
+    The containment test is STREAM-STATIC: ``operators/pip._contained``,
+    the batch join's plan — broadcast cover cells and per-polygon edge
+    arrays, ray-cast parity as a higher-order expression — is stateless,
+    so the single stateful operator in the plan is the final watermarked
+    window count (Structured Streaming's one-stateful-agg sweet spot).
+    ``geo_stream`` carries each page's ``cell`` at ``res`` and its
+    ``lat``/``lon``.
     """
-    from countrymaam_spark.operators.pip import (
-        _cover_cells,
-        _crossing_pred,
-        _edges_arrays,
-    )
+    from countrymaam_spark.operators.pip import _contained, _cover_cells
 
-    cand = geo_stream.join(F.broadcast(_cover_cells(edges, res)), "cell")
-    withe = cand.join(F.broadcast(_edges_arrays(edges)), "poly_id")
-    # size(filter(...)) form — see point_in_polygon_arrays for why the
-    # aggregate HOF cannot sit downstream of the geotag UDF
-    crossings = F.size(F.filter(F.col("edges_arr"), _crossing_pred))
-    inside = withe.select(
-        "warc_ts", "poly_id", crossings.alias("_crossings")
-    ).filter(F.col("_crossings") % 2 == 1)
+    inside = _contained(geo_stream, _cover_cells(edges, res), edges).select(
+        "warc_ts", "poly_id"
+    )
     return (
         inside.withWatermark("warc_ts", watermark)
         .groupBy(F.window("warc_ts", window).alias("w"), "poly_id")

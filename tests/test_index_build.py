@@ -231,6 +231,80 @@ def test_cell_pipeline_report_rows_are_snapshot_counts(spark, geo_small, tmp_pat
         }
 
 
+_EMB = "/root/testdata/sf0.001/embeddings.parquet"
+_DOCS = "/root/testdata/sf0.001/documents.parquet"
+
+
+def _family(spark, name):
+    """(build(out, df), append(out, df, all_df) or None, base, delta, all)
+    for one persisted index family, over small fixture slices."""
+    if name == "index":
+        pages = pg.load_pages(spark, "/root/testdata/sf0.001")
+        return (
+            lambda out, df: pipeline.build_index_pipeline(spark, df, out, target_group_rows=500),
+            None, pages, None, pages,
+        )
+    if name in ("text", "dedup"):
+        docs = spark.read.parquet(_DOCS).select("doc_id", "text").filter(F.col("doc_id") < 200)
+        base, delta = docs.filter(F.col("doc_id") < 150), docs.filter(F.col("doc_id") >= 150)
+        build = getattr(pipeline, f"build_{name}_pipeline")
+        append = getattr(pipeline, f"append_{name}_pipeline")
+        return (
+            lambda out, df: build(spark, df, out),
+            lambda out, df, _all: append(spark, df, out),
+            base, delta, docs,
+        )
+    vecs = spark.read.parquet(_EMB).select("vec_id", "embedding").filter(F.col("vec_id") < 120)
+    base, delta = vecs.filter(F.col("vec_id") < 90), vecs.filter(F.col("vec_id") >= 90)
+    kw = {
+        "graph": {"k": 5, "max_iter": 2},
+        "ivf": {"n_lists": 4},
+        "pq": {"m": 4, "ksub": 8},
+        "ivfpq": {"n_lists": 4, "m": 4, "ksub": 8},
+        "lsh": {"n_tables": 2, "bits": 3},
+    }[name]
+    build = getattr(pipeline, f"build_{name}_pipeline")
+    append = getattr(pipeline, f"append_{name}_pipeline")
+    if name == "graph":
+        return (
+            lambda out, df: build(spark, df, out, **kw),
+            lambda out, df, all_df: append(spark, all_df, df.select("vec_id"), out, **kw),
+            base, delta, vecs,
+        )
+    return (
+        lambda out, df: build(spark, df, out, **kw),
+        lambda out, df, _all: append(spark, df, out),
+        base, delta, vecs,
+    )
+
+
+@pytest.mark.parametrize(
+    "family", ["index", "graph", "ivf", "pq", "ivfpq", "text", "dedup", "lsh"]
+)
+def test_pipeline_report_rows_are_snapshot_counts(spark, tmp_path, family):
+    """Every build and append report gives each stage's rows as the count
+    of the snapshot it left, and an append's ``appended`` as the rows the
+    snapshot gained — taken from the manifest, not counted again."""
+    build, append, base, delta, all_df = _family(spark, family)
+    out = str(tmp_path / family)
+
+    def snapshot_rows(stage):
+        return spark.read.parquet(os.path.join(out, stage)).count()
+
+    for want_skipped in (False, True):
+        rep = build(out, base)
+        assert rep and all(v["skipped"] == want_skipped for v in rep.values())
+        assert {s: v["rows"] for s, v in rep.items()} == {s: snapshot_rows(s) for s in rep}
+    if append is None:
+        return
+    before = {s: snapshot_rows(s) for s in rep}
+    rep = append(out, delta, all_df)
+    assert {s: v["rows"] for s, v in rep.items()} == {s: snapshot_rows(s) for s in rep}
+    for s, v in rep.items():
+        if "appended" in v:
+            assert v["appended"] == snapshot_rows(s) - before[s] > 0
+
+
 def test_two_runs_identical_content(spark, tmp_path):
     pages = pg.load_pages(spark, "/root/testdata/sf0.001")
     a = str(tmp_path / "a")

@@ -71,44 +71,61 @@ def test_tile_counts_sum(spark, geo_small):
     assert tc == n
 
 
-def test_pip_no_broadcast_matches_and_smj_plan(spark):
-    """Large-polygon-set path: results identical to the broadcast plan, and
-    the physical plan actually uses a shuffle join (no BroadcastHashJoin on
-    the polygon side) when broadcasting is off and below-threshold
-    auto-broadcast is disabled."""
-    import numpy as np
+def test_tiles_drop_null_and_nan_coordinates(spark):
+    """Every tile entry point and its SQL oracle drop a page whose lat or
+    lon is NULL or NaN (a NaN compares above every number, so unfiltered it
+    clamps into an edge tile), and otherwise agree row for row."""
+    import pyarrow as pa
 
-    from countrymaam_spark.operators.pip import point_in_polygon
+    from countrymaam_spark.operators import tiles as T
 
-    rng = np.random.default_rng(7)
-    pages = spark.createDataFrame(
-        [(f"u{i}", float(lat), float(lon))
-         for i, (lat, lon) in enumerate(zip(rng.uniform(-60, 60, 3000),
-                                            rng.uniform(-170, 170, 3000)))],
-        "url string, lat double, lon double",
+    nan = float("nan")
+    coords = [
+        (1.0, 1.0), (45.0, -120.0), (-30.0, 150.0),
+        (nan, 1.0), (1.0, nan), (nan, nan), (None, 1.0), (1.0, None),
+    ]
+    pages = [
+        (f"http://h{i % 2}.example/p{i}", lat, lon, f"alpha beta page{i} gamma")
+        for i, (lat, lon) in enumerate(coords)
+    ]
+    valid = {u for u, *_ in pages[:3]}
+    df = spark.createDataFrame(pages, "url string, lat double, lon double, text string")
+    views = [(1, -50.0, 50.0, -130.0, 160.0)]
+    views_df = spark.createDataFrame(
+        views, "view_id long, lat_lo double, lat_hi double, lon_lo double, lon_hi double"
     )
-    rows = []
-    for pid in range(500):  # 500 random square polygons, 4 edges each
-        la = float(rng.uniform(-55, 55)); lo = float(rng.uniform(-165, 165))
-        s = float(rng.uniform(1.0, 6.0))
-        corners = [(la, lo), (la, lo + s), (la + s, lo + s), (la + s, lo)]
-        for j in range(4):
-            (a1, o1), (a2, o2) = corners[j], corners[(j + 1) % 4]
-            rows.append((pid, a1, o1, a2, o2))
-    edges = spark.createDataFrame(rows, "poly_id long, lat1 double, lon1 double, lat2 double, lon2 double")
-
-    bc = {tuple(r) for r in point_in_polygon(pages, edges, res=6).collect()}
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    con = duckdb.connect()
+    con.register("pages", pa.table({
+        "url": [p[0] for p in pages],
+        "lat": pa.array([p[1] for p in pages], pa.float64()),
+        "lon": pa.array([p[2] for p in pages], pa.float64()),
+        "text": [p[3] for p in pages],
+    }))
+    con.register("views", pa.table(dict(zip(
+        ("view_id", "lat_lo", "lat_hi", "lon_lo", "lon_hi"), map(list, zip(*views))
+    ))))
+    cases = {
+        "assign_tiles": (T.assign_tiles(df, [4, 8]), T.assign_tiles_sql("pages", [4, 8])),
+        "tile_counts": (T.tile_counts(df, [4, 8]), T.tile_counts_sql("pages", [4, 8])),
+        "quadkey_counts": (T.quadkey_counts(df, 4), T.quadkey_counts_sql("pages", 4)),
+        "update_quadkey_counts": (
+            T.update_quadkey_counts(T.quadkey_counts(df.limit(0), 4), df, 4),
+            T.quadkey_counts_sql("pages", 4),
+        ),
+        "viewport_join": (T.viewport_join(df, views_df), T.viewport_join_sql("pages", "views")),
+        "tile_domains": (T.tile_domains(df, 4), T.tile_domains_sql("pages", 4)),
+        "tile_top_pages": (T.tile_top_pages(df, 4), T.tile_top_pages_sql("pages", 4)),
+        "tile_terms": (T.tile_terms(df, 4), T.tile_terms_sql("pages", 4)),
+    }
     try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        big_df = point_in_polygon(pages, edges, res=6, broadcast_polygons=False)
-        plan = big_df._jdf.queryExecution().executedPlan().toString()
-        assert "BroadcastHashJoin" not in plan
-        assert ("SortMergeJoin" in plan) or ("ShuffledHashJoin" in plan)
-        big = {tuple(r) for r in big_df.collect()}
+        for name, (got_df, sql) in cases.items():
+            got = sorted(tuple(r) for r in got_df.collect())
+            want = sorted(tuple(r) for r in con.execute(sql).fetchall())
+            assert got == want, name
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    assert big == bc and len(bc) > 0
+        con.close()
+    assert {r["url"] for r in T.assign_tiles(df, [4]).collect()} == valid
+    assert T.tile_counts(df, [4]).agg(F.sum("n_pages")).first()[0] == len(valid)
 
 
 def test_tile_bounds_roundtrip_contains_points(spark, geo_small):
@@ -209,14 +226,6 @@ def test_pip_compact_matches_standard(spark, geo_small):
         for r in point_in_polygon_compact(geo_small, edges, res=6, min_res=3).collect()
     }
     assert a == b and len(a) > 0
-    # shuffle path (broadcast off) agrees too
-    c = {
-        (r["poly_id"], r["url"])
-        for r in point_in_polygon_compact(
-            geo_small, edges, res=6, min_res=3, broadcast_polygons=False
-        ).collect()
-    }
-    assert a == c
 
 
 def test_polygon_stats_matches_oracle(spark):
@@ -301,32 +310,85 @@ def test_tile_domains_matches_oracle(spark, geo_small):
     assert all(n <= counts[(z, x, y)] for z, x, y, n in got)
 
 
-def test_pip_arrays_matches_standard(spark, geo_small):
-    """Higher-order-expression verify == aggregation verify; and the plan
-    has no exchange after the candidate join (whole verify is expressions)."""
-    from countrymaam_spark.operators.pip import point_in_polygon_arrays
-
+def test_pip_plan_has_no_candidate_exchange(spark, geo_small):
+    """The verify is expressions over broadcast edge arrays: the plan has no
+    exchange after the candidate join."""
     out = pg.fixture_dir("sf0.001")
     edges = spark.read.parquet(os.path.join(out, "polygon_edges.parquet"))
-    a = {(r["poly_id"], r["url"]) for r in point_in_polygon(geo_small, edges, res=6).collect()}
-    b = {
-        (r["poly_id"], r["url"])
-        for r in point_in_polygon_arrays(geo_small, edges, res=6).collect()
-    }
-    assert a == b and len(a) > 0
     plan = (
-        point_in_polygon_arrays(geo_small, edges, res=6)
+        point_in_polygon(geo_small, edges, res=6)
         ._jdf.queryExecution().executedPlan().toString()
     )
     # the corpus path has NO exchange: every shuffle in the plan is a
     # dim-table build keyed on poly_id (cover bbox agg / edges collect_list);
-    # in particular the standard path's verify shuffle — keyed on the
-    # candidate (poly_id, url) — must be gone
+    # in particular no verify shuffle keyed on the candidate (poly_id, url)
     shuffles = [
         ln for ln in plan.splitlines()
         if "Exchange" in ln and "BroadcastExchange" not in ln
     ]
     assert all("poly_id" in ln and "url" not in ln for ln in shuffles), shuffles
+
+
+_EDGES_SCHEMA = "poly_id long, lat1 double, lon1 double, lat2 double, lon2 double"
+
+
+def _ring(pid, corners):
+    return [(pid, *corners[j], *corners[(j + 1) % len(corners)]) for j in range(len(corners))]
+
+
+@pytest.mark.parametrize("op", ["point_in_polygon", "point_in_polygon_compact"])
+def test_pip_edge_cases_match_oracle(spark, op):
+    """Boundary and degenerate inputs agree with the brute-force oracle:
+    points on a vertex, a horizontal edge and a vertical edge (the half-open
+    rule), NULL and NaN coordinates, polygons whose bbox reaches the +-180 /
+    +-90 grid clamp, and an empty edge table."""
+    import pyarrow as pa
+
+    from countrymaam_spark.operators import pip
+
+    run = getattr(pip, op)
+    square = [(0.0, 0.0), (0.0, 10.0), (10.0, 10.0), (10.0, 0.0)]
+    edges_rows = (
+        _ring(1, square)
+        + _ring(2, [(80.0, 170.0), (80.0, 180.0), (90.0, 180.0), (90.0, 170.0)])
+        + _ring(3, [(-90.0, -180.0), (-90.0, -170.0), (-80.0, -170.0), (-80.0, -180.0)])
+    )
+    nan = float("nan")
+    pts = [
+        (0.0, 0.0), (10.0, 10.0), (0.0, 10.0), (10.0, 0.0),  # vertices
+        (0.0, 5.0), (10.0, 5.0),  # on the horizontal edges
+        (5.0, 0.0), (5.0, 10.0),  # on the vertical edges
+        (5.0, 5.0), (11.0, 5.0),  # inside / outside
+        (nan, 5.0), (5.0, nan), (nan, nan), (None, 5.0), (5.0, None),
+        (85.0, 175.0), (89.99, 179.99), (90.0, 180.0), (80.0, 180.0),
+        (-85.0, -175.0), (-89.99, -179.99), (-90.0, -180.0),
+    ]
+    pages = [(f"u{i}", lat, lon) for i, (lat, lon) in enumerate(pts)]
+    pages_df = spark.createDataFrame(pages, "url string, lat double, lon double")
+    pages_tbl = pa.table({
+        "url": [u for u, _, _ in pages],
+        "lat": pa.array([la for _, la, _ in pages], pa.float64()),
+        "lon": pa.array([lo for _, _, lo in pages], pa.float64()),
+    })
+    for rows in (edges_rows, []):
+        edges_df = spark.createDataFrame(rows, _EDGES_SCHEMA)
+        edges_tbl = pa.Table.from_pylist(
+            [dict(zip(("poly_id", "lat1", "lon1", "lat2", "lon2"), r)) for r in rows],
+            schema=pa.schema([("poly_id", pa.int64())] + [
+                (c, pa.float64()) for c in ("lat1", "lon1", "lat2", "lon2")
+            ]),
+        )
+        con = duckdb.connect()
+        con.register("pages", pages_tbl)
+        con.register("edges", edges_tbl)
+        want = set(con.execute(point_in_polygon_sql("pages", "edges")).fetchall())
+        con.close()
+        got = [(r["poly_id"], r["url"]) for r in run(pages_df, edges_df, res=6).collect()]
+        assert len(got) == len(set(got))
+        assert set(got) == want
+        if rows:
+            # the interior and clamp-reaching points are found
+            assert {(1, "u8"), (2, "u15"), (2, "u16"), (3, "u19"), (3, "u20")} <= want
 
 
 def test_tile_top_pages_oracle_and_plan(spark):
