@@ -28,7 +28,7 @@ by driver-side plans.
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 EARTH_RADIUS_KM = 6371.0088
@@ -53,6 +53,15 @@ def valid_point(lat: Column, lon: Column) -> Column:
     NaN. A NaN compares greater than every number, so an unfiltered NaN
     clamps into an edge row or column of a grid instead of dropping out."""
     return lat.isNotNull() & lon.isNotNull() & ~F.isnan(lat) & ~F.isnan(lon)
+
+
+def located(df: DataFrame) -> DataFrame:
+    """The rows of ``df`` whose ``lat``/``lon`` pair is usable
+    (:func:`valid_point`). The kNN, pip and tiles operators filter their
+    queries and pages through this: a NaN coordinate that reached
+    haversine's ``least(a, 1)`` would come back 20015 km from everything
+    instead of having no location."""
+    return df.filter(valid_point(F.col("lat"), F.col("lon")))
 
 
 def valid_point_sql(lat: str, lon: str) -> str:

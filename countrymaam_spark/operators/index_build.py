@@ -48,7 +48,7 @@ CAND_SCHEMA = (
 def encode_pages(pages_geo: DataFrame, res: int = 7, parent_res: int = 4) -> DataFrame:
     """pages -> (url, lat, lon, cell, parent): the index's base table."""
     return (
-        pages_geo.filter(F.col("lat").isNotNull())
+        geo.located(pages_geo)
         .select("url", "lat", "lon")
         .withColumn("cell", geo.encode_cell(F.col("lat"), F.col("lon"), res))
         .withColumn("parent", geo.cell_parent(F.col("cell"), parent_res, res))

@@ -21,8 +21,9 @@ Two paths, mirroring the reference's index zoo:
   reference's recall-vs-effort knob (countrymaam.go:40-45) is
   ``index_build.knn_tree(search_k=)``.
 
-A query with a NULL or NaN coordinate has no distance to anything: every
-kNN path here returns no rows for it.
+A query or page with a NULL or NaN coordinate has no location
+(``geo.located``): every kNN path here returns no rows for such a query and
+never returns such a page, and the DuckDB oracles drop both the same way.
 
 Corpus urls are keys. Every corpus row is a candidate and no path
 deduplicates (query_id, url) before its top-k, so a url stored twice is
@@ -85,18 +86,11 @@ def _widen(narrow: DataFrame) -> DataFrame:
     return narrow
 
 
-def _valid_queries(queries: DataFrame) -> DataFrame:
-    """The queries with a usable coordinate pair. Without this filter a NULL
-    coordinate makes haversine's ``least(a, 1)`` skip the NULL and return
-    the antipodal distance for every page."""
-    return queries.filter(geo.valid_point(F.col("lat"), F.col("lon")))
-
-
 def _query_batch(queries: DataFrame) -> pd.DataFrame:
     """The valid queries collected to the driver as pandas (query_id, lat,
     lon as doubles): the one job a driver-planned serving call spends on
     its batch."""
-    return _valid_queries(queries).select(
+    return geo.located(queries).select(
         "query_id", F.col("lat").cast("double"), F.col("lon").cast("double")
     ).toPandas()
 
@@ -114,12 +108,12 @@ def flat_knn(pages_geo: DataFrame, queries: DataFrame, k: int = 10) -> DataFrame
     """Exact kNN: (query_id, rk, url, dist_km). pages_geo needs url/lat/lon;
     queries needs query_id/lat/lon."""
     q = F.broadcast(
-        _valid_queries(queries).select(
+        geo.located(queries).select(
             "query_id", F.col("lat").alias("qlat"), F.col("lon").alias("qlon")
         )
     )
     pairs = (
-        _widen(pages_geo.filter(F.col("lat").isNotNull()).select("url", "lat", "lon"))
+        _widen(geo.located(pages_geo).select("url", "lat", "lon"))
         .crossJoin(q)
         .withColumn(
             "dist_km",
@@ -154,8 +148,8 @@ def flat_knn_sql(pages_rel: str, queries_rel: str, k: int = 10) -> str:
                        ORDER BY {hav} ASC, p.url ASC
                    ) AS rk
             FROM {pages_rel} p, {queries_rel} q
-            WHERE p.lat IS NOT NULL AND q.lat IS NOT NULL AND q.lon IS NOT NULL
-              AND NOT isnan(q.lat) AND NOT isnan(q.lon)
+            WHERE {geo.valid_point_sql('p.lat', 'p.lon')}
+              AND {geo.valid_point_sql('q.lat', 'q.lon')}
         ) t
         WHERE rk <= {k}
     """
@@ -178,7 +172,7 @@ def build_cell_stats(pages_geo: DataFrame, res: int, cell_col: str | None = None
         F.col("lat"), F.col("lon"), res
     )
     return (
-        pages_geo.filter(F.col("lat").isNotNull())
+        geo.located(pages_geo)
         .select(cell.alias("cell"))
         .groupBy("cell")
         .agg(F.count("*").alias("cnt"))
@@ -199,15 +193,22 @@ def update_cell_stats(
     same state, and the result is exactly ``build_cell_stats`` over the
     unioned corpus (pytest-pinned).
     """
-    delta = build_cell_stats(new_pages_geo, res, cell_col=cell_col)
+    return merge_counts(
+        stats_old, build_cell_stats(new_pages_geo, res, cell_col=cell_col), ["cell"], "cnt"
+    )
+
+
+def merge_counts(old: DataFrame, delta: DataFrame, keys: list[str], cnt: str) -> DataFrame:
+    """``old`` plus ``delta``, two count tables keyed by ``keys``: one
+    full-outer join, and the ``cnt`` columns added with a missing side
+    counting 0. Commutative and associative, so any order of appends gives
+    the same table as one count over all of them."""
     return (
-        stats_old.withColumnRenamed("cnt", "_a")
-        .join(delta.withColumnRenamed("cnt", "_b"), "cell", "full_outer")
+        old.withColumnRenamed(cnt, "_a")
+        .join(delta.withColumnRenamed(cnt, "_b"), keys, "full_outer")
         .select(
-            "cell",
-            (F.coalesce(F.col("_a"), F.lit(0)) + F.coalesce(F.col("_b"), F.lit(0))).alias(
-                "cnt"
-            ),
+            *keys,
+            (F.coalesce(F.col("_a"), F.lit(0)) + F.coalesce(F.col("_b"), F.lit(0))).alias(cnt),
         )
     )
 
@@ -218,27 +219,25 @@ def _plan_levels(res: int) -> list[int]:
     return [lv for lv in range(res, res - 5, -1) if lv >= 0]
 
 
-def _rollup_lut(counts: DataFrame, res: int, levels: list[int]) -> DataFrame:
-    """(lv, cell, cnt) over every planning level, built in ONE shuffle: each
-    finest-level count row explodes into its <=5 (lv, ancestor)
-    contributions and a single groupBy sums them."""
-    return (
-        counts.select(
-            "cnt",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(lv).alias("lv"),
-                            geo.cell_parent(F.col("cell"), lv, res).alias("cell"),
-                        )
-                        for lv in levels
-                    ]
+def lut_rows(df: DataFrame, res: int, *carry: str) -> DataFrame:
+    """(*carry, lv, cell): each row of ``df`` (a ``cell`` at ``res``)
+    exploded into one row per lut level, holding its ancestor cell at that
+    level. The lut is these rows counted per (lv, cell), whether a batch
+    build sums them (:func:`build_cell_lut`) or a stream counts them
+    (``streaming.maintain.maintain_cell_lut_stream``)."""
+    lc = F.explode(
+        F.array(
+            *[
+                F.struct(
+                    F.lit(lv).alias("lv"),
+                    geo.cell_parent(F.col("cell"), lv, res).alias("cell"),
                 )
-            ).alias("lc"),
+                for lv in _plan_levels(res)
+            ]
         )
-        .groupBy(F.col("lc.lv").alias("lv"), F.col("lc.cell").alias("cell"))
-        .agg(F.sum("cnt").alias("cnt"))
+    ).alias("lc")
+    return df.select(*carry, lc).select(
+        *carry, F.col("lc.lv").alias("lv"), F.col("lc.cell").alias("cell")
     )
 
 
@@ -250,8 +249,9 @@ def build_cell_lut(stats: DataFrame, res: int) -> DataFrame:
     The index persists THIS table; pass it as ``cell_knn(stats=...)`` and
     the planner detects the ``lv`` column and collects only its
     ``lv == res`` slice. Appends maintain it the same way as the stats
-    table: roll up the batch's delta lut and merge per (lv, cell)."""
-    return _rollup_lut(stats, res, _plan_levels(res))
+    table: roll up the batch's delta lut and merge per (lv, cell). Built
+    in ONE shuffle: the explode of :func:`lut_rows` and a single groupBy."""
+    return lut_rows(stats, res, "cnt").groupBy("lv", "cell").agg(F.sum("cnt").alias("cnt"))
 
 
 def update_cell_lut(
@@ -265,17 +265,7 @@ def update_cell_lut(
     the result equals ``build_cell_lut`` over the unioned corpus
     (pytest-pinned)."""
     delta = build_cell_lut(build_cell_stats(new_pages_geo, res, cell_col=cell_col), res)
-    return (
-        lut_old.withColumnRenamed("cnt", "_a")
-        .join(delta.withColumnRenamed("cnt", "_b"), ["lv", "cell"], "full_outer")
-        .select(
-            "lv",
-            "cell",
-            (F.coalesce(F.col("_a"), F.lit(0)) + F.coalesce(F.col("_b"), F.lit(0))).alias(
-                "cnt"
-            ),
-        )
-    )
+    return merge_counts(lut_old, delta, ["lv", "cell"], "cnt")
 
 
 def _cell_corpus(pages_geo: DataFrame, res: int, cell_col: str | None = None) -> DataFrame:
@@ -284,7 +274,7 @@ def _cell_corpus(pages_geo: DataFrame, res: int, cell_col: str | None = None) ->
     per-batch encode) or ``geo.encode_cell`` at ``res``."""
     cell = F.col(cell_col) if cell_col else geo.encode_cell(F.col("lat"), F.col("lon"), res)
     return _widen(
-        pages_geo.filter(F.col("lat").isNotNull()).select("url", "lat", "lon", cell.alias("cell"))
+        geo.located(pages_geo).select("url", "lat", "lon", cell.alias("cell"))
     )
 
 
@@ -658,7 +648,7 @@ def radius_join_sql(pages_rel: str, queries_rel: str, radius_km: float) -> str:
     return f"""
         SELECT q.query_id, p.url, ROUND({hav}, 6) AS dist_km
         FROM {pages_rel} p, {queries_rel} q
-        WHERE p.lat IS NOT NULL AND {hav} <= {radius_km!r}
+        WHERE {geo.valid_point_sql('p.lat', 'p.lon')} AND {hav} <= {radius_km!r}
     """
 
 
@@ -692,7 +682,7 @@ def geo_near_pairs(
     dx == nx/2 and inside the polar full-wrap band need their own dedup,
     exactly the rows where a miss is silent).
     """
-    both = pages_geo.filter(F.col("lat").isNotNull())
+    both = geo.located(pages_geo)
     qs = both.select(F.col("url").alias("query_id"), "lat", "lon")
     pairs = radius_join(both, qs, radius_km, res=res, cell_col=cell_col)
     return pairs.filter(F.col("query_id") < F.col("url")).select(
@@ -716,7 +706,8 @@ def geo_near_pairs_sql(pages_rel: str, radius_km: float) -> str:
     return f"""
         SELECT a.url AS url_a, b.url AS url_b, ROUND({hav}, 6) AS dist_km
         FROM {pages_rel} a, {pages_rel} b
-        WHERE a.lat IS NOT NULL AND b.lat IS NOT NULL
+        WHERE {geo.valid_point_sql('a.lat', 'a.lon')}
+          AND {geo.valid_point_sql('b.lat', 'b.lon')}
           AND b.lat BETWEEN a.lat - {band!r} AND a.lat + {band!r}
           AND a.url < b.url AND {hav} <= {radius_km!r}
     """
@@ -753,7 +744,7 @@ def cell_density_sql(pages_rel: str, res: int, radius: int = 1) -> str:
     return f"""
         WITH c AS (
             SELECT {cell} AS cell, COUNT(*) AS cnt
-            FROM {pages_rel} WHERE lat IS NOT NULL GROUP BY 1
+            FROM {pages_rel} WHERE {geo.valid_point_sql('lat', 'lon')} GROUP BY 1
         ),
         d AS (
             SELECT cell, cnt,
@@ -871,7 +862,7 @@ def knn_join(
     from countrymaam_spark.functions import text as T
 
     qid = T.tok_hash(F.concat(F.lit(salt), F.col("url")))
-    q = pages_geo.filter(F.col("lat").isNotNull()).select(
+    q = geo.located(pages_geo).select(
         qid.alias("query_id"), "lat", "lon"
     )
     if query_mod is not None:
@@ -916,8 +907,8 @@ def knn_join_sql(
             FROM {pages_rel} p,
                  (SELECT {qh} AS query_id, lat, lon
                   FROM {pages_rel}
-                  WHERE lat IS NOT NULL {mod}) q
-            WHERE p.lat IS NOT NULL AND {ph} <> q.query_id
+                  WHERE {geo.valid_point_sql('lat', 'lon')} {mod}) q
+            WHERE {geo.valid_point_sql('p.lat', 'p.lon')} AND {ph} <> q.query_id
         ) t
         WHERE rk <= {k}
     """
@@ -1013,7 +1004,7 @@ def reverse_knn(
         .select(F.col("query_id").alias("_tid"), F.col("dist_km").alias("radius_km"))
     )
     qid = T.tok_hash(F.concat(F.lit(salt), F.col("url")))
-    targets = pages_geo.filter(F.col("lat").isNotNull()).select(
+    targets = geo.located(pages_geo).select(
         qid.alias("_tid"), F.col("url").alias("_turl"), "lat", "lon"
     )
     if target_mod is not None:
@@ -1053,7 +1044,7 @@ def reverse_knn_sql(
     return f"""
         WITH rk_t AS (
             SELECT url, lat, lon FROM {pages_rel} t
-            WHERE lat IS NOT NULL {mod}
+            WHERE {geo.valid_point_sql('lat', 'lon')} {mod}
         ),
         rk_r AS (
             SELECT url, radius_km FROM (
@@ -1063,7 +1054,7 @@ def reverse_knn_sql(
                            ORDER BY {hav_tp} ASC, p.url ASC
                        ) AS rk
                 FROM rk_t t, {pages_rel} p
-                WHERE p.lat IS NOT NULL AND {ph} <> {th}
+                WHERE {geo.valid_point_sql('p.lat', 'p.lon')} AND {ph} <> {th}
             ) WHERE rk = {k}
         )
         SELECT q.query_id AS query_id, t.url AS url,
@@ -1071,5 +1062,6 @@ def reverse_knn_sql(
         FROM rk_t t
         LEFT JOIN rk_r r ON t.url = r.url
         CROSS JOIN {queries_rel} q
-        WHERE r.radius_km IS NULL OR ROUND({hav_tq}, 6) <= r.radius_km
+        WHERE {geo.valid_point_sql('q.lat', 'q.lon')}
+          AND (r.radius_km IS NULL OR ROUND({hav_tq}, 6) <= r.radius_km)
     """

@@ -107,7 +107,7 @@ def point_in_polygon(pages_geo: DataFrame, edges: DataFrame, res: int = 6) -> Da
     and the page scan never shuffles. A polygon set whose full cover is too
     large to broadcast goes through :func:`point_in_polygon_compact`."""
     pages_cells = (
-        pages_geo.filter(F.col("lat").isNotNull())
+        geo.located(pages_geo)
         .select("url", "lat", "lon")
         .withColumn("cell", geo.encode_cell(F.col("lat"), F.col("lon"), res))
     )
@@ -214,7 +214,7 @@ def point_in_polygon_compact(
     magnitude on large polygons.
     """
     pages_cells = (
-        pages_geo.filter(F.col("lat").isNotNull())
+        geo.located(pages_geo)
         .select("url", "lat", "lon")
         .select(
             "url", "lat", "lon",
@@ -239,7 +239,7 @@ def point_in_polygon_sql(pages_rel: str, edges_rel: str) -> str:
                                           / (e.lat2 - e.lat1) + e.lon1)
                             THEN 1 ELSE 0 END) AS crossings
             FROM {pages_rel} p, {edges_rel} e
-            WHERE p.lat IS NOT NULL
+            WHERE {geo.valid_point_sql('p.lat', 'p.lon')}
             GROUP BY e.poly_id, p.url
         ) t
         WHERE crossings % 2 = 1
@@ -273,7 +273,7 @@ def zonal_stats(pages_geo: DataFrame, edges: DataFrame, res: int = 6) -> DataFra
     (bigint), so the DuckDB oracle matches bit-for-bit.
     """
     inside = point_in_polygon(pages_geo, edges, res)
-    attrs = pages_geo.filter(F.col("lat").isNotNull()).select(
+    attrs = geo.located(pages_geo).select(
         "url",
         F.regexp_extract(F.col("url"), r"^https?://([^/]+)", 1).alias("_domain"),
         "lang",
@@ -391,7 +391,7 @@ def point_outside_polygons(pages_geo: DataFrame, edges: DataFrame, res: int = 6)
     the pages side never shuffles more than the pip join itself does."""
     inside = point_in_polygon(pages_geo, edges, res=res).select("url")
     return (
-        pages_geo.filter(F.col("lat").isNotNull())
+        geo.located(pages_geo)
         .select("url")
         .join(inside, "url", "left_anti")
     )
@@ -401,7 +401,7 @@ def point_outside_polygons_sql(pages_rel: str, edges_rel: str) -> str:
     """Oracle: NOT EXISTS over the brute-force ray-cast pairs."""
     return f"""
         SELECT p.url FROM {pages_rel} p
-        WHERE p.lat IS NOT NULL AND NOT EXISTS (
+        WHERE {geo.valid_point_sql('p.lat', 'p.lon')} AND NOT EXISTS (
             SELECT 1 FROM ({point_in_polygon_sql(pages_rel, edges_rel)}) i
             WHERE i.url = p.url
         )

@@ -10,13 +10,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from countrymaam_spark.functions import geo
+from countrymaam_spark.operators.knn import merge_counts
 
 # every entry point and its oracle drop pages without a usable coordinate
 _VALID_SQL = geo.valid_point_sql("lat", "lon")
-
-
-def _valid() -> Column:
-    return geo.valid_point(F.col("lat"), F.col("lon"))
 
 
 def assign_tiles(pages_geo: DataFrame, zooms: list[int]) -> DataFrame:
@@ -32,7 +29,7 @@ def assign_tiles(pages_geo: DataFrame, zooms: list[int]) -> DataFrame:
         for z, (xt, yt) in ((z, _tile_cols(z)) for z in zooms)
     ]
     return (
-        pages_geo.filter(_valid())
+        geo.located(pages_geo)
         .select("url", F.explode(F.array(*structs)).alias("t"))
         .select("url", "t.z", "t.xt", "t.yt")
     )
@@ -70,7 +67,7 @@ def tile_counts(pages_geo: DataFrame, zooms: list[int]) -> DataFrame:
         xt, yt = _tile_cols(z)
         keys += [xt.alias(f"_x{z}"), yt.alias(f"_y{z}")]
     fine = (
-        pages_geo.filter(_valid())
+        geo.located(pages_geo)
         .select(*keys)
         .groupBy(*[f"_x{z}" for z in zooms], *[f"_y{z}" for z in zooms])
         .agg(F.count("*").alias("_n"))
@@ -180,7 +177,7 @@ def quadkey_counts(pages_geo: DataFrame, z: int) -> DataFrame:
     """
     xt, yt = _tile_cols(z)
     return (
-        pages_geo.filter(_valid())
+        geo.located(pages_geo)
         .select(geo.quadkey(xt, yt, z).alias("quadkey"))
         .groupBy("quadkey")
         .agg(F.count("*").alias("n_pages"))
@@ -233,7 +230,7 @@ def viewport_join(pages_geo: DataFrame, viewports: DataFrame, res: int = 6) -> D
         )
     )
     pages_cells = (
-        pages_geo.filter(_valid())
+        geo.located(pages_geo)
         .select("url", "lat", "lon")
         .withColumn("cell", geo.encode_cell(F.col("lat"), F.col("lon"), res))
     )
@@ -268,7 +265,7 @@ def tile_domains(pages_geo: DataFrame, z: int) -> DataFrame:
     xt, yt = _tile_cols(z)
     dom = F.regexp_extract(F.col("url"), r"^https?://([^/]+)", 1)
     return (
-        pages_geo.filter(_valid())
+        geo.located(pages_geo)
         .select(xt.alias("xt"), yt.alias("yt"), dom.alias("domain"))
         .groupBy("xt", "yt")
         .agg(F.countDistinct("domain").alias("n_domains"))
@@ -303,7 +300,7 @@ def tile_top_pages(pages: DataFrame, z: int, k: int = 3) -> DataFrame:
 
     xt, yt = _tile_cols(z)
     ranked = (
-        pages.filter(_valid())
+        geo.located(pages)
         .select(
             xt.alias("xt"), yt.alias("yt"), "url",
             F.length("text").alias("_len"),
@@ -400,7 +397,7 @@ def tile_terms(pages: DataFrame, z: int, k: int = 5) -> DataFrame:
                 )
 
     counts = (
-        pages.filter(_valid())
+        geo.located(pages)
         .select(xt.alias("xt"), yt.alias("yt"), F.lower(F.col("text")).alias("lt"))
         .mapInArrow(tok_count, "xt long, yt long, token string, pcnt long")
         .groupBy("xt", "yt", "token")
@@ -459,14 +456,4 @@ def update_quadkey_counts(
     zooms keep rolling up from this table by quadkey prefix, so ONE
     maintained table serves every zoom level.
     """
-    delta = quadkey_counts(new_pages_geo, z)
-    return (
-        counts_old.withColumnRenamed("n_pages", "_a")
-        .join(delta.withColumnRenamed("n_pages", "_b"), "quadkey", "full_outer")
-        .select(
-            "quadkey",
-            (
-                F.coalesce(F.col("_a"), F.lit(0)) + F.coalesce(F.col("_b"), F.lit(0))
-            ).alias("n_pages"),
-        )
-    )
+    return merge_counts(counts_old, quadkey_counts(new_pages_geo, z), ["quadkey"], "n_pages")

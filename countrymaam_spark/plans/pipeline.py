@@ -15,6 +15,9 @@ from countrymaam_spark.operators import index_build
 from countrymaam_spark.operators.geotag import extract_geo
 from countrymaam_spark.plans.checkpoint import Manifest, rows_and_hash, run_stage
 
+# rows per columnar read batch of the tree-blob table (see load_trees)
+TREE_READ_BATCH_ROWS = 16
+
 
 def build_index_pipeline(
     spark: SparkSession,
@@ -522,7 +525,7 @@ def build_cell_pipeline(
     )
 
     def _corpus() -> DataFrame:
-        base = pages_geo.filter(F.col("lat").isNotNull()).select(
+        base = geo.located(pages_geo).select(
             "url", "lat", "lon", cell.alias("cell")
         )
         if partition_parent_res is None:
@@ -707,16 +710,16 @@ def load_graph_edges(spark: SparkSession, out_dir: str) -> DataFrame:
 
 
 @contextmanager
-def load_trees(spark: SparkSession, out_dir: str, batch_size: int = 16):
+def load_trees(spark: SparkSession, out_dir: str):
     """Context-managed blob-table reader.
 
     Blob rows are MB-sized: the default 4096-row columnar read batch would
-    materialize GBs per read task, so the scan needs a small
-    ``columnarReaderBatchSize``. That knob is session-wide (Spark has no
-    per-relation override), so this helper SCOPES it: set on enter, restored
-    on exit — consume (execute) the yielded DataFrame inside the ``with``
-    block. A bare setter here would silently degrade every later parquet
-    read in the session.
+    materialize GBs per read task, so the scan reads
+    ``TREE_READ_BATCH_ROWS`` rows per batch (``columnarReaderBatchSize``).
+    That knob is session-wide (Spark has no per-relation override), so this
+    helper SCOPES it: set on enter, restored on exit — consume (execute)
+    the yielded DataFrame inside the ``with`` block. A bare setter here
+    would silently degrade every later parquet read in the session.
 
     The scan takes the blob writer's schema (``index_build.TREE_SCHEMA``)
     instead of inferring it from the files, so opening the table starts no
@@ -724,7 +727,7 @@ def load_trees(spark: SparkSession, out_dir: str, batch_size: int = 16):
     """
     key = "spark.sql.parquet.columnarReaderBatchSize"
     prev = spark.conf.get(key, None)
-    spark.conf.set(key, str(batch_size))
+    spark.conf.set(key, str(TREE_READ_BATCH_ROWS))
     try:
         yield spark.read.schema(index_build.TREE_SCHEMA).parquet(os.path.join(out_dir, "trees"))
     finally:

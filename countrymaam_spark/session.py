@@ -3,7 +3,7 @@
 Defaults are tuned for correctness-at-scale: AQE on (skew-join splitting,
 partition coalescing), Arrow enabled for the vectorized-UDF paths the
 input_hint mandates, and an explicit shuffle-partition count sized by the
-caller (tests use a small count; bench uses the core count).
+caller (tests use a small count).
 
 ``spark.driver.memory`` caps the driver heap. The heap starts at half the
 cap, committed and pre-touched, and G1 grows it past that only when its

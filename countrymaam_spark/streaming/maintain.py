@@ -37,7 +37,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from countrymaam_spark.functions import geo
 from countrymaam_spark.operators import knn as K
 
 
@@ -78,21 +77,7 @@ def maintain_cell_lut_stream(
     page into its <=5 (lv, ancestor-cell) contributions, count them in a
     streaming UPDATE-mode aggregation (exact across replays via the state
     store), and SET-upsert the changed rows into the ``cell_lut`` snapshot."""
-    levels = K._plan_levels(res)
-    lv_rows = geo_stream.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(lv).alias("lv"),
-                        geo.cell_parent(F.col("cell"), lv, res).alias("cell"),
-                    )
-                    for lv in levels
-                ]
-            )
-        ).alias("lc")
-    ).select(F.col("lc.lv").alias("lv"), F.col("lc.cell").alias("cell"))
-    counts = lv_rows.groupBy("lv", "cell").agg(F.count("*").alias("cnt"))
+    counts = K.lut_rows(geo_stream, res).groupBy("lv", "cell").agg(F.count("*").alias("cnt"))
     lut_path = os.path.join(out_dir, "cell_lut")
 
     def _upsert_lut(batch_df: DataFrame, batch_id: int) -> None:

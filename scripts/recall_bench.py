@@ -29,7 +29,7 @@ from countrymaam_spark.operators.knn import flat_knn, reverse_knn  # noqa: E402
 from countrymaam_spark.session import get_spark  # noqa: E402
 from countrymaam_spark.sources import pages as PG  # noqa: E402
 
-REPEATS = int(os.environ.get("RECALL_REPEATS", "2"))
+REPEATS = 2
 
 
 def timed(fn):
@@ -66,12 +66,11 @@ def sweep(title, exact, n_q, rows):
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(master=f"local[{cpus}]", shuffle_partitions=int(cpus))
+    spark = get_spark(shuffle_partitions=os.cpu_count())
     md = [
         "# RECALL — recall@10 vs budget (generated by scripts/recall_bench.py)",
         "",
-        f"Input: `{sf_dir}`, local[{cpus}], serving-only timings "
+        f"Input: `{sf_dir}`, {spark.sparkContext.master}, serving-only timings "
         f"(state built once per family), min of {REPEATS} warmed runs.",
         "",
     ]

@@ -158,6 +158,38 @@ def test_knn_null_coordinate_queries_get_no_rows(spark, tmp_path):
     assert sorted((qid, rk, u) for qid, rk, u, _ in oracle) == want
 
 
+def test_knn_nan_coordinate_pages_are_not_neighbours(spark, tmp_path):
+    """A page with a NaN lat or lon has no location: at k larger than the
+    valid corpus, flat_knn, cell_knn, the full-coverage knn_tree and the
+    DuckDB oracle return only the valid pages. Unfiltered, haversine's
+    ``least(a, 1)`` would put a NaN page 20015.114442 km from every
+    query and rank it as a neighbour."""
+    import pandas as pd
+
+    nan = float("nan")
+    prows = [("a", 10.0, 20.0), ("b", -45.0, 100.0), ("nan_lat", nan, 20.0), ("nan_lon", 10.0, nan)]
+    corpus = spark.createDataFrame(prows, "url string, lat double, lon double")
+    qrows = [(0, 10.5, 20.5), (1, 50.0, -30.0)]
+    q = spark.createDataFrame(qrows, "query_id long, lat double, lon double")
+    want = _key(flat_knn(corpus.filter("url IN ('a', 'b')"), q, k=4).collect())
+    assert {(qid, u) for qid, _, u in want} == {(i, u) for i in (0, 1) for u in ("a", "b")}
+
+    assert _key(flat_knn(corpus, q, k=4).collect()) == want
+    assert _key(cell_knn(corpus, q, k=4, res=6).collect()) == want
+    trees = index_build.build_tree_blobs(
+        index_build.salt_hot_cells(index_build.encode_pages(corpus, res=7, parent_res=4))
+    )
+    got_tree = index_build.knn_tree(trees, q, k=4, search_k=1 << 30, ring=None)
+    assert _key(got_tree.collect()) == want
+
+    pages_p = str(tmp_path / "pages.parquet")
+    queries_p = str(tmp_path / "queries.parquet")
+    pd.DataFrame(prows, columns=["url", "lat", "lon"]).to_parquet(pages_p)
+    pd.DataFrame(qrows, columns=["query_id", "lat", "lon"]).to_parquet(queries_p)
+    oracle = duckdb.sql(flat_knn_sql(f"'{pages_p}'", f"'{queries_p}'", k=4)).fetchall()
+    assert sorted((qid, rk, u) for qid, rk, u, _ in oracle) == want
+
+
 def test_flat_knn_plan_shape(spark, geo_small, queries_small):
     """Physical-plan regression: the corpus pass must be a broadcast of the
     QUERY side (never an exchange of the pages scan) and the top-k must use

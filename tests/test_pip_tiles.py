@@ -336,12 +336,15 @@ def _ring(pid, corners):
     return [(pid, *corners[j], *corners[(j + 1) % len(corners)]) for j in range(len(corners))]
 
 
-@pytest.mark.parametrize("op", ["point_in_polygon", "point_in_polygon_compact"])
+@pytest.mark.parametrize(
+    "op", ["point_in_polygon", "point_in_polygon_compact", "point_outside_polygons"]
+)
 def test_pip_edge_cases_match_oracle(spark, op):
     """Boundary and degenerate inputs agree with the brute-force oracle:
     points on a vertex, a horizontal edge and a vertical edge (the half-open
     rule), NULL and NaN coordinates, polygons whose bbox reaches the +-180 /
-    +-90 grid clamp, and an empty edge table."""
+    +-90 grid clamp, and an empty edge table. A NULL or NaN page is in no
+    polygon and outside none: it has no location."""
     import pyarrow as pa
 
     from countrymaam_spark.operators import pip
@@ -381,12 +384,19 @@ def test_pip_edge_cases_match_oracle(spark, op):
         con = duckdb.connect()
         con.register("pages", pages_tbl)
         con.register("edges", edges_tbl)
-        want = set(con.execute(point_in_polygon_sql("pages", "edges")).fetchall())
+        outside = op == "point_outside_polygons"
+        oracle = pip.point_outside_polygons_sql if outside else point_in_polygon_sql
+        want = set(con.execute(oracle("pages", "edges")).fetchall())
         con.close()
-        got = [(r["poly_id"], r["url"]) for r in run(pages_df, edges_df, res=6).collect()]
+        got = [tuple(r) for r in run(pages_df, edges_df, res=6).collect()]
         assert len(got) == len(set(got))
         assert set(got) == want
-        if rows:
+        if outside:
+            # u10-u14 are the NULL/NaN pages; u9 lies outside every polygon
+            located = {(u,) for i, (u, _, _) in enumerate(pages) if not 10 <= i <= 14}
+            assert ("u9",) in want and want <= located
+            assert (want == located) == (not rows)
+        elif rows:
             # the interior and clamp-reaching points are found
             assert {(1, "u8"), (2, "u15"), (2, "u16"), (3, "u19"), (3, "u20")} <= want
 
